@@ -119,11 +119,11 @@ def connected_components(
     # jobs over near-empty partitions), not data. Collapsing a small edge
     # list to one partition makes every iteration a 1-task job chain
     # (measured ~4s → ~1s on a 256-edge graph at sf0.1); big graphs keep
-    # full parallelism. The count is free — the checkpoint above already
-    # materialized the edges.
+    # full parallelism. The count materializes the persisted edges, so
+    # the loop below reads them from the cache.
     n_edges = edges.count()
     if n_edges <= DRIVER_UNION_FIND_EDGES:
-        # Solve on the driver: the edge list is checkpoint-materialized and
+        # Solve on the driver: the edge list is persisted and
         # bounded, so this collect is a constant-size transfer (same bound
         # the coalesce ladder below uses) and replaces O(log d) rounds of
         # ~5 jobs each with one in-memory pass. Output labeling is

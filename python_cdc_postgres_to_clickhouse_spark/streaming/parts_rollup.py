@@ -1,44 +1,33 @@
 """Parts-based rollup sink: exactly-once additive aggregation, no txn format.
 
-``rollup_sink.HourlyRollupSink`` merges each micro-batch into its rollup
-state in place; because an additive merge is not idempotent, a crash between
-the state write and its marker leaves an at-least-once residual (documented
-there). This sink closes that window with the MergeTree parts model the
-provisioned destination actually uses (reference docker-compose.yml:155-166):
+An additive merge is not idempotent, so merging a micro-batch into rollup
+state in place cannot survive a replay without a marker, and a crash
+between the state write and the marker double-counts. This sink keeps the
+MergeTree parts model the provisioned destination actually uses (reference
+docker-compose.yml:155-166), through the shared ``parts.PartStore``:
 
-- **Insert = part.** Batch N writes its partial aggregate to
-  ``parts/batch=N/`` — never merging in place. Spark's replay contract makes
-  batch N's content deterministic (checkpointed offsets ⇒ same rows), so a
-  replayed batch overwrites the SAME part with the SAME bytes: idempotent
-  by construction, no marker, no residual window.
+- **Insert = part.** Batch N publishes its partial aggregate once as
+  ``parts/batch=N/``, never merging in place; a replayed N is skipped.
 - **SELECT = merge at read.** ``serve()`` unions base + live parts and sums
   — ClickHouse's AggregatingMergeTree read semantics. Cost is O(live
   parts), bounded by compaction.
-- **Background merge = compaction.** ``compact()`` folds parts into a NEW
-  base version and commits it with one atomic manifest rename; old
-  versions and folded parts are garbage, removed best-effort afterwards.
-  The manifest records ``(base_version, watermark)``; a replayed batch at
-  or below the watermark is skipped (its effect is already in base), which
-  keeps compaction and replay commutative. Every crash point leaves the
-  manifest naming a fully-written base, so there is no torn-state window
-  anywhere in the protocol.
+- **Background merge = compaction.** ``compact()`` folds parts into a new
+  base version committed by one atomic manifest replace; the crash-safety
+  argument is the store's.
 
 At 100 TB: each part is a few-KB-to-MB partial aggregate (one row per
 (bucket, dims) the batch touched), the stream never rewrites history, and
 compaction is a bounded background job — the same write-amplification
-profile as a MergeTree insert path. The manifest is a one-line file: this
-is the minimal transactional log a real deployment would get from
-Delta/Iceberg, reimplemented format-free.
+profile as a MergeTree insert path.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from .parts import PartStore, start_foreach_batch
 
 _N_T = "bigint"
 _SUM_T = "decimal(38,6)"
@@ -51,10 +40,7 @@ class PartedRollupSink:
     def __init__(self, spark: SparkSession, rollup_dir: str):
         self.spark = spark
         self.rollup_dir = rollup_dir
-        self.parts_dir = os.path.join(rollup_dir, "parts")
-        self._manifest_path = os.path.join(rollup_dir, "MANIFEST")
-
-    # -- partials ---------------------------------------------------------
+        self.store = PartStore(rollup_dir)
 
     @staticmethod
     def _partials(df: DataFrame) -> DataFrame:
@@ -71,92 +57,32 @@ class PartedRollupSink:
             )
         )
 
-    # -- manifest ---------------------------------------------------------
-
-    def _manifest(self) -> tuple[int, int]:
-        """(base_version, watermark); (-1, -1) before the first compaction.
-        Parts with batch_id ≤ watermark are folded into base/v=version."""
-        try:
-            with open(self._manifest_path) as fh:
-                v, wm = fh.read().split()
-                return int(v), int(wm)
-        except FileNotFoundError:
-            return -1, -1
-
-    def _base_dir(self, version: int) -> str:
-        return os.path.join(self.rollup_dir, f"base_v{version}")
-
-    def _part_ids(self) -> list[int]:
-        if not os.path.isdir(self.parts_dir):
-            return []
-        return sorted(
-            int(name.split("=", 1)[1])
-            for name in os.listdir(self.parts_dir)
-            if name.startswith("batch=")
-        )
-
-    def _live_part_ids(self) -> list[int]:
-        _, wm = self._manifest()
-        return [i for i in self._part_ids() if i > wm]
-
-    # -- batch processing -------------------------------------------------
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        _, wm = self._manifest()
-        if batch_id <= wm:
-            # Effect already folded into base by compaction — a replayed
-            # write here would double-count at serve time.
-            return
-        part = os.path.join(self.parts_dir, f"batch={batch_id}")
-        # Deterministic content + fixed path ⇒ replay is a byte-identical
-        # overwrite. mode=overwrite also heals a torn part from a crash
-        # mid-write (the part is rewritten whole before the stream commits
-        # batch N's offsets).
-        self._partials(batch_df).coalesce(1).write.mode("overwrite").parquet(part)
-
-    def attach(self, events: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            events.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
-
-    # -- read + compaction ------------------------------------------------
-
-    def _merged(self, frames: list[DataFrame]) -> DataFrame:
-        df = frames[0]
-        for other in frames[1:]:
-            df = df.unionByName(other)
+    @staticmethod
+    def _merged(df: DataFrame) -> DataFrame:
         return df.groupBy("bucket", "event_type").agg(
             F.sum("n_events").cast(_N_T).alias("n_events"),
             F.sum("sum_value").cast(_SUM_T).alias("sum_value"),
         )
 
-    def _frames(self, part_ids: list[int]) -> list[DataFrame]:
-        version, _ = self._manifest()
-        frames = []
-        if version >= 0:
-            frames.append(self.spark.read.parquet(self._base_dir(version)))
-        if part_ids:
-            frames.append(
-                self.spark.read.parquet(
-                    *[os.path.join(self.parts_dir, f"batch={i}") for i in part_ids]
-                )
-            )
-        return frames
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self.store.applied(batch_id):
+            return
+        self.store.publish(
+            batch_id, self._partials(batch_df).coalesce(1).write.parquet
+        )
+
+    def attach(self, events: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
+        return start_foreach_batch(
+            events, self.process_batch, checkpoint_dir, **trigger_kwargs
+        )
 
     def serve(self) -> DataFrame | None:
         """Merge-at-read: base ⊎ live parts, summed — AggregatingMergeTree's
         SELECT semantics. Derived metrics from the partials."""
-        frames = self._frames(self._live_part_ids())
-        if not frames:
+        df = self.store.read(self.spark)
+        if df is None:
             return None
-        r = self._merged(frames)
-        return r.select(
+        return self._merged(df).select(
             "bucket",
             "event_type",
             "n_events",
@@ -167,43 +93,11 @@ class PartedRollupSink:
         )
 
     def compact(self, through_batch_id: int | None = None) -> None:
-        """Fold live parts ≤ ``through_batch_id`` (default: all) into a new
-        base version, commit it with one atomic manifest replace, then
-        garbage-collect. Crash-safe at every point:
-
-        - during the new base write: manifest still names the old version;
-          serve is unaffected; re-running compact overwrites the half-built
-          directory from the SAME inputs (old base + same parts).
-        - after the manifest commit: serve reads the new version; the old
-          base and folded parts are ignored garbage until removed (either
-          by this run's cleanup or the next compact's sweep).
-        """
-        version, wm = self._manifest()
-        ids = [i for i in self._part_ids() if i > wm]
-        if through_batch_id is not None:
-            ids = [i for i in ids if i <= through_batch_id]
-        if not ids:
-            self._gc(version, wm)
-            return
-        merged = self._merged(self._frames(ids))
-        new_version = version + 1
-        merged.coalesce(1).write.mode("overwrite").parquet(self._base_dir(new_version))
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"{new_version} {max(ids)}")
-        os.replace(tmp, self._manifest_path)
-        self._gc(new_version, max(ids))
-
-    def _gc(self, live_version: int, watermark: int) -> None:
-        """Remove folded parts and superseded base versions (best-effort —
-        anything missed is swept by the next compact)."""
-        if not os.path.isdir(self.rollup_dir):
-            return
-        for i in self._part_ids():
-            if i <= watermark:
-                shutil.rmtree(
-                    os.path.join(self.parts_dir, f"batch={i}"), ignore_errors=True
-                )
-        for name in os.listdir(self.rollup_dir):
-            if name.startswith("base_v") and name != f"base_v{live_version}":
-                shutil.rmtree(os.path.join(self.rollup_dir, name), ignore_errors=True)
+        """Fold live parts <= ``through_batch_id`` (default: all) into a new
+        base version."""
+        self.store.compact(
+            lambda ids, base: self._merged(self.store.read(self.spark, ids))
+            .coalesce(1)
+            .write.parquet(base),
+            through_batch_id,
+        )

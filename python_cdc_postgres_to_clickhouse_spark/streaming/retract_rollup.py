@@ -1,6 +1,6 @@
 """Retractable rollup sink: incremental aggregates under updates & deletes.
 
-``rollup_sink.HourlyRollupSink`` maintains additive partials over an
+``parts_rollup.PartedRollupSink`` maintains additive partials over an
 APPEND-ONLY event stream. A CDC changelog is not append-only: updates move
 rows between groups and change metric values, deletes retract them. This
 sink maintains
@@ -22,34 +22,33 @@ rollup correct under everything the at-least-once transport throws at it:
 - update-after-delete resurrection, group-moving updates, delete-last:
   all are just transitions, retract old + assert new.
 
-Write ordering (crash safety): rollup delta (guarded by a per-batch
-marker) is committed BEFORE the key-state overwrite. Replay after a crash
-at any point re-runs the batch: the marker makes the delta a no-op, the
-state merge is idempotent (latest-by-key). Deriving the delta the other
-way round — state first, delta on replay — would compute old = new and
-lose the batch's effect forever. The residual window (crash between the
-rollup parquet write and its marker) remains at-least-once, the same
-honest bound as rollup_sink.py; closing it needs a transactional format.
+Exactly-once: batch N's delta is published once as delta part N of a
+``parts.PartStore`` BEFORE the key-state overwrite. A replay of N finds the
+part published (``applied``), skips the delta, and re-runs the idempotent
+(latest-by-key) state merge. A crash before the part's rename leaves no
+part and the state untouched, so the replay derives the same delta. The
+delta is never derived after the state write — that would compute
+old = new and lose the batch's effect. ``serve()`` merges base + live delta
+parts at read time; ``compact()`` folds them into a new base.
 
 Scale (100 TB): per batch the sink reads only the state buckets the batch
-touches, semi-joins to the batch's keys, and touches only the rollup
-partitions whose groups changed. Rollup state is one row per live group —
-independent of changelog length.
+touches and semi-joins to the batch's keys; the delta part holds one row
+per group the batch changed, and compaction keeps the base at one row per
+live group — independent of changelog length.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from .parts import PartStore, start_foreach_batch
 from .upsert_sink import ParquetUpsertSink
 
 # Fixed partial types: decimal widths must not drift across batches or the
-# rollup partitions stop reading together (same pitfall as rollup_sink.py).
+# delta parts stop reading together.
 _N_T = "bigint"
 _SUM_T = "decimal(38,0)"
 
@@ -71,14 +70,13 @@ class RetractRollupSink:
         keys: tuple[str, ...] = ("id",),
         order_by: tuple[str, ...] = ("source_lsn", "kafka_offset"),
         n_buckets: int = 16,
-        n_rollup_buckets: int = 8,
     ):
         self.spark = spark
         self.rollup_dir = rollup_dir
         self.group_expr = group_expr
         self.metric_expr = metric_expr
         self.keys = list(keys)
-        self.n_rollup_buckets = n_rollup_buckets
+        self.store = PartStore(rollup_dir)
         self._state = ParquetUpsertSink(
             spark, state_dir, keys=keys, order_by=order_by, n_buckets=n_buckets
         )
@@ -95,8 +93,12 @@ class RetractRollupSink:
             .alias("sum_metric"),
         )
 
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.rollup_dir, "_applied", f"batch-{batch_id}")
+    @staticmethod
+    def _merged(df: DataFrame) -> DataFrame:
+        return df.groupBy("grp").agg(
+            F.sum("n_rows").cast(_N_T).alias("n_rows"),
+            F.sum("sum_metric").cast(_SUM_T).alias("sum_metric"),
+        )
 
     # -- batch processing -------------------------------------------------
 
@@ -122,16 +124,11 @@ class RetractRollupSink:
             merged, keys=self.keys, order_by=self._state.order_by, drop_deletes=False
         ).localCheckpoint(eager=True)
 
-        if not os.path.exists(self._marker(batch_id)):
-            new_contrib = self._contrib(
-                new_state.join(affected, self.keys, "left_semi"), +1
-            )
-            delta = new_contrib
+        if not self.store.applied(batch_id):
+            delta = self._contrib(new_state.join(affected, self.keys, "left_semi"), +1)
             if old_rows is not None:
-                delta = new_contrib.unionByName(self._contrib(old_rows, -1))
-            self._merge_rollup(delta)
-            os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-            open(self._marker(batch_id), "w").close()
+                delta = delta.unionByName(self._contrib(old_rows, -1))
+            self.store.publish(batch_id, self._merged(delta).coalesce(1).write.parquet)
 
         (
             new_state.write.mode("overwrite")
@@ -140,60 +137,34 @@ class RetractRollupSink:
             .parquet(self._state.state_dir)
         )
 
-    def _merge_rollup(self, delta: DataFrame) -> None:
-        delta = delta.withColumn(
-            "rbucket", F.pmod(F.hash("grp"), F.lit(self.n_rollup_buckets))
-        )
-        rtouched = [r["rbucket"] for r in delta.select("rbucket").distinct().collect()]
-        if not rtouched:
-            return
-        merged = delta
-        if os.path.isdir(self.rollup_dir) and any(
-            name.startswith("rbucket=") for name in os.listdir(self.rollup_dir)
-        ):
-            existing = self.spark.read.parquet(self.rollup_dir).filter(
-                F.col("rbucket").isin(rtouched)
-            )
-            merged = existing.unionByName(delta)
-        merged = (
-            merged.groupBy("rbucket", "grp")
-            .agg(
-                F.sum("n_rows").cast(_N_T).alias("n_rows"),
-                F.sum("sum_metric").cast(_SUM_T).alias("sum_metric"),
-            )
-            .localCheckpoint(eager=True)  # materialize before overwriting source
-        )
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("rbucket")
-            .parquet(self.rollup_dir)
-        )
-
     # -- API --------------------------------------------------------------
 
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            changes.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
+        return start_foreach_batch(
+            changes, self.process_batch, checkpoint_dir, **trigger_kwargs
         )
 
     def serve(self) -> DataFrame | None:
-        """Live per-group aggregates; groups whose rows all retracted away
-        net to zero and are dropped here."""
-        if not os.path.isdir(self.rollup_dir) or not any(
-            name.startswith("rbucket=") for name in os.listdir(self.rollup_dir)
-        ):
+        """Live per-group aggregates: base ⊎ live delta parts, summed at
+        read time; groups whose rows all retracted away net to zero and are
+        dropped here."""
+        df = self.store.read(self.spark)
+        if df is None:
             return None
-        r = self.spark.read.parquet(self.rollup_dir)
-        return r.filter(F.col("n_rows") > 0).select("grp", "n_rows", "sum_metric")
+        return self._merged(df).filter(F.col("n_rows") > 0)
+
+    def compact(self, through_batch_id: int | None = None) -> None:
+        """Fold live delta parts <= ``through_batch_id`` (default: all) into
+        a new base of one row per live group."""
+        self.store.compact(
+            lambda ids, base: self._merged(self.store.read(self.spark, ids))
+            .filter(F.col("n_rows") != 0)
+            .coalesce(1)
+            .write.parquet(base),
+            through_batch_id,
+        )
 
     def current_state(self) -> DataFrame | None:
         return self._state.current_state()

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.cdc import OP_DELETE
+from .parts import start_foreach_batch
 
 
 class Scd2HistorySink:
@@ -132,14 +133,8 @@ class Scd2HistorySink:
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            changes.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
+        return start_foreach_batch(
+            changes, self.process_batch, checkpoint_dir, **trigger_kwargs
         )
 
     # -- serving reads -----------------------------------------------------
@@ -271,14 +266,8 @@ class Scd2HistorySink:
                 )
             enriched.write.mode("append").parquet(out_dir)
 
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            facts.writeStream.foreachBatch(_enrich)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(**trigger_kwargs)
-            .start()
+        return start_foreach_batch(
+            facts, _enrich, checkpoint_dir, **trigger_kwargs
         )
 
     # -- retention ---------------------------------------------------------

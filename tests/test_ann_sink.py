@@ -9,9 +9,9 @@ import pytest
 
 import hashlib
 import os
-import shutil
 
 import numpy as np
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from python_cdc_postgres_to_clickhouse_spark.operators.pq import (
@@ -105,7 +105,7 @@ def test_stream_attach_and_topk_matches_batch_operator(spark, tmp_path):
     sink = _sink(spark, tmp_path, "idx", model=model)
     q = sink.attach(stream, checkpoint_dir=str(tmp_path / "ckpt"))
     assert q.awaitTermination(120)
-    assert len(sink._part_ids()) >= 2, "expected multiple micro-batch parts"
+    assert len(sink.store.part_ids()) >= 2, "expected multiple micro-batch parts"
 
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     got = {
@@ -139,10 +139,10 @@ def test_replay_idempotent_and_watermark_skip(spark, tmp_path):
     sink.compact(through_batch_id=1)
     for i in (0, 1, 2):
         sink.process_batch(chunks[i], i)
-    assert sink._part_ids() == [2]
+    assert sink.store.part_ids() == [2]
     assert _index_set(sink) == exp
     sink.compact()
-    assert sink._part_ids() == []
+    assert sink.store.part_ids() == []
     assert _index_set(sink) == exp
 
 
@@ -212,11 +212,11 @@ def test_refresh_creates_generation_and_closes_replay_window(spark, tmp_path):
     assert new_v == 1
     # refresh folded everything: pre-refresh rows unchanged, watermark set.
     assert _index_set(sink) == pre
-    assert sink._part_ids() == []
+    assert sink.store.part_ids() == []
     # A replayed pre-refresh batch is watermark-skipped — it must NOT be
     # re-encoded under the new generation.
     sink.process_batch(chunks[0], 0)
-    assert sink._part_ids() == []
+    assert sink.store.part_ids() == []
     assert _index_set(sink) == pre
     # New batches encode under generation 1; both generations serve.
     sink.process_batch(chunks[2], 2)
@@ -261,23 +261,37 @@ def test_rebuild_resets_to_single_generation(spark, tmp_path):
     assert served.count() == _emb(spark).count()
     # Pre-rebuild batches replay as watermark-skips.
     sink.process_batch(chunks[0], 0)
-    assert sink._part_ids() == []
+    assert sink.store.part_ids() == []
 
 
-def test_torn_part_read_resilience_and_heal(spark, tmp_path):
-    """Crash between a part's codes and sample writes: serve()/sample
-    reads skip the missing leaf instead of failing; the stream's replay
-    rewrites the part whole."""
+def test_crash_between_codes_and_sample_writes(spark, tmp_path, monkeypatch):
+    """Crash between a part's codes and sample writes: both leaves are
+    staged, so no part is published — serve() and the sample read see only
+    whole parts — and the stream's replay publishes the part whole."""
     model = _model(spark)
     chunks = _chunks(_emb(spark), 3)
     sink = _sink(spark, tmp_path, "idx", model=model)
     sink.process_batch(chunks[0], 0)
-    sink.process_batch(chunks[1], 1)
-    exp = _index_set(sink)
-    # Tear batch 1's sample leaf.
-    shutil.rmtree(os.path.join(sink.parts_dir, "batch=1", "sample"))
-    assert _index_set(sink) == exp  # codes still serve
-    assert sink._current_sample() is not None  # sample read skips the tear
-    sink.process_batch(chunks[1], 1)  # replay heals
-    assert os.path.isdir(os.path.join(sink.parts_dir, "batch=1", "sample"))
-    assert _index_set(sink) == exp
+    before = _index_set(sink)
+    sample_before = {r["vec_id"] for r in sink._current_sample().collect()}
+
+    parquet = DataFrameWriter.parquet
+
+    def crash_on_sample(self, path, *args, **kwargs):
+        if os.path.basename(path) == "sample":
+            raise RuntimeError("crash between the codes and sample writes")
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash_on_sample)
+        with pytest.raises(RuntimeError):
+            sink.process_batch(chunks[1], 1)
+    assert sink.store.part_ids() == [0]
+    assert _index_set(sink) == before
+    assert {r["vec_id"] for r in sink._current_sample().collect()} == sample_before
+    sink.process_batch(chunks[1], 1)  # the stream's replay
+    assert os.path.isdir(os.path.join(sink.store.part_dir(1), "sample"))
+    clean = _sink(spark, tmp_path, "clean", model=model)
+    clean.process_batch(chunks[0], 0)
+    clean.process_batch(chunks[1], 1)
+    assert _index_set(sink) == _index_set(clean)

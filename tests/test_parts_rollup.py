@@ -1,5 +1,5 @@
-"""Parts-based rollup sink: exactly-once via deterministic part overwrite +
-atomic manifest compaction — every crash/replay interleaving converges."""
+"""Parts-based rollup sink: exactly-once via publish-once parts + atomic
+manifest compaction — every crash/replay interleaving converges."""
 
 from __future__ import annotations
 
@@ -52,7 +52,7 @@ def _chunks(events, n):
     ]
 
 
-def test_streaming_matches_batch_and_inplace_sink(spark, tmp_path):
+def test_streaming_matches_batch(spark, tmp_path):
     events = _events(spark)
     src = str(tmp_path / "ev")
     events.repartition(6).write.parquet(src)
@@ -64,12 +64,12 @@ def test_streaming_matches_batch_and_inplace_sink(spark, tmp_path):
     sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
     q = sink.attach(stream, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    assert len(sink._part_ids()) >= 2, "expected multiple micro-batch parts"
+    assert len(sink.store.part_ids()) >= 2, "expected multiple micro-batch parts"
     assert _served(sink) == _expected(events)
     # Compaction folds every part into base_v0 and serve is unchanged.
     sink.compact()
-    assert sink._part_ids() == []
-    assert sink._manifest()[0] == 0
+    assert sink.store.part_ids() == []
+    assert sink.store.manifest()[0] == 0
     assert _served(sink) == _expected(events)
 
 
@@ -81,17 +81,17 @@ def test_replay_is_idempotent_before_and_after_compaction(spark, tmp_path):
         sink.process_batch(c, i)
     exp = _expected(events)
     assert _served(sink) == exp
-    # Replay every batch (crash before ANY offset commit): byte-identical
-    # part overwrites, serve unchanged.
+    # Replay every batch (crash before ANY offset commit): every part is
+    # already published, serve unchanged.
     for i, c in enumerate(chunks):
         sink.process_batch(c, i)
     assert _served(sink) == exp
     # Compact through batch 2, then replay batches 1..3: 1 and 2 are below
-    # the watermark (skipped — already in base), 3 rewrites its live part.
+    # the watermark (skipped — already in base), 3 is already published.
     sink.compact(through_batch_id=2)
     for i in (1, 2, 3):
         sink.process_batch(chunks[i], i)
-    assert sink._part_ids() == [3]
+    assert sink.store.part_ids() == [3]
     assert _served(sink) == exp
     sink.compact()
     assert _served(sink) == exp
@@ -108,17 +108,17 @@ def test_crash_during_compaction_base_write_recovers(spark, tmp_path):
         sink.process_batch(c, i)
     exp = _expected(events)
     # Crash simulation: build the would-be base_v0 without the manifest.
-    ids = sink._part_ids()
-    merged = sink._merged(sink._frames(ids))
-    merged.coalesce(1).write.mode("overwrite").parquet(sink._base_dir(0))
+    ids = sink.store.part_ids()
+    merged = sink._merged(sink.store.read(spark, ids))
+    merged.coalesce(1).write.mode("overwrite").parquet(sink.store.base_dir(0))
     # No manifest → serve ignores the orphan base and reads the parts.
-    assert sink._manifest() == (-1, -1)
+    assert sink.store.manifest() == (-1, -1)
     assert _served(sink) == exp
-    # Recovery: compact() overwrites the half-committed version from the
-    # same inputs and commits atomically.
+    # Recovery: compact() rewrites the uncommitted version from the same
+    # inputs and commits atomically.
     sink.compact()
     assert _served(sink) == exp
-    assert sink._manifest()[1] == max(ids)
+    assert sink.store.manifest()[1] == max(ids)
 
 
 def test_crash_after_manifest_before_gc_recovers(spark, tmp_path):
@@ -134,16 +134,16 @@ def test_crash_after_manifest_before_gc_recovers(spark, tmp_path):
     # New batch, then a compaction whose GC "crashed": do the fold+commit
     # by hand, leaving the folded part and base_v0 behind.
     sink.process_batch(chunks[0], 3)
-    merged = sink._merged(sink._frames([3]))
-    merged.coalesce(1).write.mode("overwrite").parquet(sink._base_dir(1))
-    with open(sink._manifest_path, "w") as fh:
+    merged = sink._merged(sink.store.read(spark, [3]))
+    merged.coalesce(1).write.mode("overwrite").parquet(sink.store.base_dir(1))
+    with open(sink.store.manifest_path, "w") as fh:
         fh.write("1 3")
     exp2 = _served(sink)  # garbage part 3 + base_v0 must be ignored
-    assert os.path.isdir(sink._base_dir(0))  # garbage present...
-    assert 3 in sink._part_ids()
+    assert os.path.isdir(sink.store.base_dir(0))  # garbage present...
+    assert 3 in sink.store.part_ids()
     sink.compact()  # sweep
-    assert not os.path.isdir(sink._base_dir(0))
-    assert sink._part_ids() == []
+    assert not os.path.isdir(sink.store.base_dir(0))
+    assert sink.store.part_ids() == []
     assert _served(sink) == exp2
     # And the double-counting hazard really was avoided: batch 3 applied once.
     n_total = sum(n for n, _ in _served(sink).values())

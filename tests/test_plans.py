@@ -6,6 +6,7 @@ equivalent of a cluster regression.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_cdc_postgres_to_clickhouse_spark import plans as P
@@ -60,25 +61,25 @@ def test_widen_device_is_bytes_scaled(spark):
     )
 
     par = spark.sparkContext.defaultParallelism
-    df = load_tables(spark, SF_ORACLE)["lineitem"]
+    if par < 2:
+        pytest.skip("widening needs defaultParallelism >= 2")
+    # One input partition: every widening target below is >= 2, so each
+    # getNumPartitions() assertion runs.
+    df = load_tables(spark, SF_ORACLE)["lineitem"].coalesce(1)
     base_parts = df.rdd.getNumPartitions()
 
     # SCAN profile: sf0.01 lineitem (1.04 MB) is below the 2 MB floor.
     assert widen_small_scan(df, input_bytes=1_042_463, profile=WIDEN_SCAN) is df
     # sf0.1 lineitem (10.8 MB) → bytes-scaled ~10 tasks, clamped.
     widened = widen_small_scan(df, input_bytes=10_818_932, profile=WIDEN_SCAN)
-    expect = min(par, 10_818_932 // 1_000_000)
-    if expect >= 2 and base_parts < expect:
-        assert widened.rdd.getNumPartitions() == expect
+    assert widened.rdd.getNumPartitions() == min(par, 10_818_932 // 1_000_000)
 
     # COMPUTE profile: sf0.01 documents (65 KB) is below the floor — the
     # driver-scale layout must be byte-identical.
     assert widen_small_scan(df, input_bytes=65_049, profile=WIDEN_COMPUTE) is df
     # sf0.1 documents (594 KB) widens, clamped to parallelism.
     w2 = widen_small_scan(df, input_bytes=594_568, profile=WIDEN_COMPUTE)
-    expect2 = min(par, 594_568 // 8_192)
-    if base_parts < expect2:
-        assert w2.rdd.getNumPartitions() == expect2
+    assert w2.rdd.getNumPartitions() == min(par, 594_568 // 8_192)
 
     # Operator-internal call sites (no byte information): r13 behavior.
     w3 = widen_small_scan(df)

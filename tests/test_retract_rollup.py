@@ -46,7 +46,6 @@ def _mk_sink(spark, tmp_path, name):
         group_expr="length(username)",
         metric_expr="created_at_us",
         n_buckets=4,
-        n_rollup_buckets=2,
     )
 
 
@@ -88,8 +87,9 @@ def test_duplicate_redelivery_is_a_noop(spark, tmp_path):
 
 
 def test_marker_makes_batch_replay_noop(spark, tmp_path):
-    """Replaying the SAME batch id (crash between rollup commit and stream
-    checkpoint) is skipped by the marker; the state merge still runs."""
+    """Replaying the SAME batch id (crash between the delta part's publish
+    and the stream checkpoint) skips the published delta; the state merge
+    still runs."""
     fx = generate_changelog(n_keys=10, n_ops=60, seed=3)
     sink = _mk_sink(spark, tmp_path, "marker")
     sink.process_batch(_flat(spark, fx.events), 0)

@@ -203,11 +203,16 @@ def test_sample_order_expr_matches_python_md5_rank(spark):
     assert got2 == want
 
 
-def test_resolve_oracle_caches_per_sf_dir():
+def test_resolve_oracle_caches_per_sf_dir(monkeypatch, tmp_path):
     """ADVICE r11 fix pinned: lazy oracle builders receive the
     compare-time sf_dir and the resolution is cached PER sf_dir — a
-    compare at one scale factor must not poison another's baked model."""
+    compare at one scale factor must not poison another's baked model.
+    The on-disk cache tier points at a fresh directory so a re-run in the
+    same tree starts cold."""
+    from python_cdc_postgres_to_clickhouse_spark import registry
     from python_cdc_postgres_to_clickhouse_spark.registry import QuerySpec
+
+    monkeypatch.setattr(registry, "_CACHE_DIR", tmp_path)
 
     calls = []
 
