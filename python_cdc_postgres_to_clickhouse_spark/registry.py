@@ -274,118 +274,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 )
 
 
-_ROUND13_WINDOW_RECORD: tuple[str, ...] = (
-    # ROUND-13 WINDOW as consumed (kept for the rotation audit trail;
-    # CORRECTNESS_r13: 50/50 fully green — rows+schema+hash).
-    "x_pq_adc_topk",
-    "x_pq_adc_rerank",
-    "x_rfm_segments_dist",
-    "x_semantic_dedup",
-    "x_active_users_rolling",
-    "sql_ch_fill_interpolate",
-    "sub_in",
-    "sub_min_price_supplier",
-    "sub_not_exists",
-    "sub_scalar_avg",
-    "w_lag_lead",
-    "w_moving_avg",
-    "w_ntile_first_last",
-    "w_percent_rank_cume",
-    "w_range_frame",
-    "w_rank_dense",
-    "x_decontaminate",
-    "x_det_sample",
-    "x_embedding_stats",
-    "x_hash_split",
-    "x_lang_id",
-    "x_leakage_safe_split",
-    "x_ngram_counts",
-    "x_pii_scrub",
-    "x_repetition_stats",
-    "x_rolling_fingerprint",
-    "x_simhash_near_dup",
-    "x_stratified_sample",
-    "x_tfidf_topterms",
-    "x_token_packing",
-    "x_vocab_build",
-    "a_percentile_disc",
-    "c_datetime_funcs",
-    "c_explode_outer",
-    "c_struct_funcs",
-    "cdc_changes_per_key_topn",
-    "cdc_latest_by_key",
-    "cdc_op_routing",
-    "cdc_snapshot_union_changelog",
-    "j_asof_latest_event",
-    "j_star_broadcast",
-    "m_json_map",
-    "m_nation_volume",
-    "m_shipping_priority",
-    "q1_pricing_summary",
-    "s_intersect",
-    "s_union_all",
-    "s_union_distinct",
-    "sql_ch_fill_recurrence",
-    "sql_ch_max_intersections",
-)
-
-
-_ROUND12_WINDOW_RECORD: tuple[str, ...] = (
-    # ROUND-12 WINDOW as consumed (kept for the rotation audit trail;
-    # CORRECTNESS_r12: 48/48 oracle green + 2/2 rows-only ran).
-    "sql_ch_fill_multi",
-    "x_doc_rarity",
-    "x_downsample_tiers",
-    "x_dup_span_detect",
-    "x_embedding_quantize",
-    "x_ewma_trailing",
-    "x_importance_resample",
-    "x_keyword_bm25",
-    "x_lttb_downsample",
-    "x_outlier_mad",
-    "x_projection_route",
-    "x_retention_flags",
-    "x_rfm_segments",
-    "x_seasonal_profile",
-    "x_sequence_count",
-    "x_sequence_match",
-    "x_sequence_match_timed",
-    "x_window_funnel_dedup",
-    "x_window_funnel_strict",
-    "sql_ch_state_merge_rollup",
-    "x_active_users_sketch",
-    "x_pq_codes",
-    "x_semantic_dedup",
-    "x_kmeans_embed",
-    "x_lsh_cosine_topk",
-    "x_embedding_near_dup",
-    "x_ivf_cosine_topk",
-    "x_ivfpq_topk",
-    "a_argmax",
-    "a_conditional",
-    "a_count_distinct",
-    "a_cube",
-    "a_groupby_expr",
-    "a_grouping_sets",
-    "a_having",
-    "a_rollup",
-    "a_rollup_grouping",
-    "a_stats_moments",
-    "c_array_funcs",
-    "c_case_in_between",
-    "c_like_split",
-    "c_null_handling",
-    "j_anti",
-    "j_full_outer",
-    "j_left_outer",
-    "j_semi",
-    "j_theta_band",
-    "s_except",
-    "s_except_all",
-    "sql_ch_avg_state",
-)
-
-
 def all_queries() -> dict[str, QuerySpec]:
     """All registered queries, driver-priority queries first.
 

@@ -10,23 +10,28 @@ incrementally as both base tables change. This sink maintains
 under CDC change streams for A and B, without ever recomputing the full
 join:
 
-- **Base states** are latest-by-key upsert tables (the D3 semantic),
-  hash-bucketed on each side's PRIMARY key — the same protocol as
-  streaming/upsert_sink.py, tombstones and all.
+- **Base states** are latest-by-key upsert tables (the D3 semantic): one
+  ``ParquetUpsertSink`` per side, hash-bucketed on that side's PRIMARY key
+  in the shared ``buckets.BucketedState`` store (remote-safe state probe),
+  tombstones and all. A batch merges and rewrites only the buckets it
+  touches; the post-batch side the view reads is the pre-batch state's
+  untouched buckets ∪ the merged touched ones.
 - **Affected join keys** of a micro-batch = join keys carried by the new
   rows ∪ join keys the batch's primary keys pointed to BEFORE the batch
   (read from pre-batch state). The second term handles the MOVE case: an
   update that changes a row's join key must erase its pairs under the old
   key, which a new-rows-only delta would silently leave stale.
-- **View recompute** is bucket-local: only view buckets holding affected
-  join keys are rebuilt, by joining the two post-batch states semi-joined
-  down to the affected keys. Cost tracks |Δ| and the join fan-out of the
-  touched keys, never view size.
-- **Sentinel rows** guarantee every affected bucket is WRITTEN even when
+- **View recompute** is bucket-local (the view is a ``BucketedState`` on
+  the join key): only view buckets holding affected join keys are rebuilt,
+  each WHOLE — by joining the two post-batch states semi-joined down to
+  those buckets, since a rebuilt bucket also holds the pairs of unaffected
+  keys that hash to it. Cost tracks |Δ| and the join fan-out of the
+  touched buckets, never view size.
+- **Sentinel rows** guarantee every rebuilt bucket is WRITTEN even when
   its recomputed content is empty (all pairs gone): dynamic partition
   overwrite only replaces partitions present in the output, so an
   all-pairs-deleted bucket would otherwise keep serving stale rows. One
-  null-keyed sentinel per affected bucket, filtered at read — keeps the
+  null-keyed sentinel per rebuilt bucket, filtered at read — keeps the
   write a single dynamic-overwrite pass with no per-bucket driver loop.
 
 Crash/replay protocol (exactly-once effects without a txn format): the
@@ -42,8 +47,8 @@ contract as the other sinks here.
 
 Scale (100 TB): per batch, each side does one bucket-pruned state merge
 (upsert protocol) and the view rebuild reads two state tables pruned by a
-broadcast semi-join on the affected keys; the join itself shuffles only
-affected-key rows. At 4096 buckets a busy batch rewrites a few dozen
+broadcast semi-join on the rebuilt view buckets; the join itself shuffles
+only those buckets' rows. At 4096 buckets a busy batch rewrites a few dozen
 bucket files per table.
 """
 
@@ -56,8 +61,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.upsert import latest_by_key
+from .buckets import BucketedState
 from .parts import start_foreach_batch
+from .upsert_sink import ParquetUpsertSink
 
 
 class JoinViewSink:
@@ -71,96 +77,69 @@ class JoinViewSink:
         order_by: Sequence[str] = ("source_lsn", "kafka_offset"),
         n_buckets: int = 16,
     ):
-        self.spark = spark
-        self.left_dir = os.path.join(base_dir, "left")
-        self.right_dir = os.path.join(base_dir, "right")
-        self.view_dir = os.path.join(base_dir, "view")
         self.join_key = join_key
-        self.left_keys = list(left_keys)
-        self.right_keys = list(right_keys)
-        self.order_by = list(order_by)
-        self.n_buckets = n_buckets
-
-    # -- state plumbing (upsert protocol, one table per side) -------------
-
-    def _read_state(self, state_dir: str) -> DataFrame | None:
-        if not os.path.isdir(state_dir) or not any(
-            name.startswith("bucket=") for name in os.listdir(state_dir)
-        ):
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(state_dir)
-
-    def _merged_state(
-        self, state: DataFrame | None, batch: DataFrame, keys: list[str]
-    ) -> DataFrame:
-        """Post-batch latest-by-key state as an unpersisted frame
-        (tombstones retained, exactly the upsert sink's merge)."""
-        merged = (
-            state.drop("bucket").unionByName(batch, allowMissingColumns=True)
-            if state is not None
-            else batch
+        self.left = ParquetUpsertSink(
+            spark, os.path.join(base_dir, "left"), left_keys, order_by, n_buckets
         )
-        return latest_by_key(
-            merged, keys=keys, order_by=self.order_by, drop_deletes=False
+        self.right = ParquetUpsertSink(
+            spark, os.path.join(base_dir, "right"), right_keys, order_by, n_buckets
         )
-
-    def _write_state(self, state: DataFrame, state_dir: str, keys: list[str]) -> None:
-        bucketed = state.withColumn(
-            "bucket", F.pmod(F.hash(*keys), F.lit(self.n_buckets))
-        )
-        (
-            bucketed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(state_dir)
+        self.view_state = BucketedState(
+            spark, os.path.join(base_dir, "view"), [join_key], n_buckets
         )
 
     # -- the incremental maintenance step --------------------------------
 
-    def _affected_join_keys(
-        self,
-        state: DataFrame | None,
-        batch: DataFrame,
-        keys: list[str],
-    ) -> DataFrame:
-        """Join keys touched by this batch on one side: the batch rows' own
-        join keys plus the join keys its primary keys held in pre-batch
-        state (the MOVE term)."""
+    def _side(
+        self, side: ParquetUpsertSink, batch: DataFrame
+    ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
+        """One side's step: (its post-batch state, its merged touched
+        buckets to write or None, the join keys the batch affects).
+
+        The post-batch state is the pre-batch state's untouched buckets ∪
+        the merged touched buckets. The affected join keys are the batch
+        rows' own plus those its primary keys held in pre-batch state (the
+        MOVE term)."""
         jk = self.join_key
-        new_jks = batch.select(jk)
-        if state is None:
-            return new_jks
-        old_jks = state.join(
-            batch.select(*keys).distinct(), keys, "left_semi"
-        ).select(jk)
-        return new_jks.unionByName(old_jks)
+        affected = batch.select(jk)
+        state = side.store.read()
+        merged = side.merge(batch)
+        if merged is None:
+            return (batch if state is None else state), None, affected
+        touched, prior, new = merged
+        if prior is None:
+            return new, new, affected
+        old_jks = prior.join(batch.select(*side.keys).distinct(), side.keys, "left_semi")
+        post = state.filter(~F.col("bucket").isin(touched)).unionByName(
+            new, allowMissingColumns=True
+        )
+        return post, new, affected.unionByName(old_jks.select(jk))
 
     def process_batch(
         self, left_batch: DataFrame, right_batch: DataFrame, batch_id: int = 0
     ) -> None:
         jk = self.join_key
-        l_state = self._read_state(self.left_dir)
-        r_state = self._read_state(self.right_dir)
-
-        affected = (
-            self._affected_join_keys(l_state, left_batch, self.left_keys)
-            .unionByName(self._affected_join_keys(r_state, right_batch, self.right_keys))
-            .filter(F.col(jk).isNotNull())
+        l_post, l_new, l_affected = self._side(self.left, left_batch)
+        r_post, r_new, r_affected = self._side(self.right, right_batch)
+        rebuilt = (
+            self.view_state.bucket(
+                l_affected.unionByName(r_affected).filter(F.col(jk).isNotNull())
+            )
+            .select("bucket")
             .distinct()
         )
 
-        l_new = self._merged_state(l_state, left_batch, self.left_keys)
-        r_new = self._merged_state(r_state, right_batch, self.right_keys)
+        def live(post: DataFrame) -> DataFrame:
+            """Served (non-tombstone) rows of one side whose join key falls
+            in a rebuilt view bucket — every such key, affected or not:
+            the rewrite replaces the whole bucket."""
+            return (
+                self.view_state.bucket(post.drop("bucket"))
+                .filter(F.col("op") != "d")
+                .join(F.broadcast(rebuilt), "bucket", "left_semi")
+            )
 
-        # Served (non-tombstone) rows of each side, pruned to affected keys.
-        l_live = (
-            l_new.filter(F.col("op") != "d")
-            .join(F.broadcast(affected), jk, "left_semi")
-        )
-        r_live = (
-            r_new.filter(F.col("op") != "d")
-            .join(F.broadcast(affected), jk, "left_semi")
-        )
+        l_live, r_live = live(l_post), live(r_post).drop("bucket")
         overlap = set(l_live.columns) & set(r_live.columns) - {jk}
         r_sel = [F.col(jk)] + [
             F.col(c).alias(f"r_{c}" if c in overlap else c)
@@ -169,41 +148,24 @@ class JoinViewSink:
         ]
         pairs = l_live.join(r_live.select(*r_sel), jk, "inner")
 
-        # Sentinels: one null-keyed row per affected bucket so empty
+        # Sentinels: one null-keyed row per rebuilt bucket so empty
         # recomputes still overwrite their partition.
-        sentinels = (
-            affected.select(
-                F.pmod(F.hash(jk), F.lit(self.n_buckets)).alias("vbucket")
-            )
-            .distinct()
-            .withColumn("_sentinel", F.lit(True))
-        )
-        out = (
-            pairs.withColumn(
-                "vbucket", F.pmod(F.hash(jk), F.lit(self.n_buckets))
-            )
-            .withColumn("_sentinel", F.lit(False))
-            .unionByName(sentinels, allowMissingColumns=True)
+        out = pairs.withColumn("_sentinel", F.lit(False)).unionByName(
+            rebuilt.withColumn("_sentinel", F.lit(True)), allowMissingColumns=True
         )
         # VIEW first, then states (see crash/replay protocol above).
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("vbucket")
-            .parquet(self.view_dir)
-        )
-        self._write_state(l_new, self.left_dir, self.left_keys)
-        self._write_state(r_new, self.right_dir, self.right_keys)
+        self.view_state.write(out)
+        for side, new in ((self.left, l_new), (self.right, r_new)):
+            if new is not None:
+                side.store.write(new)
 
     # -- serving ----------------------------------------------------------
 
     def view(self) -> DataFrame | None:
-        if not os.path.isdir(self.view_dir) or not any(
-            name.startswith("vbucket=") for name in os.listdir(self.view_dir)
-        ):
+        df = self.view_state.read()
+        if df is None:
             return None
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.view_dir)
-        return df.filter(~F.col("_sentinel")).drop("_sentinel", "vbucket")
+        return df.filter(~F.col("_sentinel")).drop("_sentinel", "bucket")
 
     # -- streaming attachment (tagged union stream) -----------------------
 

@@ -45,6 +45,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import dedup as D
 from ..operators.textstats import portable_hash32, tokens
+from .buckets import probe
 from .parts import start_foreach_batch
 
 
@@ -122,9 +123,7 @@ class StreamingNearDupFilter:
 
     def _read(self, sub: str) -> DataFrame | None:
         path = os.path.join(self.state_dir, sub)
-        if not os.path.isdir(path) or not any(
-            n.endswith(".parquet") for n in os.listdir(path)
-        ):
+        if not probe(self.spark, path, "*.parquet"):
             return None
         return self.spark.read.parquet(path)
 

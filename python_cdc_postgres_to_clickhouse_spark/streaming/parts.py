@@ -26,8 +26,10 @@ it there. ``PartStore`` is that model over one local directory:
   garbage. Every crash point leaves a consistent view, and re-running
   rebuilds the same base from the same inputs.
 
-The store uses the local filesystem (``os``), like every stateful sink
-here; a remote directory would need a remote-safe manifest commit.
+The store uses the local filesystem (``os``); a remote directory would
+need a remote-safe manifest commit. The merge-in-place sinks
+(``buckets.BucketedState``) and ``ProjectionSink``'s markers go through the
+Hadoop FS API instead and work on remote directories.
 """
 
 from __future__ import annotations

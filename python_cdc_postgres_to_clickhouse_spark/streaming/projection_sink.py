@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.projection import Projection, build_projection
+from .buckets import hadoop_fs, probe
 from .parts import start_foreach_batch
 
 
@@ -68,23 +69,8 @@ class ProjectionSink:
         keys, measures = spec.to_operator_args()
         return cls(spark, state_dir, keys, measures, partition_key)
 
-    # -- hadoop-fs helpers (remote-safe, unlike os.path) ---------------------
-    def _fs_and_path(self, p: str):
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(p)
-        return path.getFileSystem(self.spark._jsc.hadoopConfiguration()), path
-
-    def _has_state(self) -> bool:
-        fs, path = self._fs_and_path(self.state_dir)
-        if not fs.exists(path):
-            return False
-        return any(
-            not st.getPath().getName().startswith(("_", "."))
-            for st in fs.listStatus(path)
-        )
-
     def _marker(self, batch_id: int):
-        return self._fs_and_path(f"{self.state_dir}/_applied/batch-{batch_id}")
+        return hadoop_fs(self.spark, f"{self.state_dir}/_applied/batch-{batch_id}")
 
     # -- the merge -----------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -95,7 +81,8 @@ class ProjectionSink:
         if not incoming.df.take(1):
             return
         merged = incoming
-        if self._has_state():
+        # Any entry but the hidden ones (_applied/, _SUCCESS, .crc files).
+        if probe(self.spark, self.state_dir, "[!_.]*"):
             stored = self.spark.read.parquet(self.state_dir)
             if self.partition_key is not None:
                 touched = [

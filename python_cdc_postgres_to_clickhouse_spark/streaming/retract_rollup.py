@@ -31,6 +31,10 @@ delta is never derived after the state write — that would compute
 old = new and lose the batch's effect. ``serve()`` merges base + live delta
 parts at read time; ``compact()`` folds them into a new base.
 
+The key state is a ``ParquetUpsertSink`` on the shared
+``buckets.BucketedState`` store (remote-safe state probe); the sink reuses
+its merge and only adds the delta between merge and write.
+
 Scale (100 TB): per batch the sink reads only the state buckets the batch
 touches and semi-joins to the batch's keys; the delta part holds one row
 per group the batch changed, and compaction keeps the base at one row per
@@ -43,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.upsert import latest_by_key
 from .parts import PartStore, start_foreach_batch
 from .upsert_sink import ParquetUpsertSink
 
@@ -105,37 +108,23 @@ class RetractRollupSink:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Merge one micro-batch of flat change rows (unwrap(keep_deletes=
         True) output) into rollup + key state."""
-        bucketed = self._state._bucket(batch_df)
-        touched = [r["bucket"] for r in bucketed.select("bucket").distinct().collect()]
-        if not touched:
+        merged = self._state.merge(batch_df)
+        if merged is None:
             return
-        affected = bucketed.select(*self.keys).distinct()
-        state = self._state.read_state()
-        if state is not None:
-            relevant = state.filter(F.col("bucket").isin(touched))
-            old_rows = relevant.join(affected, self.keys, "left_semi")
-            merged = relevant.unionByName(bucketed, allowMissingColumns=True)
-        else:
-            old_rows = None
-            merged = bucketed
+        _, prior, new_state = merged
         # Pin the merged state: it is read twice (rollup delta + state
         # overwrite) and the second read must not see the first write.
-        new_state = latest_by_key(
-            merged, keys=self.keys, order_by=self._state.order_by, drop_deletes=False
-        ).localCheckpoint(eager=True)
+        new_state = new_state.localCheckpoint(eager=True)
 
         if not self.store.applied(batch_id):
+            affected = batch_df.select(*self.keys).distinct()
             delta = self._contrib(new_state.join(affected, self.keys, "left_semi"), +1)
-            if old_rows is not None:
+            if prior is not None:
+                old_rows = prior.join(affected, self.keys, "left_semi")
                 delta = delta.unionByName(self._contrib(old_rows, -1))
             self.store.publish(batch_id, self._merged(delta).coalesce(1).write.parquet)
 
-        (
-            new_state.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self._state.state_dir)
-        )
+        self._state.store.write(new_state)
 
     # -- API --------------------------------------------------------------
 

@@ -8,7 +8,8 @@ user would run against the provisioned ClickHouse destination (reference
 docker-compose.yml:155-174), here native on bucketed Parquet like the
 other sinks in this package.
 
-Design (mirrors streaming/upsert_sink.py's bucket protocol):
+Design (the bucket protocol of streaming/upsert_sink.py, both on the
+shared ``buckets.BucketedState`` store and its remote-safe probe):
 
 - **State = the deduped change rows themselves**, hash-bucketed on the
   key, with the derived ``valid_to_ms`` stored alongside. Intervals are a
@@ -44,7 +45,6 @@ covering ts — both pushed to the scan.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.cdc import OP_DELETE
+from .buckets import BucketedState
 from .parts import start_foreach_batch
 
 
@@ -66,8 +67,6 @@ class Scd2HistorySink:
         op_col: str = "op",
         n_buckets: int = 16,
     ):
-        self.spark = spark
-        self.state_dir = state_dir
         self.keys = list(keys)
         # Delivery metadata (offsets) is dropped at ingest: state identity
         # is (keys, order_by) and duplicate deliveries must be EXACTLY
@@ -75,21 +74,7 @@ class Scd2HistorySink:
         self.order_by = list(order_by)
         self.time_col = time_col
         self.op_col = op_col
-        self.n_buckets = n_buckets
-
-    # -- state I/O ---------------------------------------------------------
-
-    def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.hash(*self.keys), F.lit(self.n_buckets))
-        )
-
-    def read_state(self) -> DataFrame | None:
-        if not os.path.isdir(self.state_dir) or not any(
-            name.startswith("bucket=") for name in os.listdir(self.state_dir)
-        ):
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(self.state_dir)
+        self.store = BucketedState(spark, state_dir, keys, n_buckets)
 
     def _recompute(self, rows: DataFrame) -> DataFrame:
         """Dedup by (keys, order) and re-derive validity intervals.
@@ -112,23 +97,14 @@ class Scd2HistorySink:
         drop_meta = [
             c for c in ("kafka_partition", "kafka_offset") if c in batch_df.columns
         ]
-        batch_df = self._bucket(batch_df.drop(*drop_meta))
-        touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
+        batch_df, touched, prior = self.store.touched(batch_df.drop(*drop_meta))
         if not touched:
             return
-        state = self.read_state()
-        if state is not None:
-            relevant = state.filter(F.col("bucket").isin(touched)).drop("valid_to_ms")
-            merged = relevant.unionByName(batch_df, allowMissingColumns=True)
-        else:
-            merged = batch_df
-        (
-            self._recompute(merged)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
+        if prior is not None:
+            batch_df = prior.drop("valid_to_ms").unionByName(
+                batch_df, allowMissingColumns=True
+            )
+        self.store.write(self._recompute(batch_df))
 
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
@@ -143,7 +119,7 @@ class Scd2HistorySink:
         """All versions with [valid_from, valid_to) timestamps; open
         ``valid_to`` = current. Delete markers are excluded (their effect
         lives in the predecessor's valid_to)."""
-        state = self.read_state()
+        state = self.store.read()
         if state is None:
             return None
         return (
@@ -156,7 +132,7 @@ class Scd2HistorySink:
 
     def as_of(self, ts_ms: int) -> DataFrame | None:
         """Point-in-time read: each key's version valid at ``ts_ms``."""
-        state = self.read_state()
+        state = self.store.read()
         if state is None:
             return None
         return (
@@ -173,7 +149,7 @@ class Scd2HistorySink:
 
     def current(self) -> DataFrame | None:
         """Open versions only — equivalent to the upsert sink's state."""
-        state = self.read_state()
+        state = self.store.read()
         if state is None:
             return None
         return (
@@ -203,7 +179,7 @@ class Scd2HistorySink:
         key's first version (or inside a deleted gap) stay unmatched under
         ``how='left'``.
         """
-        state = self.read_state()
+        state = self.store.read()
         if state is None:
             raise ValueError("no history state to enrich against")
         dim = state.filter(F.col(self.op_col) != OP_DELETE)
@@ -258,7 +234,7 @@ class Scd2HistorySink:
         """
 
         def _enrich(batch_df: DataFrame, batch_id: int) -> None:
-            if self.read_state() is None:
+            if not self.store.exists():
                 enriched = batch_df  # dimension empty: pass facts through
             else:
                 enriched = self.enrich_as_of(
@@ -282,23 +258,7 @@ class Scd2HistorySink:
         is a per-key chain prefix and surviving intervals recompute
         identically afterwards.
         """
-        state = self.read_state()
-        if state is None:
-            return
-        kept = state.filter(
+        self.store.rewrite(
             F.col("valid_to_ms").isNull()
             | (F.col("valid_to_ms") >= F.lit(closed_before_ms))
         )
-        tmp = self.state_dir.rstrip("/") + ".compact.tmp"
-        kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        (
-            final.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
-        # Best-effort temp cleanup (local/dev path; object stores expire).
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .buckets import probe
 from .parts import start_foreach_batch
 
 HLL_LGK = 12
@@ -50,29 +51,16 @@ class DistinctSketchSink:
             .agg(F.hll_sketch_agg("user_id", F.lit(self.lgk)).alias("sk"))
         )
 
-    def _has_state(self) -> bool:
-        # Probe through the Hadoop FileSystem API, not os.path: state may
-        # live on HDFS/S3 where a local-path check returns False and the
-        # dynamic partition overwrite would silently REPLACE same-day
-        # sketches instead of merging them (undercounted estimates, no
-        # error anywhere).
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.state_dir)
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(path):
-            return False
-        return any(
-            st.getPath().getName().startswith("day=")
-            for st in fs.listStatus(path)
-        )
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         incoming = self._partials(batch_df)
         days = [r["day"] for r in incoming.select("day").distinct().collect()]
         if not days:
             return
         merged = incoming
-        if self._has_state():
+        # Probe through the Hadoop FS API (remote-safe, see buckets.py): a
+        # missed state would make the dynamic overwrite REPLACE same-day
+        # sketches instead of merging them (undercounted, no error).
+        if probe(self.spark, self.state_dir, "day=*"):
             existing = self.spark.read.parquet(self.state_dir).filter(
                 F.col("day").isin(days)
             )

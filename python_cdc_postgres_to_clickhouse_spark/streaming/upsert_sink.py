@@ -5,11 +5,12 @@ as the CDC destination (docker-compose.yml:155-174) with no ingest code; here
 each micro-batch merges into a partitioned Parquet "current state" table.
 
 Scale design (100 TB):
-- State is hash-bucketed on the key (``bucket = pmod(hash(key), n)``). A
-  micro-batch only rewrites the buckets it touches — with dynamic partition
-  overwrite, untouched buckets are never read or written. Bucket count is
-  chosen so one bucket ≈ one comfortable task (e.g. 4096 buckets for a
-  multi-TB state table).
+- State is a ``buckets.BucketedState``: hash-bucketed on the key
+  (``bucket = pmod(hash(key), n)``), probed through the Hadoop FS API so a
+  remote or ``file://`` state dir is seen. A micro-batch only rewrites the
+  buckets it touches — with dynamic partition overwrite, untouched buckets
+  are never read or written. Bucket count is chosen so one bucket ≈ one
+  comfortable task (e.g. 4096 buckets for a multi-TB state table).
 - Replay safety (D4): Spark may re-deliver the last uncommitted batch after
   a crash. The merge is idempotent — latest-by-key over (state ∪ batch) with
   LSN ordering yields the same state when re-applied — so exactly-once
@@ -21,7 +22,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from .buckets import BucketedState
 from .parts import start_foreach_batch
 
 
@@ -46,33 +47,22 @@ class ParquetUpsertSink:
         self.keys = list(keys)
         self.order_by = list(order_by)
         self.n_buckets = n_buckets
+        self.store = BucketedState(spark, state_dir, keys, n_buckets)
 
-    def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.hash(*self.keys), F.lit(self.n_buckets))
-        )
-
-    def read_state(self) -> DataFrame | None:
-        if not os.path.isdir(self.state_dir) or not any(
-            name.startswith("bucket=") for name in os.listdir(self.state_dir)
-        ):
-            return None
-        # mergeSchema: schema-evolution tolerance (D5) — buckets written
-        # before a source column was added still read cleanly (nulls).
-        return self.spark.read.option("mergeSchema", "true").parquet(self.state_dir)
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Merge one micro-batch of *flat change rows* into the state table."""
-        batch_df = self._bucket(batch_df)
-        touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
+    def merge(
+        self, batch_df: DataFrame
+    ) -> tuple[list[int], DataFrame | None, DataFrame] | None:
+        """Merge a batch of flat change rows into the buckets it touches,
+        without writing: (touched buckets, their pre-batch rows or None,
+        their post-batch rows), or None for an empty batch."""
+        batch_df, touched, prior = self.store.touched(batch_df)
         if not touched:
-            return
-        state = self.read_state()
-        if state is not None:
-            relevant = state.filter(F.col("bucket").isin(touched))
-            merged = relevant.unionByName(batch_df, allowMissingColumns=True)
-        else:
-            merged = batch_df
+            return None
+        merged = (
+            batch_df
+            if prior is None
+            else prior.unionByName(batch_df, allowMissingColumns=True)
+        )
         # Tombstones (op='d') STAY in the state table: a delete that wins in
         # batch N must still outrank an out-of-order older update arriving in
         # batch N+1 — dropping it here would resurrect the key. Deletes are
@@ -82,15 +72,13 @@ class ParquetUpsertSink:
         new_state = latest_by_key(
             merged, keys=self.keys, order_by=self.order_by, drop_deletes=False
         )
-        # Dynamic partition overwrite: only the touched buckets are replaced.
-        # Per-write option, not the session conf — mutating the session would
-        # change overwrite semantics for unrelated writes in the application.
-        (
-            new_state.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
+        return touched, prior, new_state
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Merge one micro-batch of *flat change rows* into the state table."""
+        merged = self.merge(batch_df)
+        if merged is not None:
+            self.store.write(merged[2])
 
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
@@ -101,7 +89,7 @@ class ParquetUpsertSink:
         )
 
     def current_state(self) -> DataFrame | None:
-        state = self.read_state()
+        state = self.store.read()
         if state is None:
             return None
         return state.filter(F.col("op") != "d").drop("bucket")
@@ -136,20 +124,10 @@ class ParquetUpsertSink:
         than the replay horizon and the reappearance window is bounded by
         one compaction period.
         """
-        state = self.read_state()
-        if state is None:
-            return
         keep = ~((F.col("op") == "d") & (F.col("source_lsn") < tombstone_horizon_lsn))
         if ttl_older_than is not None:
             expired = (F.col("op") != "d") & (
                 F.col(ttl_col).isNotNull() & (F.col(ttl_col) < F.lit(ttl_older_than))
             )
             keep = keep & ~expired
-        compacted = state.filter(keep).localCheckpoint(
-            eager=True
-        )  # materialize before overwriting the source
-        # STATIC whole-table overwrite: compaction rewrites everything anyway,
-        # and dynamic mode would leave a bucket directory untouched when every
-        # one of its rows is an expired tombstone (nothing written for that
-        # partition → nothing replaced → the tombstones would survive forever).
-        compacted.write.mode("overwrite").partitionBy("bucket").parquet(self.state_dir)
+        self.store.rewrite(keep)

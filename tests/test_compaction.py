@@ -22,11 +22,13 @@ from python_cdc_postgres_to_clickhouse_spark.streaming.upsert_sink import Parque
 
 
 @pytest.mark.heavy
-def test_compaction_drops_old_tombstones_keeps_recent(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_compaction_drops_old_tombstones_keeps_recent(spark, tmp_path, uri):
     fx = generate_changelog(n_keys=30, n_ops=200, seed=15)
     src = str(tmp_path / "src")
     write_stream_fixture(spark, fx, src, n_files=4)
-    sink = ParquetUpsertSink(spark, str(tmp_path / "state"), n_buckets=4)
+    state = tmp_path / "state"
+    sink = ParquetUpsertSink(spark, state.as_uri() if uri else str(state), n_buckets=4)
     q = sink.attach(
         with_event_time(unwrap(read_change_stream(spark, src), keep_deletes=True)),
         checkpoint_dir=str(tmp_path / "ckpt"),
@@ -48,8 +50,9 @@ def test_compaction_drops_old_tombstones_keeps_recent(spark, tmp_path):
         r["source_lsn"] for r in raw2.filter(F.col("op") == "d").collect()
     )
     assert kept == [l for l in lsns if l >= horizon]
-    # Live state untouched by compaction.
+    # Live state untouched by compaction; its temp copy is gone.
     assert {r["id"] for r in sink.current_state().collect()} == before_live
+    assert not (tmp_path / "state.compact.tmp").exists()
 
 
 @pytest.mark.heavy

@@ -63,10 +63,10 @@ def _sink_view(sink):
     }
 
 
-def _mk(spark, tmp_path, **kw):
+def _mk(spark, tmp_path, uri=False, **kw):
     return JoinViewSink(
         spark,
-        str(tmp_path / "jv"),
+        (tmp_path / "jv").as_uri() if uri else str(tmp_path / "jv"),
         join_key="k",
         left_keys=("id",),
         right_keys=("rid",),
@@ -123,10 +123,11 @@ def test_join_view_incremental_equals_full_after_each_batch(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_join_view_replay_is_noop(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_join_view_replay_is_noop(spark, tmp_path, uri):
     l_ops = _gen_ops(11, 30, n_ids=6, n_keys=3, id_col="id")
     r_ops = _gen_ops(12, 30, n_ids=6, n_keys=3, id_col="rid")
-    sink = _mk(spark, tmp_path)
+    sink = _mk(spark, tmp_path, uri=uri)
     sink.process_batch(_ldf(spark, l_ops[:20]), _rdf(spark, r_ops[:20]), 0)
     sink.process_batch(_ldf(spark, l_ops[20:]), _rdf(spark, r_ops[20:]), 1)
     before = _sink_view(sink)
@@ -134,6 +135,38 @@ def test_join_view_replay_is_noop(spark, tmp_path):
     # set-identical — the states and view are pure functions of the set.
     sink.process_batch(_ldf(spark, l_ops[20:]), _rdf(spark, r_ops[20:]), 1)
     assert _sink_view(sink) == before == _py_view(l_ops, r_ops)
+
+
+def test_join_view_one_row_batch_rewrites_only_its_bucket(spark, tmp_path):
+    """Each side merges only the buckets its batch touches: a 1-row left
+    batch leaves every other left bucket and the whole right side on
+    their existing files. The view stays exact although join keys 0 and 1
+    share a view bucket at n_buckets=8: rebuilding that bucket for key 1
+    must keep key 0's pairs."""
+
+    def files(side):
+        d = tmp_path / "jv" / side
+        return {b: sorted(os.listdir(d / b)) for b in os.listdir(d) if b.startswith("bucket=")}
+
+    sink = _mk(spark, tmp_path)
+    l0 = [
+        {"id": i, "k": i % 4, "val": f"a{i}", "op": "c", "source_lsn": i, "kafka_offset": i}
+        for i in range(40)
+    ]
+    r0 = [
+        {"rid": i, "k": i % 4, "val": f"x{i}", "op": "c", "source_lsn": i, "kafka_offset": i}
+        for i in range(8)
+    ]
+    sink.process_batch(_ldf(spark, l0), _rdf(spark, r0), 0)
+    left0, right0 = files("left"), files("right")
+    assert len(left0) == 8
+    # Move left row 3 from k=3 to k=1.
+    l1 = [{"id": 3, "k": 1, "val": "b", "op": "u", "source_lsn": 50, "kafka_offset": 50}]
+    sink.process_batch(_ldf(spark, l1), _rdf(spark, []), 1)
+    left1 = files("left")
+    assert sum(left1[b] != left0[b] for b in left0) == 1
+    assert files("right") == right0
+    assert _sink_view(sink) == _py_view(l0 + l1, r0)
 
 
 @pytest.mark.heavy

@@ -70,12 +70,15 @@ def test_scd2_sink_matches_python_oracle(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_scd2_sink_chunking_invariance(spark, tmp_path):
-    """1 batch vs 9 batches produce the identical history table."""
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_scd2_sink_chunking_invariance(spark, tmp_path, uri):
+    """1 batch vs 9 batches produce the identical history table, also
+    under a ``file://`` state dir."""
     fx = generate_changelog(n_keys=15, n_ops=120, seed=7)
-    a = Scd2HistorySink(spark, str(tmp_path / "a"), n_buckets=4)
+    root = tmp_path.as_uri() if uri else str(tmp_path)
+    a = Scd2HistorySink(spark, f"{root}/a", n_buckets=4)
     a.process_batch(_flat(spark, fx.events), 0)
-    b = Scd2HistorySink(spark, str(tmp_path / "b"), n_buckets=4)
+    b = Scd2HistorySink(spark, f"{root}/b", n_buckets=4)
     for i, chunk in enumerate(_chunks(fx.events, 9)):
         b.process_batch(_flat(spark, chunk), i)
     assert _sink_history(a) == _sink_history(b)

@@ -47,8 +47,10 @@ def test_stream_upsert_matches_replay_oracle(spark, tmp_path):
     assert got == {k: v["username"] for k, v in fx.expected_final.items()}
 
 
-def test_stream_upsert_checkpoint_restart(spark, tmp_path):
-    """D4: stop mid-stream, restart from the checkpoint, no double-apply."""
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_stream_upsert_checkpoint_restart(spark, tmp_path, uri):
+    """D4: stop mid-stream, restart from the checkpoint, no double-apply.
+    A ``file://`` state dir must merge exactly like a plain path."""
     fx = generate_changelog(n_keys=30, n_ops=200, seed=8)
     src = str(tmp_path / "src")
     all_files = write_stream_fixture(spark, fx, src, n_files=6)
@@ -61,7 +63,8 @@ def test_stream_upsert_checkpoint_restart(spark, tmp_path):
     # Phase 1: only the first half of files present.
     for p in all_files[half:]:
         shutil.move(p, os.path.join(staged, os.path.basename(p)))
-    sink = ParquetUpsertSink(spark, str(tmp_path / "state"), n_buckets=8)
+    state = tmp_path / "state"
+    sink = ParquetUpsertSink(spark, state.as_uri() if uri else str(state), n_buckets=8)
     ckpt = str(tmp_path / "ckpt")
     q1 = sink.attach(_flat_stream(read_change_stream(spark, src)), checkpoint_dir=ckpt)
     q1.awaitTermination(120)
