@@ -3266,16 +3266,19 @@ def _ngram_multiset(s: str, n: int, chars: bool, ci: bool) -> str:
     there). CaseInsensitive variants lowercase first."""
     src = f"lower({s})" if ci else f"({s})"
     if chars:
-        length, body = f"length({src})", f"substr({src}, i, {n})"
+        length, body = "length(ngs)", f"substr(ngs, i, {n})"
         empty = "cast(array() as array<string>)"
     else:
-        length = f"octet_length({src})"
-        body = f"substring(encode({src}, 'UTF-8'), i, {n})"
+        src = f"encode({src}, 'UTF-8')"
+        length, body = "octet_length(ngs)", f"substring(ngs, i, {n})"
         empty = "cast(array() as array<binary>)"
     # sequence(1, k) flips to a DESCENDING range when k < 1 — guard it.
+    # The source is bound once to `ngs`: written inside the per-gram
+    # lambda it was re-evaluated (lowercased, re-encoded) for every gram.
     return (
+        f"element_at(transform(array({src}), ngs -> "
         f"CASE WHEN {length} < {n} THEN {empty} "
-        f"ELSE transform(sequence(1, {length} - {n - 1}), i -> {body}) END"
+        f"ELSE transform(sequence(1, {length} - {n - 1}), i -> {body}) END), 1)"
     )
 
 
@@ -5091,9 +5094,9 @@ RULES: dict[str, Callable[[list[str]], str]] = {
     # Character n-grams; guard short strings (Spark sequence(1, 0) would
     # DESCEND, not return empty).
     "ngrams": _tpl(
-        "if(length({0}) < {1}, array(), "
-        "transform(sequence(1, length({0}) - {1} + 1), "
-        "i -> substring({0}, i, {1})))"
+        "element_at(transform(array({0}), ngs -> if(length(ngs) < {1}, array(), "
+        "transform(sequence(1, length(ngs) - {1} + 1), "
+        "i -> substring(ngs, i, {1})))), 1)"
     ),
     "countMatches": _tpl("size(regexp_extract_all({0}, {1}, 0))"),
     "extractAll": _extract_all,

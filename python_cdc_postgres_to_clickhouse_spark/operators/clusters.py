@@ -29,6 +29,7 @@ each other):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -129,13 +130,22 @@ def connected_components(
         # ~5 jobs each with one in-memory pass. Output labeling is
         # identical (component = min vertex id) — asserted against the
         # distributed path in tests.
+        #
+        # The labels go back through a pandas frame, not a list of tuples:
+        # with the session's Arrow setting on, createDataFrame hands Arrow
+        # batches straight to the JVM, where a list becomes a Python RDD
+        # whose first job starts Python workers (1.5–4 s on a cold
+        # session). Object columns keep the Python values exact (no int64
+        # or float upcast, nulls stay null); with Arrow off it falls back
+        # to the list path.
         utype = edges.schema["u"].dataType
         labeled = _driver_union_find([(r["u"], r["v"]) for r in edges.collect()])
         spark = edges.sparkSession
         schema = T.StructType(
             [T.StructField("vertex", utype), T.StructField("component", utype)]
         )
-        return spark.createDataFrame(labeled, schema)
+        frame = pd.DataFrame(labeled, columns=["vertex", "component"], dtype=object)
+        return spark.createDataFrame(frame, schema)
     if n_edges <= SMALL_GRAPH_EDGES:
         edges = edges.coalesce(1)
     labels = (

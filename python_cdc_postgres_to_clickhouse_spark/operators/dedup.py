@@ -24,7 +24,14 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import widen_small_scan
-from .textstats import fingerprint, normalized, portable_hash32, rolling_hashes, tokens
+from .textstats import (
+    bind_once,
+    fingerprint,
+    portable_hash32,
+    rolling_hashes,
+    shingles,
+    token_hash_values,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -52,18 +59,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # ---------------------------------------------------------------------------
 # X2a: exact Jaccard near-dup via token postings (complete, scalable-ish)
 # ---------------------------------------------------------------------------
-
-
-def shingles(text: str | Column = "text", shingle: int = 3) -> Column:
-    """k-token shingle strings (n-grams). Near-duplication is defined on
-    shingle sets, not token sets: a tiny shared vocabulary makes token-set
-    Jaccard saturate (measured 57% of all fixture pairs ≥ 0.6) while
-    shingle-set Jaccard stays discriminative (25 planted pairs ≥ 0.9, next
-    at 0.07)."""
-    t = tokens(text)
-    n = F.size(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(shingle - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, shingle)))
 
 
 def jaccard_pairs(
@@ -108,7 +103,15 @@ def jaccard_pairs(
         F.col(id_col).alias("doc"),
         F.array_distinct(shingles(shingle=shingle)).alias("shs"),
     )
-    posting = arrs.select("doc", F.size("shs").alias("n_tok"), F.explode("shs").alias("token"))
+    # explode_outer + isNotNull, not explode: from explode(shs) Catalyst's
+    # InferFiltersFromGenerate adds `size(shs) > 0`, and that filter is
+    # pushed below widen_small_scan's round-robin exchange — the whole
+    # shingle fold then runs once more in the single scan task. An outer
+    # explode infers nothing; shingle strings are never null, so the
+    # filter keeps exactly explode's rows.
+    posting = arrs.select(
+        "doc", F.size("shs").alias("n_tok"), F.explode_outer("shs").alias("token")
+    ).filter(F.col("token").isNotNull())
     if max_token_df is not None:
         hot = (
             posting.groupBy("token")
@@ -398,21 +401,26 @@ def simhash(text_col: str = "text", n_bits: int = 16) -> Column:
     Expression-only (no explode): transform token array → per-bit votes →
     aggregate. n_bits=16 keeps the expression tree small; 64-bit variants
     shard into 4 longs."""
-    toks = tokens(text_col)
-    out = F.lit(0).cast("long")
-    for i in range(n_bits):
-        votes = F.aggregate(
-            F.transform(
-                toks,
-                lambda t: F.when(
-                    F.shiftright(portable_hash32(t), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        out = out + F.shiftleft((votes > 0).cast("long"), i)
-    return out
+    # The per-token hash array is bound once (``bind_once``): passed
+    # directly to each of the n_bits folds, the tokenization and one md5
+    # per token ran again for every bit.
+    def per_doc(hashes: Column) -> Column:
+        out = F.lit(0).cast("long")
+        for i in range(n_bits):
+            votes = F.aggregate(
+                F.transform(
+                    hashes,
+                    lambda h: F.when(
+                        F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
+                    ).otherwise(-1),
+                ),
+                F.lit(0),
+                lambda acc, x: acc + x,
+            )
+            out = out + F.shiftleft((votes > 0).cast("long"), i)
+        return out
+
+    return bind_once(token_hash_values(text_col), per_doc)
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -446,12 +454,18 @@ def simhash_near_duplicates(
     for blk in range(n_blocks):
         width = base + (1 if blk < n_bits % n_blocks else 0)
         key = F.shiftright("sh", offset).bitwiseAND(F.lit((1 << width) - 1))
-        entries.append(F.struct(F.lit(blk).alias("half"), key.alias("key")))
+        entries.append(
+            F.struct(F.lit(blk).alias("half"), key.alias("key"), F.col("sh").alias("sh"))
+        )
         offset += width
     # Explode, not union: union branches would re-evaluate the (expensive)
-    # simhash expression once per block.
-    parts = sig.select("doc", "sh", F.explode(F.array(*entries)).alias("e")).select(
-        "doc", "sh", F.col("e.half").alias("half"), F.col("e.key").alias("key")
+    # simhash expression once per block. `sh` leaves through the explode,
+    # not beside it: the join and Hamming filter infer `isnotnull(sh)`, and
+    # a filter on a column the Generate passes through is pushed below
+    # widen_small_scan's exchange, where it runs every vote fold a second
+    # time in the single scan task. A generated column stops it there.
+    parts = sig.select("doc", F.explode(F.array(*entries)).alias("e")).select(
+        "doc", "e.sh", "e.half", "e.key"
     )
     left = parts.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a"), "half", "key")
     right = parts.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b"), "half", "key")

@@ -7,6 +7,8 @@ any scale.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -128,17 +130,41 @@ def portable_hash32(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
+def bind_once(value: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(value)`` with the row expression ``value`` evaluated once per row.
+
+    A lambda body that uses a row expression without using its own lambda
+    variable re-evaluates that expression for every array element:
+    higher-order functions run interpreted (CodegenFallback), so
+    subexpression elimination does not share the work. Passing the value
+    in as the one element of an array binds it to a lambda variable
+    instead."""
+    return F.transform(F.array(value), fn)[0]
+
+
+def shingles(text: str | Column = "text", shingle: int = 3) -> Column:
+    """k-token shingle strings (n-grams). Near-duplication is defined on
+    shingle sets, not token sets: a tiny shared vocabulary makes token-set
+    Jaccard saturate (measured 57% of all fixture pairs ≥ 0.6) while
+    shingle-set Jaccard stays discriminative (25 planted pairs ≥ 0.9, next
+    at 0.07). A text with fewer than k tokens is one shorter shingle.
+
+    The token array is bound once (``bind_once``), outside the
+    per-shingle lambda, so each document is tokenized once, not once per
+    shingle."""
+
+    def per_doc(t: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.greatest(F.size(t) - F.lit(shingle - 1), F.lit(1)))
+        return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, shingle)))
+
+    return bind_once(tokens(text), per_doc)
+
+
 def rolling_hashes(text: str | Column = "text", shingle: int = 3) -> Column:
     """Per-document array of shingle hashes (portable md5-int of each
     k-token window) — the input to MinHash (operators/dedup.py). JVM-side:
-    transform over a sliding slice of the token array; one md5 per shingle,
-    permutations are pure arithmetic downstream."""
-    t = tokens(text)
-    n = F.size(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(shingle - 1), F.lit(1)))
-    return F.transform(
-        idx, lambda i: portable_hash32(F.concat_ws(" ", F.slice(t, i, shingle)))
-    )
+    one md5 per shingle, permutations are pure arithmetic downstream."""
+    return F.transform(shingles(text, shingle), portable_hash32)
 
 
 # ---------------------------------------------------------------------------

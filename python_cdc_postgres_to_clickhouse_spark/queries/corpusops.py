@@ -27,7 +27,7 @@ from ._exprs import SQL_NORM
 
 _SQL_TOKENS = f"string_split({SQL_NORM}, ' ')"
 
-# 3-gram shingle list of a token array `t` (mirrors operators/dedup.shingles).
+# 3-gram shingle list of a token array `t` (mirrors operators/textstats.shingles).
 _SQL_SHINGLES3 = (
     "list_transform(generate_series(1, greatest(len(t)-2, 1)),"
     " i -> array_to_string(t[i:i+2], ' '))"
@@ -1118,11 +1118,15 @@ def x_dup_span_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     k = DUP_SPAN_K
-    toks = TS.tokens()
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - F.lit(k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+    n = F.size(TS.tokens())
+    # Tokens bound once outside the per-gram lambda (see TS.bind_once):
+    # inside it, every document was re-tokenized once per gram.
+    grams = TS.bind_once(
+        TS.tokens(),
+        lambda toks: F.transform(
+            F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        ),
     )
     g = (
         widen_small_scan(t["documents"])

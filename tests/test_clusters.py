@@ -150,3 +150,43 @@ def test_stateful_running_user_stats(spark, tmp_path):
         .collect()
     }
     assert got == exp
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+@pytest.mark.parametrize(
+    "vtype,edges",
+    [
+        ("int", []),
+        ("bigint", []),
+        ("int", [(1, 2), (2, 3), (10, 11), (3, 1)]),
+        ("bigint", [(1, 2), (2, 3), (10, 11), (3, 1)]),
+        ("bigint", [(5, 2**40), (2**40, 2**40 + 1)]),
+    ],
+)
+def test_union_find_labels_keep_vertex_type(spark, arrow, vtype, edges):
+    """The driver union-find path returns its labels through pandas: with
+    Arrow on and off, for int and bigint vertices and an empty edge list,
+    the result keeps the vertex type and equals the union-find labels."""
+    values = ", ".join(f"({a}, {b})" for a, b in edges) or "(0, 0)"
+    pairs = spark.sql(
+        f"SELECT CAST(a AS {vtype}) AS a, CAST(b AS {vtype}) AS b "
+        f"FROM VALUES {values} AS t(a, b)" + ("" if edges else " WHERE false")
+    )
+    # Fallback off: an Arrow conversion failure must fail here, not
+    # silently take the list path.
+    confs = {
+        "spark.sql.execution.arrow.pyspark.enabled": arrow,
+        "spark.sql.execution.arrow.pyspark.fallback.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        out = connected_components(pairs)
+        rows = out.collect()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [vtype, vtype]
+    assert {r["vertex"]: r["component"] for r in rows} == _union_find(edges)
+    assert len(rows) == len(_union_find(edges))

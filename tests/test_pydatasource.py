@@ -101,6 +101,11 @@ def test_stream_reads_in_bounded_batches_and_resumes(registered, tmp_path):
         deadline = time.time() + 300  # generous: suite-load contention
         while time.time() < deadline and len(out) < expect:
             time.sleep(0.5)
+        # The rows land in `out` before the batch commits: stopping on the
+        # row count alone can abandon an uncommitted batch, which the
+        # restart then replays in full. Stop only once everything is
+        # committed.
+        q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
         return out
@@ -158,6 +163,11 @@ def test_segmented_stream_reads_all_segments_in_parallel_and_resumes(
         deadline = time.time() + 300  # generous: suite-load contention
         while time.time() < deadline and len(out) < expect:
             time.sleep(0.5)
+        # The rows land in `out` before the batch commits: stopping on the
+        # row count alone can abandon an uncommitted batch, which the
+        # restart then replays in full. Stop only once everything is
+        # committed.
+        q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
         return out

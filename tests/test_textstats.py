@@ -3,6 +3,10 @@ token behavior on synthetic edge cases."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from python_cdc_postgres_to_clickhouse_spark.operators import textstats as TS
@@ -99,3 +103,49 @@ def test_collision_mass_fold_matches_python(spark):
         toks = " ".join(text.lower().split()).split(" ")
         want = sum(c * c for c in Counter(toks).values())
         assert got[doc_id] == want, (doc_id, got[doc_id], want)
+
+
+# Null, empty, whitespace-only and 1–4-token texts: the fold edges of the
+# bound-once token array (a null text folds to one empty shingle).
+_FOLD_EDGE_TEXTS = [None, "", "  \t\n ", "One", "one  TWO", " a\tb C ", "a b c d", "x y x y x"]
+
+
+def _py_tokens(text):
+    return [] if text is None else re.sub(r"\s+", " ", text.lower()).strip(" ").split(" ")
+
+
+def _py_shingles(text, k):
+    t = _py_tokens(text)
+    return [" ".join(t[i : i + k]) for i in range(max(len(t) - k + 1, 1))]
+
+
+def _py_hash32(s):
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
+def _py_simhash(text, n_bits=16):
+    if text is None:
+        return None
+    hashes = [_py_hash32(t) for t in _py_tokens(text)]
+    votes = [sum(1 if (h >> i) & 1 else -1 for h in hashes) for i in range(n_bits)]
+    return sum(1 << i for i, v in enumerate(votes) if v > 0)
+
+
+@pytest.mark.parametrize("k", [2, 3])
+def test_shingle_folds_match_python_on_edge_texts(spark, k):
+    from python_cdc_postgres_to_clickhouse_spark.operators import dedup as D
+
+    df = spark.createDataFrame(list(enumerate(_FOLD_EDGE_TEXTS)), "id int, text string")
+    got = df.select(
+        "id",
+        TS.shingles(shingle=k).alias("s"),
+        TS.rolling_hashes(shingle=k).alias("h"),
+        D.simhash().alias("sh"),
+    ).collect()
+    assert len(got) == len(_FOLD_EDGE_TEXTS)
+    for r in got:
+        text = _FOLD_EDGE_TEXTS[r["id"]]
+        want = _py_shingles(text, k)
+        assert r["s"] == want, (text, r["s"])
+        assert r["h"] == [_py_hash32(s) for s in want], text
+        assert r["sh"] == _py_simhash(text), text

@@ -1,7 +1,12 @@
 #!/usr/bin/env python
-"""Profile declared queries: min-of-N noop-forced timing + optional plan
-capture, with load-average context (shared-box protocol: never trust a
-solo number taken above ~load 4).
+"""Profile declared queries: min-of-N timing + optional plan capture, with
+load-average context (shared-box protocol: never trust a solo number taken
+above ~load 4).
+
+Each iteration times two phases separately: ``build`` (calling the query
+function — some operators run Spark jobs while the plan is built, e.g.
+connected_components materializes its edge list) and ``force`` (the noop
+write of the returned DataFrame). Both are printed, with their sum.
 
 Usage:
   python tools/profile_query.py x_jaccard_near_dup [more...] [--n 4]
@@ -38,22 +43,29 @@ def main() -> None:
         "overwrite"
     ).save()
     for name in names:
-        times = []
+        builds, forces = [], []
         for i in range(n):
             if cold:
                 spark.catalog.clearCache()
-            df = specs[name].fn(spark, sf_dir)
             spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
             t0 = time.perf_counter()
+            df = specs[name].fn(spark, sf_dir)
+            t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 4))
+            t2 = time.perf_counter()
+            builds.append(round(t1 - t0, 4))
+            forces.append(round(t2 - t1, 4))
         if plan_dir:
             os.makedirs(plan_dir, exist_ok=True)
             df = specs[name].fn(spark, sf_dir)
             with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-        print(f"{name}: min={min(times)} times={times} load={os.getloadavg()}")
+        totals = [round(b + f, 4) for b, f in zip(builds, forces)]
+        print(
+            f"{name}: min={min(totals)} build={builds} force={forces} "
+            f"total={totals} load={os.getloadavg()}"
+        )
 
 
 if __name__ == "__main__":
