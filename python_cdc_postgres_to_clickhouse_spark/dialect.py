@@ -2023,12 +2023,11 @@ def _rewrite_with_totals(toks: list[str]) -> list[str]:
     return toks
 
 
-_AJ_COUNT = [0]
-
-
 def _rewrite_array_join(toks: list[str]) -> list[str]:
     """``[LEFT] ARRAY JOIN expr AS alias`` -> ``LATERAL VIEW [OUTER]
-    explode(expr) _aj AS alias``."""
+    explode(expr) _ajN AS alias``, N numbering the ARRAY JOINs of this
+    query, so equal input translates to equal text."""
+    n = 0
     i = 0
     while i < len(toks):
         if _u(toks[i]) == "ARRAY" and i + 1 < len(toks) and _u(toks[i + 1]) == "JOIN":
@@ -2061,11 +2060,11 @@ def _rewrite_array_join(toks: list[str]) -> list[str]:
                 )
             expr = toks[i + 2:as_at]
             alias = toks[as_at + 1]
-            _AJ_COUNT[0] += 1
+            n += 1
             repl = ["LATERAL", "VIEW"]
             if left:
                 repl.append("OUTER")
-            repl += ["explode", "(", *expr, ")", f"_aj{_AJ_COUNT[0]}", "AS", alias]
+            repl += ["explode", "(", *expr, ")", f"_aj{n}", "AS", alias]
             toks = toks[:start] + repl + toks[as_at + 2:]
             i = start + len(repl)
             continue
@@ -7275,38 +7274,28 @@ def translate(sql: str) -> str:
 # deeply nested fold expressions), paid by every execution of a declared
 # dialect query in a resident engine. A DataFrame is an immutable lazy
 # plan — results are still computed from the parquet inputs at every
-# action, so reuse is NOT result caching; it is the same contract as
-# ``tables._CATALOG_CACHE`` ("immutable plans, reuse is safe"). The key
-# pins the session, the sf_dir (analysis binds concrete file relations;
-# repointing a temp view later never rebinds an existing plan), the
-# dialect text, and the caller-declared layout variant (the widened-view
-# swap in queries/chsql._clickhouse_sql_wide must not leak into the
-# narrow entry or vice versa). Bounded by the number of distinct declared
-# dialect strings per session.
-_PLAN_CACHE: dict = {}
-
-
-def clickhouse_sql(
-    spark,
-    sql: str,
-    sf_dir: str | None = None,
-    _layout: str | None = None,
-):
+# action, so reuse is NOT result caching; it is the same contract as the
+# catalog in ``tables.load_tables`` ("immutable plans, reuse is safe"),
+# and it lives in the same per-session state. The key pins the sf_dir
+# (analysis binds concrete file relations; repointing a temp view later
+# never rebinds an existing plan) and the dialect text, which names the
+# layout it reads (``documents`` or ``documents_wide``). Bounded by the
+# number of distinct declared dialect strings per session.
+def clickhouse_sql(spark, sql: str, sf_dir: str | None = None):
     """Translate ``sql`` from ClickHouse dialect and run it on Spark.
 
     When ``sf_dir`` is given, the engine's tables are (re)registered as temp
     views first, so table names resolve exactly as they would against the
     reference's warehouse — and the analyzed plan is memoized per
-    (session, sf_dir, layout, sql), see ``_PLAN_CACHE`` above.
+    (session, sf_dir, sql), see the note above.
     """
     if sf_dir is not None:
+        from .session import state
         from .tables import load_tables
 
         load_tables(spark, sf_dir)
-        key = (id(spark), sf_dir, _layout, sql)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            df = spark.sql(translate(sql))
-            _PLAN_CACHE[key] = df
-        return df
+        st, key = state(spark), ("plan", sf_dir, sql)
+        if key not in st:
+            st[key] = spark.sql(translate(sql))
+        return st[key]
     return spark.sql(translate(sql))

@@ -23,45 +23,6 @@ from ..dialect import clickhouse_sql
 from ..registry import query
 
 
-def _clickhouse_sql_wide(
-    spark: SparkSession,
-    ch_sql: str,
-    sf_dir: str,
-    table: str,
-) -> DataFrame:
-    """Run a dialect query with ``table``'s view pointed at a widened scan
-    (optimization round 13, guide §2.5 input skew): fixture parquet files
-    are single row groups, so fold-heavy per-row work (IPv6 codecs,
-    jaroWinkler, tokenize/ngram batteries) otherwise runs on ONE core.
-    Round 14: the widening decision (byte floor + bytes-scaled partition
-    target) lives entirely in ``tables.widen_small_scan`` (WIDEN_COMPUTE
-    profile) — one device, no per-call-site constants. It is a no-op
-    whenever the scan already has enough splits (any real scale), and the
-    byte floor keeps the driver's sf0.01 correctness scale — and the
-    plan-assert suite that runs there — on the verified narrow layouts.
-    The view is swapped only around analysis (``spark.sql`` binds
-    eagerly) and always restored.
-
-    Thread-safety note (round-14 advice item): the swap/restore mutates a
-    session-global temp view; two concurrent analyses of the same table
-    on one SparkSession could bind the wrong layout. The bench and the
-    correctness driver are single-threaded — this helper assumes that.
-    """
-    from ..tables import _table_bytes, load_tables, widen_small_scan
-
-    t = load_tables(spark, sf_dir)
-    wide = widen_small_scan(t[table], input_bytes=_table_bytes(sf_dir, table))
-    if wide is t[table]:
-        return clickhouse_sql(spark, ch_sql, sf_dir)
-    # _layout keys the dialect's analyzed-plan cache: the plan bound to
-    # the widened view must never be returned for the narrow spelling
-    # (or vice versa) — see dialect._PLAN_CACHE.
-    wide.createOrReplaceTempView(table)
-    try:
-        return clickhouse_sql(spark, ch_sql, sf_dir, _layout=f"wide:{table}")
-    finally:
-        t[table].createOrReplaceTempView(table)
-
 CH_EVENTS_ROLLUP = """
 SELECT toStartOfDay(ts) AS day,
        countIf(event_type = 'purchase') AS purchases,
@@ -569,7 +530,7 @@ SELECT lang,
        sum(arrayCount(x -> x != '', ngrams(text, 3))) AS n_3grams,
        sum(countMatches(text, '[aeiou]{2}')) AS n_vowel_pairs,
        max(arrayStringConcat(arraySlice(tokens(text), 1, 2), '_')) AS max_head
-FROM documents
+FROM documents_wide
 GROUP BY lang
 ORDER BY lang
 """
@@ -609,11 +570,11 @@ def sql_ch_token_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Optimization round 13 (guide §2.5 input skew): the per-row token /
     n-gram / regex work is the whole cost and ran single-task on the
-    fixture's one-row-group file — the query resolves against the
-    byte-gated wide variant of ``documents`` (view swapped around
-    analysis only, then restored; no-op at cluster scale where the scan
-    is already wide). Measured 2.43 → 0.76 s machine-adjusted at sf0.1."""
-    return _clickhouse_sql_wide(spark, CH_TOKEN_REPORT, sf_dir, "documents")
+    fixture's one-row-group file — the query reads the catalog's
+    byte-gated ``documents_wide`` view (the narrow frame below the byte
+    floor; a no-op at cluster scale where the scan is already wide).
+    Measured 2.43 → 0.76 s machine-adjusted at sf0.1."""
+    return clickhouse_sql(spark, CH_TOKEN_REPORT, sf_dir)
 
 
 CH_AVG_STATE = """
@@ -1143,7 +1104,7 @@ FROM (
          isIPv6String(concat('2001:db8::', lower(hex(c_custkey % 65535 + 1)))) AS ok,
          IPv6NumToString(toIPv6(concat('2001:db8::', lower(hex(c_custkey % 65535 + 1))))) AS canon,
          hex(IPv6StringToNum(concat('2001:db8::', lower(hex(c_custkey % 65535 + 1))))) AS hx
-  FROM customer
+  FROM customer_wide
 ) t
 GROUP BY seg
 ORDER BY seg
@@ -1182,10 +1143,11 @@ def sql_ch_wave10_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     every new function is a pure higher-order-function expression (no
     Python, no join, no extra exchange). The heavy scalars live in the
     FROM subquery so the DISTINCT-aggregate Expand never re-evaluates
-    them (see CH_WAVE10_REPORT's comment — 10x at sf0.1)."""
-    # customer's 15k rows of interpreted codec folds are the whole cost
-    # — widen the single-split scan (guide §2.5; no-op at real scale).
-    return _clickhouse_sql_wide(spark, CH_WAVE10_REPORT, sf_dir, "customer")
+    them (see CH_WAVE10_REPORT's comment — 10x at sf0.1). customer's 15k
+    rows of interpreted codec folds are the whole cost, so it reads the
+    catalog's byte-gated ``customer_wide`` view, which widens the
+    single-split scan (guide §2.5; no-op at real scale)."""
+    return clickhouse_sql(spark, CH_WAVE10_REPORT, sf_dir)
 
 
 CH_NGRAM_PROFILE = """
@@ -1328,7 +1290,7 @@ FROM (
          row_number() OVER (PARTITION BY probe
                             ORDER BY jaroWinklerSimilarity(p_name, probe) DESC,
                                      p_partkey) AS rn
-  FROM part
+  FROM part_wide
   ARRAY JOIN ['small ring', 'blue bolt', 'red gizmo'] AS probe
   WHERE p_partkey % 5 = 0
 ) t
@@ -1369,10 +1331,11 @@ def sql_ch_jaro_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold-gated contiguous-prefix boost. Scale: the probe array is a
     3-element literal exploded per row — one codegen projection + one
     bounded per-probe ranking window (WindowGroupLimit caps state at 10
-    rows per probe); the part table is scanned once, never joined."""
-    # 12k interpreted jaroWinkler folds dominate — widen the part scan
-    # (guide §2.5; no-op at real scale).
-    return _clickhouse_sql_wide(spark, CH_JARO_MATCH, sf_dir, "part")
+    rows per probe); the part table is scanned once, never joined. 12k
+    interpreted jaroWinkler folds dominate, so it reads the catalog's
+    byte-gated ``part_wide`` view, which widens the part scan (guide
+    §2.5; no-op at real scale)."""
+    return clickhouse_sql(spark, CH_JARO_MATCH, sf_dir)
 
 
 CH_CODEC_REPORT = """

@@ -40,6 +40,7 @@ from ..operators.similarity import (
     train_ivf_centroids,
 )
 from ..registry import query
+from ..session import state
 from ..tables import load_tables
 
 EMB_DIM = 64
@@ -235,27 +236,21 @@ PQ_SEED = 11
 PQ_ADC_K = 10
 PQ_ADC_OVERSAMPLE = 5
 
-# Build-once/query-many (the _IVFPQ_MODEL precedent): the PQ codebook
+# Build-once/query-many (the IVF-PQ model precedent): the PQ codebook
 # tensor is an index artifact, a few KB at any corpus size — one
-# bounded-sample training per (process, corpus), shared by x_pq_codes and
-# the two ADC search queries.
-_PQ_MODEL: dict[str, "object"] = {}
-
-
+# bounded-sample training per (session, corpus), kept in the session's
+# state and shared by x_pq_codes and the two ADC search queries.
 def _pq_model_for(emb: DataFrame, sf_dir: str):
-    m = _PQ_MODEL.get(sf_dir)
-    if m is None:
+    st, key = state(emb.sparkSession), ("pq_model", sf_dir)
+    if key not in st:
         from ..operators.pq import train_pq_codebooks
 
-        m = _PQ_MODEL.setdefault(
-            sf_dir,
-            # id_col: layout-independent md5 sample rank — retrainable
-            # outside Spark for the full oracles.
-            train_pq_codebooks(
-                emb, m=PQ_M, k=PQ_K, seed=PQ_SEED, id_col="vec_id"
-            ),
+        # id_col: layout-independent md5 sample rank — retrainable
+        # outside Spark for the full oracles.
+        st[key] = train_pq_codebooks(
+            emb, m=PQ_M, k=PQ_K, seed=PQ_SEED, id_col="vec_id"
         )
-    return m
+    return st[key]
 
 
 def _pq_replay_model(sf_dir: str):
@@ -601,25 +596,20 @@ IVFPQ_SEED = 42
 
 # Build-once/query-many (the x_ivf_cosine_topk precedent): the IVF-PQ
 # model — coarse cells + residual codebooks — is an index artifact, a few
-# KB at any corpus size. One bounded-sample training per (process, corpus).
-_IVFPQ_MODEL: dict[str, tuple] = {}
-
-
+# KB at any corpus size. One bounded-sample training per (session,
+# corpus), kept in the session's state.
 def _ivfpq_model_for(emb: DataFrame, sf_dir: str):
-    m = _IVFPQ_MODEL.get(sf_dir)
-    if m is None:
+    st, key = state(emb.sparkSession), ("ivfpq_model", sf_dir)
+    if key not in st:
         from ..operators.pq import train_ivfpq
 
-        m = _IVFPQ_MODEL.setdefault(
-            sf_dir,
-            # id_col: layout-independent md5 sample rank (round 12) —
-            # retrainable outside Spark for the full oracle.
-            train_ivfpq(
-                emb, n_cells=IVFPQ_CELLS, m=IVFPQ_M, k=IVFPQ_K,
-                seed=IVFPQ_SEED, id_col="vec_id",
-            ),
+        # id_col: layout-independent md5 sample rank (round 12) —
+        # retrainable outside Spark for the full oracle.
+        st[key] = train_ivfpq(
+            emb, n_cells=IVFPQ_CELLS, m=IVFPQ_M, k=IVFPQ_K,
+            seed=IVFPQ_SEED, id_col="vec_id",
         )
-    return m
+    return st[key]
 
 
 def _ivfpq_topk_oracle(sf_dir: str) -> str:

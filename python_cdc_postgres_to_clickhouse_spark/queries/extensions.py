@@ -23,6 +23,7 @@ from ..operators import similarity as S
 from ..operators import textstats as TS
 from ._exprs import SQL_NORM
 from ..registry import query
+from ..session import state
 from ..tables import load_tables
 
 _SQL_TOKENS = f"string_split({SQL_NORM}, ' ')"
@@ -662,23 +663,18 @@ def x_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Build-once/query-many: the IVF coarse quantizer is an *index artifact*,
 # not part of the query — train it once per corpus and reuse across every
 # query batch (in production: persist the (n_centroids × dim) matrix next
-# to the corpus). Here: one training per (process, corpus dir).
-_IVF_CENTROIDS: dict[str, "object"] = {}
-
-
+# to the corpus). Here: one training per (session, corpus dir), kept in
+# the session's state.
 def _ivf_centroids_for(emb: DataFrame, sf_dir: str):
-    c = _IVF_CENTROIDS.get(sf_dir)
-    if c is None:
-        c = _IVF_CENTROIDS.setdefault(
-            sf_dir,
-            # id_col: layout-independent md5 sample rank (round 12) — the
-            # trained matrix is a pure function of the rows, which is
-            # what lets the oracle retrain it outside Spark.
-            S.train_ivf_centroids(
-                emb, n_centroids=16, seed=42, id_col="vec_id"
-            ),
+    st, key = state(emb.sparkSession), ("ivf_centroids", sf_dir)
+    if key not in st:
+        # id_col: layout-independent md5 sample rank (round 12) — the
+        # trained matrix is a pure function of the rows, which is what
+        # lets the oracle retrain it outside Spark.
+        st[key] = S.train_ivf_centroids(
+            emb, n_centroids=16, seed=42, id_col="vec_id"
         )
-    return c
+    return st[key]
 
 
 def _ivf_topk_oracle(sf_dir: str) -> str:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import state
 from ..tables import load_tables
 
 HLL_LGK = 12          # 2^12 buckets → ~1.6% RSE
@@ -102,9 +103,9 @@ CMS_PROBES = ("the", "and", "of", "to", "in", "el", "la", "de", "der", "die")
 # Build-once / probe-many: the sketch IS the stored summary (ClickHouse
 # persists exactly this as an AggregateFunction state column; IVF's
 # train-once centroids are the same pattern here). One corpus pass per
-# (session, corpus); every later probe rides the few-KB cached state.
-# Deterministic: explicit seed + counter-add merge ⇒ same grid every build.
-_CMS_CACHE: dict[tuple[int, str], bytes] = {}
+# (session, corpus), kept in the session's state; every later probe rides
+# the few-KB cached state. Deterministic: explicit seed + counter-add merge
+# ⇒ same grid every build.
 
 
 @query("x_sketch_cms_freq", tags=("ext", "sketch", "approx"))
@@ -121,7 +122,7 @@ def x_sketch_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver collects ONE row (the few-KB sketch binary), deserializes it
     via the JVM sketch library, and probes the fixed token list — at
     100 TB the probe set rides on a few-KB summary, never a re-scan. The
-    build runs ONCE per (session, corpus) and is cached (_CMS_CACHE) —
+    build runs ONCE per (session, corpus) and is cached (session.state) —
     probe-many over stored sketch state is the operating mode, the
     ClickHouse AggregateFunction-column analog (deterministic: explicit
     seed, counter-add merge).
@@ -129,19 +130,18 @@ def x_sketch_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sketch internals are engine-specific ⇒ rows-only driver row."""
     from ..operators.textstats import tokens
 
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _CMS_CACHE:
+    st, key = state(spark), ("cms", sf_dir)
+    if key not in st:
         t = load_tables(spark, sf_dir)
         toks = t["documents"].select(F.explode(tokens()).alias("token"))
-        _CMS_CACHE[key] = bytes(
+        st[key] = bytes(
             toks.agg(
                 F.count_min_sketch(
                     "token", F.lit(CMS_EPS), F.lit(CMS_CONF), F.lit(CMS_SEED)
                 ).alias("sk")
             ).collect()[0]["sk"]
         )
-    sk = _CMS_CACHE[key]
-    jcms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes(sk))
+    jcms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(st[key])
     rows = [(p, int(jcms.estimateCount(p))) for p in CMS_PROBES]
     return spark.createDataFrame(rows, "token string, est_n bigint").orderBy("token")
 

@@ -48,6 +48,18 @@ def get_spark(app_name: str = "python_cdc_postgres_to_clickhouse_spark",
     return spark
 
 
+def state(spark: SparkSession) -> dict:
+    """The engine's per-session build-once state: catalogs, analyzed
+    plans, trained index models, capability probes.
+
+    It lives in the session object itself, so it goes when the session
+    goes: the cached DataFrames reference their session, so a module dict
+    or a weak-keyed one would keep a stopped session alive, and a key by
+    object id could hand a new session plans bound to a dead one.
+    """
+    return spark.__dict__.setdefault("_engine_state", {})
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime confs to an externally-created session.
 

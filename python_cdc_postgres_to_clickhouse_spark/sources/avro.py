@@ -400,9 +400,6 @@ USERS_DECODED_SCHEMA = T.StructType(
 )
 
 
-_JVM_AVRO_AVAILABLE: dict[str, bool] = {}
-
-
 def jvm_avro_available(spark=None) -> bool:
     """True when the spark-avro module is loaded in the active session.
 
@@ -410,31 +407,29 @@ def jvm_avro_available(spark=None) -> bool:
     AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE at *analysis* time when the
     external module is absent — so the probe analyzes (but never runs) a
     one-row plan. The answer is immutable for a running session (the JAR
-    cannot appear or vanish mid-session), so it is cached per application.
+    cannot appear or vanish mid-session), so it is cached in the session's
+    state.
     """
-    try:
-        from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession
 
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            return False
-        app_id = spark.sparkContext.applicationId
-        if app_id in _JVM_AVRO_AVAILABLE:
-            return _JVM_AVRO_AVAILABLE[app_id]
-        from pyspark.sql.avro.functions import from_avro
+    from ..session import state
 
-        probe = spark.range(1).select(
-            from_avro(F.lit(b"").cast("binary"), '"bytes"').alias("_probe")
-        )
-        probe.schema  # forces analysis
-        _JVM_AVRO_AVAILABLE[app_id] = True
-        return True
-    except Exception:
-        try:
-            _JVM_AVRO_AVAILABLE[spark.sparkContext.applicationId] = False
-        except Exception:
-            pass
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
         return False
+    st = state(spark)
+    if "jvm_avro" not in st:
+        try:
+            from pyspark.sql.avro.functions import from_avro
+
+            probe = spark.range(1).select(
+                from_avro(F.lit(b"").cast("binary"), '"bytes"').alias("_probe")
+            )
+            probe.schema  # forces analysis
+            st["jvm_avro"] = True
+        except Exception:
+            st["jvm_avro"] = False
+    return st["jvm_avro"]
 
 
 def _framed_body(framing: str) -> Column:

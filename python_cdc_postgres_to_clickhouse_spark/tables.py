@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .session import tune_session
+from .session import state, tune_session
 
 TABLE_NAMES = (
     "region",
@@ -41,8 +41,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # scan stage (and every narrow pipeline fused above it: interpreted
 # higher-order lambdas, regex, character n-gram folds) ran on ONE core of
 # local[32]. The catalog therefore exposes a byte-gated WIDE VARIANT of
-# the text payload table, ``documents_wide`` (``widen_small_scan`` over
-# the same frame), that per-row-compute-bound queries opt into. Measured
+# the text payload table and of the two dimension tables the dialect's
+# fold batteries scan (``<t>_wide`` for each of WIDE_TABLES:
+# ``widen_small_scan`` over the same frame, a catalog entry AND a view),
+# that per-row-compute-bound queries opt into by name. Measured
 # A/B at sf0.1 / local[32] (min-of-3 noop, bench-calibrated):
 # sql_ch_token_report 2.43 → 0.76 s, x_linear_quality_score 0.69 → 0.20,
 # x_gopher_gates 0.64 → 0.24, x_bpe_encode 1.71 → 0.84, x_token_diversity
@@ -90,6 +92,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #     table has thousands of splits and the device is a no-op.
 WIDEN_COMPUTE = ("compute", 120_000, 8_192)
 WIDEN_SCAN = ("decimal-agg-scan", 2_000_000, 1_000_000)
+# The tables whose catalog entry has a WIDEN_COMPUTE ``<t>_wide`` variant.
+WIDE_TABLES = ("documents", "customer", "part")
 
 
 def _table_bytes(sf_dir: str, name: str) -> int:
@@ -129,52 +133,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_CATALOG_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-# Which sf_dir's views are CURRENTLY registered in each session. Views are
-# session-global mutable state, so a cache hit must still re-point them
-# whenever a different sf_dir was loaded in between — otherwise any
-# spark.sql()-based query silently reads the previous scale's tables
-# (caught by the test suite: nine SQL-string queries went red whenever a
-# smoke-scale test ran between two oracle-scale ones).
-_ACTIVE_VIEWS: dict[int, str] = {}
-
-
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load all tables and register them as temp views (idempotent).
 
     Called at the head of every declared query, so the driver's session
     gets the UTC pin no matter how it was built. DataFrames are cached per
-    (session, sf_dir) — they are immutable plans, so reuse is safe and
-    avoids re-listing parquet footers on every query invocation. View
-    registration is NOT skippable on cache hits: the catalog's view names
-    must always point at this call's sf_dir.
+    sf_dir in the session's state (``session.state``) — they are immutable
+    plans, so reuse is safe and avoids re-listing parquet footers on every
+    query invocation. Every entry, the ``<t>_wide`` variants included, is
+    also a view. Views are session-global, so a cache hit still re-points
+    them whenever a different sf_dir was loaded in between — otherwise any
+    spark.sql()-based query silently reads the previous scale's tables
+    (caught by the test suite: nine SQL-string queries went red whenever a
+    smoke-scale test ran between two oracle-scale ones).
     """
     tune_session(spark)
-    key = (id(spark), sf_dir)
-    cached = _CATALOG_CACHE.get(key)
-    if cached is not None:
-        if _ACTIVE_VIEWS.get(id(spark)) != sf_dir:
-            for name, df in cached.items():
-                if name in TABLE_NAMES:  # derived variants are not views
-                    df.createOrReplaceTempView(name)
-            _ACTIVE_VIEWS[id(spark)] = sf_dir
-        return cached
-    dfs: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
+    st = state(spark)
+    dfs = st.get(("catalog", sf_dir))
+    if dfs is None:
+        dfs = {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+        # Byte-gated wide variants for per-row-compute-bound consumers
+        # (see the WIDEN_COMPUTE note above); below the floor each is the
+        # narrow frame itself.
+        for name in WIDE_TABLES:
+            dfs[f"{name}_wide"] = widen_small_scan(
+                dfs[name], input_bytes=_table_bytes(sf_dir, name)
+            )
+        st[("catalog", sf_dir)] = dfs
+    elif st.get("views") == sf_dir:
+        return dfs
+    for name, df in dfs.items():
         df.createOrReplaceTempView(name)
-        dfs[name] = df
-    # Byte-gated wide variant for per-row-compute-bound text consumers
-    # (see the WIDEN_COMPUTE note above). Not registered as a view — the
-    # SQL-string surface keeps the plain table names; DataFrame queries
-    # opt in explicitly.
-    dfs["documents_wide"] = widen_small_scan(
-        dfs["documents"],
-        input_bytes=_table_bytes(sf_dir, "documents"),
-        profile=WIDEN_COMPUTE,
-    )
-    _CATALOG_CACHE[key] = dfs
-    _ACTIVE_VIEWS[id(spark)] = sf_dir
+    st["views"] = sf_dir
     return dfs
 
 

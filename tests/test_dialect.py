@@ -152,6 +152,13 @@ def test_array_join_becomes_lateral_view():
     assert "LATERAL VIEW OUTER explode(arr)" in out
 
 
+def test_array_join_translation_is_deterministic():
+    q = "SELECT a, b FROM t ARRAY JOIN xs AS a ARRAY JOIN ys AS b"
+    out = translate(q)
+    assert translate(q) == out
+    assert "explode(xs) _aj1 AS a" in out and "explode(ys) _aj2 AS b" in out
+
+
 def test_limit_by_rewrites_to_window_wrapper():
     out = translate(
         "SELECT event_type, value FROM events "

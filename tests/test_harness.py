@@ -153,3 +153,25 @@ def test_no_duplicate_dict_keys_in_package():
                             dups.append((f, k.lineno, k.value))
                         seen.add(k.value)
     assert not dups, dups
+
+
+def test_driver_window_tool_orders_unverified_changed_then_oldest(tmp_path):
+    import importlib.util
+    import json
+
+    from .conftest import REPO_ROOT
+
+    spec = importlib.util.spec_from_file_location(
+        "driver_window", REPO_ROOT / "tools" / "driver_window.py"
+    )
+    dw = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dw)
+    ok, failed = {"hash_match": True, "err": None}, {"hash_match": False, "err": None}
+    (tmp_path / "CORRECTNESS_r1.json").write_text(json.dumps({"a": ok, "b": ok, "e": ok}))
+    (tmp_path / "CORRECTNESS_r2.json").write_text(json.dumps(
+        {"a": ok, "c": {"hash_match": None, "err": "no_oracle"}, "e": failed}))
+    last = dw.last_verified(str(tmp_path))
+    assert last == {"a": 2, "b": 1, "c": 2, "e": 1}
+    assert dw.window("abcde", last, changed=["c"]) == [
+        ("d", "never"), ("c", "changed"), ("b", "r1"), ("e", "r1"), ("a", "r2"),
+    ]

@@ -270,10 +270,10 @@ def test_ivf_declared_query_trains_once_per_corpus(spark, monkeypatch):
     must not re-enter quantizer training (an extra bounded corpus pass
     per run at scale)."""
     from python_cdc_postgres_to_clickhouse_spark.operators import similarity as S
-    from python_cdc_postgres_to_clickhouse_spark.queries import extensions as X
+    from python_cdc_postgres_to_clickhouse_spark.session import state
 
     assert _q(spark, "x_ivf_cosine_topk").count() > 0  # populates the cache
-    assert SF_ORACLE in X._IVF_CENTROIDS
+    assert ("ivf_centroids", SF_ORACLE) in state(spark)
 
     def boom(*a, **kw):
         raise AssertionError("train_ivf_centroids re-entered on warm cache")
