@@ -356,22 +356,23 @@ def minhash_near_duplicates(
     base hash is what buys cross-engine oracle replay — see
     textstats.portable_hash32 — so its one pass is the one to optimize).
 
-    The shingle frame is repartitioned to the session's parallelism BEFORE
-    the persist: a one-file scan caches as ONE partition, and everything
-    above the cache but below the first shuffle — the md5 hash transform,
-    all h permutation mins, the band explode — then runs in a single task
-    on every reuse (measured: the whole query 1.35 s warm at sf0.1 with a
-    1-partition cache vs 0.80 s with a widened one; cold 9.1 s vs 4.9 s).
-    At cluster scale the scan has thousands of splits and the widen is a
-    no-op (see widen_small_scan)."""
+    The (doc, text) frame is repartitioned to the session's parallelism
+    BEFORE the shingle fold and the persist: a one-file scan caches as ONE
+    partition, and everything above the cache but below the first shuffle
+    — the md5 hash transform, all h permutation mins, the band explode —
+    then runs in a single task on every reuse (measured: the whole query
+    1.35 s warm at sf0.1 with a 1-partition cache vs 0.80 s with a widened
+    one; cold 9.1 s vs 4.9 s), and a fold below the repartition runs in
+    the one scan task. The cache keeps the hash-on-doc layout the verify
+    joins use. At cluster scale the scan has thousands of splits and the
+    widen is a no-op (see widen_small_scan)."""
     sc = docs.sparkSession.sparkContext
-    tok = docs.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(shingles(shingle=shingle)).alias("toks"),
-    )
-    if tok.rdd.getNumPartitions() < sc.defaultParallelism:
-        tok = tok.repartition(sc.defaultParallelism, "doc")
-    tok = tok.persist()  # feeds the signature pass AND both sides of the verify join
+    text = docs.select(F.col(id_col).alias("doc"), "text")
+    if text.rdd.getNumPartitions() < sc.defaultParallelism:
+        text = text.repartition(sc.defaultParallelism, "doc")
+    tok = text.select(
+        "doc", F.array_distinct(shingles(shingle=shingle)).alias("toks")
+    ).persist()  # feeds the signature pass AND both sides of the verify join
     hashed = tok.select("doc", F.transform("toks", portable_hash32).alias("_sh"))
     cands = minhash_candidates(
         docs, n_hashes, n_bands, shingle, id_col, shingle_hashes=hashed

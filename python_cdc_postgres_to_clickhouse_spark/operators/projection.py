@@ -122,20 +122,22 @@ class Projection:
         return self.df.groupBy(*group_keys).agg(*aggs)
 
     # -- maintenance ---------------------------------------------------------
+    def remerged(self) -> "Projection":
+        """One row per key tuple: the state rows re-merged per key (the
+        background-merge step over any number of stored chunks)."""
+        merged = self.df.groupBy(*self.keys).agg(*[
+            _REMERGE[k](F.col(s)).alias(s) for s, k in self.kinds.items()
+        ])
+        return Projection(merged, self.keys, dict(self.kinds))
+
     def updated(self, new_states: "Projection") -> "Projection":
-        """Merge a new chunk's projection (same spec) into this one — the
-        background-merge step: union the state rows, re-merge per key.
-        Never re-reads the base table."""
+        """Merge a new chunk's projection (same spec) into this one: union
+        the state rows, re-merge per key. Never re-reads the base table."""
         if new_states.keys != self.keys or new_states.kinds != self.kinds:
             raise ValueError("projection specs differ — rebuild instead")
-        merged = (
-            self.df.unionByName(new_states.df)
-            .groupBy(*self.keys)
-            .agg(*[
-                _REMERGE[k](F.col(s)).alias(s) for s, k in self.kinds.items()
-            ])
-        )
-        return Projection(merged, self.keys, dict(self.kinds))
+        return Projection(
+            self.df.unionByName(new_states.df), self.keys, dict(self.kinds)
+        ).remerged()
 
     # -- persistence ---------------------------------------------------------
     def write(self, path: str) -> None:

@@ -30,9 +30,10 @@ This sink maintains that index incrementally:
   of the SET of seen ids — independent of batch boundaries, arrival
   order, and partition layout (asserted in tests/test_ann_sink.py).
 - **Compaction + serve.** ``compact()`` folds live parts into a new base
-  version committed by one atomic manifest replace (the store's
-  crash-safety argument — every crash point leaves the manifest naming a
-  fully-written base). ``serve()`` unions base +
+  version committed as the next write-once manifest version (the store's
+  crash-safety argument — every crash point leaves the highest manifest
+  naming a fully-written base). Models are ``models/vK.json``, committed
+  through the same write-once commit. ``serve()`` unions base +
   live parts; ``topk()`` probes each generation with its own model via
   the batch ``ivfpq_topk`` operator and merges per-query results.
 
@@ -56,14 +57,13 @@ from functools import reduce
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.pq import ivfpq_encode, ivfpq_fit, ivfpq_topk
 from ..operators.similarity import sample_order_expr
-from .parts import PartStore, start_foreach_batch
+from .parts import ForeachBatchSink, PartStore, WriteOnce
 
 
-class IvfPqIndexSink:
+class IvfPqIndexSink(ForeachBatchSink):
     """Maintain an IVF-PQ index over an append-only (id, vector) stream.
 
     The stream contract is append-only new ids (route updates/deletes
@@ -92,42 +92,25 @@ class IvfPqIndexSink:
     ):
         self.spark = spark
         self.index_dir = index_dir
-        self.store = PartStore(index_dir)
-        self.models_dir = os.path.join(index_dir, "models")
+        self.store = PartStore(spark, index_dir)
+        self._models = WriteOnce(spark, os.path.join(index_dir, "models"), "v", ".json")
         self.n_cells, self.m, self.k = n_cells, m, k
         self.n_iters, self.seed, self.sample_k = n_iters, seed, sample_k
         self.vec_col, self.id_col = vec_col, id_col
-        if model is not None and self._model_versions() == []:
-            self._write_model(0, np.asarray(model[0]), np.asarray(model[1]))
+        if model is not None:  # write-once: a restart keeps the stored v0
+            self._write_model(0, *model)
 
     # -- model store ------------------------------------------------------
 
-    def _model_versions(self) -> list[int]:
-        if not os.path.isdir(self.models_dir):
-            return []
-        return sorted(
-            int(name[1:-5])
-            for name in os.listdir(self.models_dir)
-            if name.startswith("v") and name.endswith(".json")
+    def _write_model(self, version: int, cells, books) -> None:
+        self._models.commit(
+            version,
+            json.dumps({"cells": np.asarray(cells).tolist(),
+                        "books": np.asarray(books).tolist()}),
         )
 
-    def _model_path(self, version: int) -> str:
-        return os.path.join(self.models_dir, f"v{version}.json")
-
-    def _write_model(self, version: int, cells, books) -> None:
-        os.makedirs(self.models_dir, exist_ok=True)
-        tmp = self._model_path(version) + f".tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"cells": np.asarray(cells).tolist(),
-                 "books": np.asarray(books).tolist()},
-                fh,
-            )
-        os.replace(tmp, self._model_path(version))
-
     def load_model(self, version: int) -> "tuple[np.ndarray, np.ndarray]":
-        with open(self._model_path(version)) as fh:
-            d = json.load(fh)
+        d = json.loads(self._models.read(version))
         return (
             np.array(d["cells"], dtype=np.float64),
             np.array(d["books"], dtype=np.float64),
@@ -135,6 +118,13 @@ class IvfPqIndexSink:
 
     def _fit(self, X: "np.ndarray"):
         return ivfpq_fit(X, self.n_cells, self.m, self.k, self.n_iters, self.seed)
+
+    def _train(self, version: int, sample: DataFrame):
+        """Fit a model on ``sample``'s vectors and commit it as ``version``."""
+        X = np.array([r[self.vec_col] for r in sample.collect()], dtype=np.float64)
+        cells, books = self._fit(X)
+        self._write_model(version, cells, books)
+        return cells, books
 
     # -- batch processing -------------------------------------------------
 
@@ -166,45 +156,36 @@ class IvfPqIndexSink:
         if self.store.applied(batch_id):
             return
         sample = self._sample_candidates(batch_df).localCheckpoint(eager=True)
-        versions = self._model_versions()
+        versions = self._models.versions()
         if not versions:
             # Bootstrap generation 0 from this batch's own sample —
-            # deterministic per batch content, atomic write, so a replay
-            # after a crash before the publish finds it already present.
-            rows = sample.collect()
-            X = np.array([r[self.vec_col] for r in rows], dtype=np.float64)
-            cells, books = self._fit(X)
-            self._write_model(0, cells, books)
+            # deterministic per batch content, write-once commit, so a
+            # replay after a crash before the publish finds it present.
+            self._train(0, sample)
             versions = [0]
         version = versions[-1]
         cells, books = self.load_model(version)
         enc = ivfpq_encode(
             batch_df, cells, books, vec_col=self.vec_col, id_col=self.id_col
         ).withColumn("model_version", F.lit(version))
+        self.store.publish(batch_id, lambda part: self._write(enc, sample, part))
 
-        def write(part: str) -> None:
-            enc.write.parquet(os.path.join(part, "codes"))
-            sample.drop("rank_key").write.parquet(os.path.join(part, "sample"))
-
-        self.store.publish(batch_id, write)
-
-    def attach(
-        self, vectors: DataFrame, checkpoint_dir: str, **trigger_kwargs
-    ) -> StreamingQuery:
-        return start_foreach_batch(
-            vectors, self.process_batch, checkpoint_dir, **trigger_kwargs
-        )
+    @staticmethod
+    def _write(codes: DataFrame, sample: DataFrame, directory: str) -> None:
+        """A part or base: its ``codes`` and ``sample`` leaves."""
+        codes.write.parquet(os.path.join(directory, "codes"))
+        sample.drop("rank_key").coalesce(1).write.parquet(os.path.join(directory, "sample"))
 
     # -- read / search ----------------------------------------------------
 
     def serve(self) -> "DataFrame | None":
         """The index: (id, cell, codes, model_version) — base ⊎ live parts."""
-        return self.store.read(self.spark, leaf="codes")
+        return self.store.read(leaf="codes")
 
     def _current_sample(self) -> "DataFrame | None":
         """The training sample over base ⊎ live part samples: the lowest
         ``sample_k`` by md5 rank of every id ever seen."""
-        df = self.store.read(self.spark, leaf="sample")
+        df = self.store.read(leaf="sample")
         return None if df is None else self._lowest_k(df)
 
     def topk(
@@ -249,16 +230,14 @@ class IvfPqIndexSink:
         """Fold live parts into a new base version: codes concatenated per
         generation (never re-encoded), samples reduced to the global
         lowest-k."""
-
-        def write_base(ids: list[int], base: str) -> None:
-            self.store.read(self.spark, ids, "codes").write.parquet(
-                os.path.join(base, "codes")
-            )
-            self._lowest_k(self.store.read(self.spark, ids, "sample")).coalesce(
-                1
-            ).write.parquet(os.path.join(base, "sample"))
-
-        self.store.compact(write_base, through_batch_id)
+        self.store.compact(
+            lambda ids, base: self._write(
+                self.store.read(ids, "codes"),
+                self._lowest_k(self.store.read(ids, "sample")),
+                base,
+            ),
+            through_batch_id,
+        )
 
     def refresh(self) -> int:
         """Centroid/codebook refresh: fold everything live (closing the
@@ -270,11 +249,8 @@ class IvfPqIndexSink:
         sample = self._current_sample()
         if sample is None:
             raise ValueError("refresh() before any batch was indexed")
-        rows = sample.collect()
-        X = np.array([r[self.vec_col] for r in rows], dtype=np.float64)
-        cells, books = self._fit(X)
-        new_version = self._model_versions()[-1] + 1
-        self._write_model(new_version, cells, books)
+        new_version = self._models.versions()[-1] + 1
+        self._train(new_version, sample)
         return new_version
 
     def rebuild(self, source: DataFrame) -> int:
@@ -284,25 +260,14 @@ class IvfPqIndexSink:
         FULL source under it, and commit it as the new base — one
         generation, uniform recall. Watermark advances past every
         current part, so replayed pre-rebuild batches are skipped."""
-        sample_rows = self._sample_candidates(source).collect()
-        X = np.array(
-            [r[self.vec_col] for r in sample_rows], dtype=np.float64
-        )
-        cells, books = self._fit(X)
-        new_model = (self._model_versions()[-1] + 1) if self._model_versions() else 0
-        self._write_model(new_model, cells, books)
+        new_model = (self._models.versions() or [-1])[-1] + 1
+        cells, books = self._train(new_model, self._sample_candidates(source))
 
-        def write_base(base: str) -> None:
-            ivfpq_encode(
-                source, cells, books, vec_col=self.vec_col, id_col=self.id_col
-            ).withColumn("model_version", F.lit(new_model)).write.parquet(
-                os.path.join(base, "codes")
-            )
-            self._sample_candidates(source).drop("rank_key").coalesce(
-                1
-            ).write.parquet(os.path.join(base, "sample"))
-
+        codes = ivfpq_encode(
+            source, cells, books, vec_col=self.vec_col, id_col=self.id_col
+        ).withColumn("model_version", F.lit(new_model))
         self.store.commit_base(
-            write_base, max([self.store.manifest()[1], *self.store.part_ids()])
+            lambda base: self._write(codes, self._sample_candidates(source), base),
+            max([self.store.manifest()[1], *self.store.part_ids()]),
         )
         return new_model

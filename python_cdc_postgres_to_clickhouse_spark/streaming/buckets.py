@@ -41,6 +41,20 @@ def probe(spark: SparkSession, directory: str, pattern: str) -> bool:
     return found is not None and len(found) > 0
 
 
+def listing(spark: SparkSession, directory: str) -> list[str]:
+    """Entry names of ``directory``; [] when it does not exist."""
+    fs, path = hadoop_fs(spark, directory)
+    if not fs.exists(path):
+        return []
+    return [status.getPath().getName() for status in fs.listStatus(path)]
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Remove ``path`` recursively; a missing path is no error."""
+    fs, jpath = hadoop_fs(spark, path)
+    fs.delete(jpath, True)
+
+
 class BucketedState:
     def __init__(
         self,
@@ -114,5 +128,4 @@ class BucketedState:
             .partitionBy("bucket")
             .parquet(self.state_dir)
         )
-        fs, path = hadoop_fs(self.spark, tmp)
-        fs.delete(path, True)
+        delete(self.spark, tmp)

@@ -5,7 +5,7 @@ hash of the block's content, remembering the most recent
 ``replicated_deduplication_window`` hashes — a producer that RETRIES the
 same rows (a new insert, a new batch id, after a timeout it cannot
 distinguish from failure) is silently dropped instead of double-applied.
-The engine's batch-id markers (rollup/projection sinks) only cover
+The parts sinks' publish-once parts (``parts.PartStore``) only cover
 checkpoint REPLAYS of the same micro-batch; this sink also covers
 producer-side resends, which arrive under fresh batch ids.
 
@@ -18,7 +18,9 @@ dropping the second IS the correct dedup.
 
 Scale: the hash is one map-side pass + a 3-number aggregate (no shuffle of
 the data, no sort); the hash window is a driver-side JSON file of ≤N
-16-byte digests. Appends are plain parquet appends — no read-modify-write
+16-byte digests, committed per batch as the next version of
+``_block_hashes/K.json`` through ``parts.WriteOnce`` (Hadoop FS API, so a
+``file://`` or remote ``out_dir`` keeps its window beside its data). Appends are plain parquet appends — no read-modify-write
 of existing state, so block size, not table size, bounds each commit.
 """
 
@@ -27,8 +29,11 @@ from __future__ import annotations
 import json
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .parts import WriteOnce
 
 
 def block_hash(df: DataFrame) -> str | None:
@@ -59,40 +64,38 @@ class InsertDedupSink:
         self.spark = spark
         self.out_dir = out_dir
         self.dedup_window = dedup_window
-        self._hash_file = os.path.join(out_dir, "_block_hashes.json")
+        # A "_" directory: Spark's reader skips it inside the data dir.
+        self._window = WriteOnce(spark, os.path.join(out_dir, "_block_hashes"), "", ".json")
 
-    def _recent_hashes(self) -> list[str]:
-        if not os.path.exists(self._hash_file):
-            return []
+    def _recent_hashes(self) -> tuple[int, list[str]]:
+        """(window version, its hashes); (-1, []) before the first block."""
+        versions = self._window.versions()
+        if not versions:
+            return -1, []
         try:
-            with open(self._hash_file) as f:
-                return json.load(f)
-        except (json.JSONDecodeError, OSError):
+            return versions[-1], json.loads(self._window.read(versions[-1]))
+        except (ValueError, Py4JJavaError):
             # A torn/unreadable hash record must not wedge the sink: the
             # data commits landed, only dedup memory is lost — treat as
             # empty and accept the documented at-least-once residual.
-            return []
+            return versions[-1], []
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         digest = block_hash(batch_df)
         if digest is None:
             return
-        recent = self._recent_hashes()
+        version, recent = self._recent_hashes()
         if digest in recent:
             return  # a resent/replayed block — the whole point
         batch_df.write.mode("append").parquet(self.out_dir)
         # Hash recorded AFTER the data commit: a crash in between replays
-        # as a duplicate (at-least-once residual, same ordering rationale
-        # as the rollup sink's markers); the reverse order would silently
-        # LOSE the block on a crash, which is worse.
+        # as a duplicate (at-least-once residual); the reverse order would
+        # silently LOSE the block on a crash, which is worse. The record is
+        # a new write-once version, so a crash mid-write never leaves a
+        # torn newest window.
         recent.append(digest)
-        os.makedirs(self.out_dir, exist_ok=True)
-        # Atomic record: write-temp + os.replace so a crash mid-write can
-        # never leave corrupt JSON (which would fail every later batch).
-        tmp = self._hash_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(recent[-self.dedup_window:], f)
-        os.replace(tmp, self._hash_file)
+        if self._window.commit(version + 1, json.dumps(recent[-self.dedup_window:])):
+            self._window.drop_below(version + 1)
 
     def current(self) -> DataFrame:
         return self.spark.read.parquet(self.out_dir)

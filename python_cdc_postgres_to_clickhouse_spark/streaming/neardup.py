@@ -41,12 +41,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import dedup as D
 from ..operators.textstats import portable_hash32, tokens
 from .buckets import probe
-from .parts import start_foreach_batch
+from .parts import ForeachBatchSink
 
 
 def _signatures(docs: DataFrame, n_hashes: int, shingle: int, id_col: str, text_col: str) -> DataFrame:
@@ -89,7 +88,7 @@ def greedy_suppress(edges: list[tuple[int, int]], candidates: list[int]) -> set[
     return suppressed
 
 
-class StreamingNearDupFilter:
+class StreamingNearDupFilter(ForeachBatchSink):
     """foreachBatch sink maintaining an accepted-corpus LSH index.
 
     State layout (all append-only Parquet — no rewrites, so a micro-batch
@@ -265,10 +264,3 @@ class StreamingNearDupFilter:
             )
         sig.unpersist()
         bands.unpersist()
-
-    def attach(
-        self, doc_stream: DataFrame, checkpoint_dir: str, **trigger_kwargs
-    ) -> StreamingQuery:
-        return start_foreach_batch(
-            doc_stream, self.process_batch, checkpoint_dir, **trigger_kwargs
-        )

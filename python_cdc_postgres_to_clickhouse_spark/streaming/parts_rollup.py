@@ -12,8 +12,8 @@ docker-compose.yml:155-166), through the shared ``parts.PartStore``:
   — ClickHouse's AggregatingMergeTree read semantics. Cost is O(live
   parts), bounded by compaction.
 - **Background merge = compaction.** ``compact()`` folds parts into a new
-  base version committed by one atomic manifest replace; the crash-safety
-  argument is the store's.
+  base version committed as the next write-once manifest version; the
+  crash-safety argument is the store's.
 
 At 100 TB: each part is a few-KB-to-MB partial aggregate (one row per
 (bucket, dims) the batch touched), the stream never rewrites history, and
@@ -25,22 +25,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .parts import PartStore, start_foreach_batch
+from .parts import ForeachBatchSink, PartStore
 
 _N_T = "bigint"
 _SUM_T = "decimal(38,6)"
 
 
-class PartedRollupSink:
+class PartedRollupSink(ForeachBatchSink):
     """Per-(hour, event_type) additive partials of an append-only event
     stream, stored as one part per micro-batch + a versioned compacted base."""
 
     def __init__(self, spark: SparkSession, rollup_dir: str):
         self.spark = spark
         self.rollup_dir = rollup_dir
-        self.store = PartStore(rollup_dir)
+        self.store = PartStore(spark, rollup_dir)
 
     @staticmethod
     def _partials(df: DataFrame) -> DataFrame:
@@ -71,15 +70,10 @@ class PartedRollupSink:
             batch_id, self._partials(batch_df).coalesce(1).write.parquet
         )
 
-    def attach(self, events: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
-        return start_foreach_batch(
-            events, self.process_batch, checkpoint_dir, **trigger_kwargs
-        )
-
     def serve(self) -> DataFrame | None:
         """Merge-at-read: base ⊎ live parts, summed — AggregatingMergeTree's
         SELECT semantics. Derived metrics from the partials."""
-        df = self.store.read(self.spark)
+        df = self.store.read()
         if df is None:
             return None
         return self._merged(df).select(
@@ -96,7 +90,7 @@ class PartedRollupSink:
         """Fold live parts <= ``through_batch_id`` (default: all) into a new
         base version."""
         self.store.compact(
-            lambda ids, base: self._merged(self.store.read(self.spark, ids))
+            lambda ids, base: self._merged(self.store.read(ids))
             .coalesce(1)
             .write.parquet(base),
             through_batch_id,

@@ -5,27 +5,23 @@ ClickHouse maintains table PROJECTIONs at insert/merge time; ``ddl.
 translate_ddl`` parses ``PROJECTION`` entries into ``ProjectionSpec``s and
 ``operators/projection.py`` gives them batch build/answer/route semantics —
 this sink is the third leg: DDL → operator → continuous maintenance. Each
-micro-batch contributes one partial-aggregated chunk of states which is
-re-merged into the stored state (count→sum, sum→sum, min/max→themselves,
-uniq→HLL register-max union) — the same ⊕ the MergeTree background merge
-applies to projection parts.
+micro-batch contributes one partial-aggregated chunk of states, stored as
+one part of a ``parts.PartStore``; ``projection()`` reads base ⊎ live
+parts and ``Projection.answer`` re-merges the states per group (count→sum,
+sum→sum, min/max→themselves, uniq→HLL register-max union) — the same ⊕ the
+MergeTree background merge applies to projection parts, which
+``compact()`` runs to fold parts into a new base.
 
-Exactly-once: sum/count states are ADDITIVE, so unlike the pure-HLL sketch
-sink a replayed batch would double-count. Applied-batch markers (written
-through the Hadoop FileSystem API so remote state dirs behave — the
-sketch-sink lesson) make the common replay path (state committed, stream
-checkpoint not) a no-op; the residual crash window between state write and
-marker write stays at-least-once. The exactly-once alternative is the
-parts protocol of ``parts.PartStore`` (publish-once parts, merge at read),
-which is local-filesystem only; moving this sink onto it needs a
-remote-safe manifest commit.
+Exactly-once: sum/count states are ADDITIVE, so a replayed batch must not
+add its chunk twice. Batch N publishes its chunk once as part N; a replay
+finds the part (or the compacted watermark) and is skipped — no marker
+file, no crash window between a state write and a marker.
 
-At 100 TB: state size is |distinct keys|, independent of stream volume;
-with ``partition_key`` set (one of the projection keys) each merge touches
-only the key partitions present in the batch via dynamic partition
-overwrite. Without it the WHOLE state re-writes per batch — only for
-small-key projections (that branch localCheckpoints the merge first, since
-a full non-dynamic overwrite deletes the input path before the job runs).
+At 100 TB: a part holds one row per key the batch touched and is never
+rewritten; read cost is O(live parts), bounded by compaction, and the base
+is |distinct keys| rows. With ``partition_key`` set (one of the projection
+keys) parts and bases are written ``partitionBy(partition_key)``, so a
+key-filtered serve prunes every part to that key's directory.
 
 Decimal note: Spark widens decimal sums per aggregation level — pin sum
 measures to a fixed decimal type (or use integer cents) or re-merged
@@ -35,15 +31,12 @@ states drift in parquet schema across batches (the parts_rollup lesson).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.projection import Projection, build_projection
-from .buckets import hadoop_fs, probe
-from .parts import start_foreach_batch
+from .parts import ForeachBatchSink, PartStore
 
 
-class ProjectionSink:
+class ProjectionSink(ForeachBatchSink):
     def __init__(
         self,
         spark: SparkSession,
@@ -60,6 +53,7 @@ class ProjectionSink:
         self.measures = measures
         self.kinds = {n: kind for n, (kind, _) in measures.items()}
         self.partition_key = partition_key
+        self.store = PartStore(spark, state_dir)
 
     @classmethod
     def from_spec(cls, spark, state_dir: str, spec,
@@ -69,54 +63,39 @@ class ProjectionSink:
         keys, measures = spec.to_operator_args()
         return cls(spark, state_dir, keys, measures, partition_key)
 
-    def _marker(self, batch_id: int):
-        return hadoop_fs(self.spark, f"{self.state_dir}/_applied/batch-{batch_id}")
+    def _writer(self, states: DataFrame):
+        """``write(dir)`` for a part or base of ``states``."""
+        out = states.coalesce(1).write
+        if self.partition_key is not None:
+            out = out.partitionBy(self.partition_key)
+        return out.parquet
+
+    def _states(self, part_ids: list[int] | None = None) -> Projection:
+        df = self.store.read(part_ids)
+        if df is None:
+            raise ValueError(f"{self.state_dir}: no projection state yet")
+        return Projection(df, tuple(self.keys), dict(self.kinds))
 
     # -- the merge -----------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        fs, marker = self._marker(batch_id)
-        if fs.exists(marker):
-            return  # replayed batch: already merged, checkpoint lagged
-        incoming = build_projection(batch_df, self.keys, self.measures)
-        if not incoming.df.take(1):
+        if self.store.applied(batch_id) or batch_df.isEmpty():
             return
-        merged = incoming
-        # Any entry but the hidden ones (_applied/, _SUCCESS, .crc files).
-        if probe(self.spark, self.state_dir, "[!_.]*"):
-            stored = self.spark.read.parquet(self.state_dir)
-            if self.partition_key is not None:
-                touched = [
-                    r[0] for r in
-                    incoming.df.select(self.partition_key).distinct().collect()
-                ]
-                stored = stored.filter(F.col(self.partition_key).isin(touched))
-            merged = Projection(
-                stored, tuple(self.keys), dict(self.kinds)
-            ).updated(incoming)
-        out = merged.df.coalesce(1)
-        if self.partition_key is not None:
-            (out.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy(self.partition_key).parquet(self.state_dir))
-        else:
-            # full overwrite deletes the dir BEFORE the job runs — pin the
-            # merge in memory first so the read side is never pulled from
-            # the path being replaced
-            out = out.localCheckpoint()
-            out.write.mode("overwrite").parquet(self.state_dir)
-        fs.create(marker, True).close()
+        incoming = build_projection(batch_df, self.keys, self.measures)
+        self.store.publish(batch_id, self._writer(incoming.df))
 
-    def attach(self, stream: DataFrame, checkpoint_dir: str,
-               **trigger_kwargs) -> StreamingQuery:
-        return start_foreach_batch(
-            stream, self.process_batch, checkpoint_dir, **trigger_kwargs
+    def compact(self, through_batch_id: int | None = None) -> None:
+        """Fold live parts <= ``through_batch_id`` (default: all) into a new
+        base of one re-merged state row per key."""
+        self.store.compact(
+            lambda ids, base: self._writer(self._states(ids).remerged().df)(base),
+            through_batch_id,
         )
 
     # -- reads ----------------------------------------------------------------
     def projection(self) -> Projection:
-        return Projection.read(
-            self.spark, self.state_dir, list(self.keys), dict(self.kinds)
-        )
+        """The stored states, base ⊎ live parts: a key may have one row per
+        part, which ``answer`` re-merges."""
+        return self._states()
 
     def serve(self, group_keys: list[str], asked: dict[str, tuple]) -> DataFrame:
         """Answer a covered GROUP BY from the maintained state — the routed

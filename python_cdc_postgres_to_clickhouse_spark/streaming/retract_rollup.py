@@ -45,9 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .parts import PartStore, start_foreach_batch
+from .parts import ForeachBatchSink, PartStore
 from .upsert_sink import ParquetUpsertSink
 
 # Fixed partial types: decimal widths must not drift across batches or the
@@ -56,7 +55,7 @@ _N_T = "bigint"
 _SUM_T = "decimal(38,0)"
 
 
-class RetractRollupSink:
+class RetractRollupSink(ForeachBatchSink):
     """Maintains ``GROUP BY group_expr`` counts/sums of the live CDC state.
 
     ``group_expr`` / ``metric_expr`` are SQL expressions over the flat
@@ -79,7 +78,7 @@ class RetractRollupSink:
         self.group_expr = group_expr
         self.metric_expr = metric_expr
         self.keys = list(keys)
-        self.store = PartStore(rollup_dir)
+        self.store = PartStore(spark, rollup_dir)
         self._state = ParquetUpsertSink(
             spark, state_dir, keys=keys, order_by=order_by, n_buckets=n_buckets
         )
@@ -128,18 +127,11 @@ class RetractRollupSink:
 
     # -- API --------------------------------------------------------------
 
-    def attach(
-        self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
-    ) -> StreamingQuery:
-        return start_foreach_batch(
-            changes, self.process_batch, checkpoint_dir, **trigger_kwargs
-        )
-
     def serve(self) -> DataFrame | None:
         """Live per-group aggregates: base ⊎ live delta parts, summed at
         read time; groups whose rows all retracted away net to zero and are
         dropped here."""
-        df = self.store.read(self.spark)
+        df = self.store.read()
         if df is None:
             return None
         return self._merged(df).filter(F.col("n_rows") > 0)
@@ -148,7 +140,7 @@ class RetractRollupSink:
         """Fold live delta parts <= ``through_batch_id`` (default: all) into
         a new base of one row per live group."""
         self.store.compact(
-            lambda ids, base: self._merged(self.store.read(self.spark, ids))
+            lambda ids, base: self._merged(self.store.read(ids))
             .filter(F.col("n_rows") != 0)
             .coalesce(1)
             .write.parquet(base),

@@ -53,10 +53,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.cdc import OP_DELETE
 from .buckets import BucketedState
-from .parts import start_foreach_batch
+from .parts import ForeachBatchSink, start_foreach_batch
 
 
-class Scd2HistorySink:
+class Scd2HistorySink(ForeachBatchSink):
     def __init__(
         self,
         spark: SparkSession,
@@ -105,13 +105,6 @@ class Scd2HistorySink:
                 batch_df, allowMissingColumns=True
             )
         self.store.write(self._recompute(batch_df))
-
-    def attach(
-        self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
-    ) -> StreamingQuery:
-        return start_foreach_batch(
-            changes, self.process_batch, checkpoint_dir, **trigger_kwargs
-        )
 
     # -- serving reads -----------------------------------------------------
 

@@ -27,15 +27,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .buckets import probe
-from .parts import start_foreach_batch
+from .parts import ForeachBatchSink
 
 HLL_LGK = 12
 
 
-class DistinctSketchSink:
+class DistinctSketchSink(ForeachBatchSink):
     """Maintains per-(hour, event_type) HLL sketches of distinct users."""
 
     def __init__(self, spark: SparkSession, state_dir: str, lgk: int = HLL_LGK):
@@ -80,11 +79,6 @@ class DistinctSketchSink:
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day")
             .parquet(self.state_dir)
-        )
-
-    def attach(self, events: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
-        return start_foreach_batch(
-            events, self.process_batch, checkpoint_dir, **trigger_kwargs
         )
 
     def serve(self) -> DataFrame:

@@ -26,14 +26,13 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
 from .buckets import BucketedState
-from .parts import start_foreach_batch
+from .parts import ForeachBatchSink
 
 
-class ParquetUpsertSink:
+class ParquetUpsertSink(ForeachBatchSink):
     def __init__(
         self,
         spark: SparkSession,
@@ -79,14 +78,6 @@ class ParquetUpsertSink:
         merged = self.merge(batch_df)
         if merged is not None:
             self.store.write(merged[2])
-
-    def attach(
-        self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
-    ) -> StreamingQuery:
-        """Start the continuous upsert: changes stream → bucketed state."""
-        return start_foreach_batch(
-            changes, self.process_batch, checkpoint_dir, **trigger_kwargs
-        )
 
     def current_state(self) -> DataFrame | None:
         state = self.store.read()

@@ -153,11 +153,11 @@ def test_bootstrap_model_trains_once_and_is_replay_stable(spark, tmp_path):
     chunks = _chunks(_emb(spark), 3)
     sink = _sink(spark, tmp_path, "idx")
     sink.process_batch(chunks[0], 0)
-    assert sink._model_versions() == [0]
-    model_bytes = open(sink._model_path(0), "rb").read()
+    assert sink._models.versions() == [0]
+    model_bytes = open(sink._models.path(0), "rb").read()
     exp = _index_set(sink)
     sink.process_batch(chunks[0], 0)
-    assert open(sink._model_path(0), "rb").read() == model_bytes
+    assert open(sink._models.path(0), "rb").read() == model_bytes
     assert _index_set(sink) == exp
     # The trained model reproduces outside the sink: same sample rows →
     # same fit (ivfpq_fit is shared pure numpy).
@@ -172,6 +172,29 @@ def test_bootstrap_model_trains_once_and_is_replay_stable(spark, tmp_path):
     cells, books = sink._fit(X)
     g_cells, g_books = sink.load_model(0)
     assert np.array_equal(cells, g_cells) and np.array_equal(books, g_books)
+
+
+def test_uri_index_dir_bootstraps_and_serves_like_a_path(spark, tmp_path):
+    """Under a ``file://`` index dir the bootstrap model commits through the
+    Hadoop-FS write-once commit, once, and the index equals a plain-path
+    run's."""
+    chunks = _chunks(_emb(spark), 3)
+    uri = IvfPqIndexSink(
+        spark, (tmp_path / "uri").as_uri(), n_cells=8, m=8, k=16, seed=SEED
+    )
+    path = _sink(spark, tmp_path, "path")
+    for sink in (uri, path):
+        sink.process_batch(chunks[0], 0)
+        sink.process_batch(chunks[0], 0)  # replay
+        sink.process_batch(chunks[1], 1)
+    assert uri._models.versions() == [0]
+    assert (tmp_path / "uri" / "models" / "v0.json").read_bytes() == (
+        tmp_path / "path" / "models" / "v0.json"
+    ).read_bytes()
+    assert _index_set(uri) == _index_set(path)
+    uri.compact()
+    assert uri.store.part_ids() == []
+    assert _index_set(uri) == _index_set(path)
 
 
 @pytest.mark.heavy

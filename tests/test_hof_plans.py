@@ -15,6 +15,8 @@ Two plan shapes waste the interpreted lambda work these queries do:
   holding a higher-order function below that exchange runs the fold again,
   in the single scan task (Catalyst pushes inferred filters, such as
   InferFiltersFromGenerate's `size(arr) > 0`, through the repartition).
+  The same holds for a fold computed before a widen: the MinHash shingle
+  cache must fold after its repartition, not in the scan task.
 
 The physical plans are walked through the JVM, into cached relations and
 adaptive plans; expressions are read from their JSON form.
@@ -24,7 +26,9 @@ from __future__ import annotations
 
 import json
 
+from python_cdc_postgres_to_clickhouse_spark.operators.dedup import minhash_near_duplicates
 from python_cdc_postgres_to_clickhouse_spark.registry import all_queries
+from python_cdc_postgres_to_clickhouse_spark.tables import load_tables
 
 from .conftest import SF_ORACLE
 
@@ -122,3 +126,48 @@ def test_higher_order_functions_do_no_row_work_per_element(spark):
             "x_dup_span_detect", "sql_ch_ngram_profile"} <= set(with_hofs)
     assert not row_work, f"row work inside lambda bodies: {row_work}"
     assert not filters, f"lambda filters below a round-robin exchange: {filters}"
+
+
+def _cached_plans(plan, out: list) -> None:
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _cached_plans(plan.executedPlan(), out)
+    if kind.endswith("QueryStageExec"):
+        return _cached_plans(plan.plan(), out)
+    if kind == "InMemoryTableScanExec":
+        out.append(plan.relation().cacheBuilder().cachedPlan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        _cached_plans(kids.apply(i), out)
+
+
+def _hof_sides(plan, below_exchange: bool, sides: dict) -> None:
+    """Record, per side of the first shuffle exchange, whether an operator
+    holding a higher-order function sits there."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _hof_sides(plan.executedPlan(), below_exchange, sides)
+    if kind.endswith("QueryStageExec"):
+        return _hof_sides(plan.plan(), below_exchange, sides)
+    below_exchange = below_exchange or kind == "ShuffleExchangeExec"
+    exprs = plan.expressions()
+    for i in range(exprs.size()):
+        if _any(_tree(json.loads(exprs.apply(i).toJSON())), lambda n: n["kind"] in _HOFS):
+            sides["below" if below_exchange else "above"] = True
+    kids = plan.children()
+    for i in range(kids.size()):
+        _hof_sides(kids.apply(i), below_exchange, sides)
+
+
+def test_minhash_shingle_fold_runs_after_the_widen(spark):
+    """The cached MinHash shingle frame of a small one-file corpus folds its
+    shingles after the widening exchange, not in the single scan task."""
+    docs = load_tables(spark, SF_ORACLE)["documents"]
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    out = minhash_near_duplicates(docs, threshold=0.6)
+    cached = []
+    _cached_plans(out._jdf.queryExecution().executedPlan(), cached)
+    sides = {"above": False, "below": False}
+    for plan in cached:
+        _hof_sides(plan, False, sides)
+    assert sides == {"above": True, "below": False}, sides

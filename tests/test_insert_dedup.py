@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 from python_cdc_postgres_to_clickhouse_spark.streaming.insert_dedup import (
     InsertDedupSink,
     block_hash,
@@ -14,8 +17,27 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_resent_block_applies_once_even_under_new_batch_id(spark, tmp_path):
-    sink = InsertDedupSink(spark, str(tmp_path / "t"))
+def _window_file(sink) -> str:
+    """The newest committed hash-window file."""
+    return sink._window.path(sink._window.versions()[-1])
+
+
+def test_resent_block_applies_once_even_under_new_batch_id(spark, tmp_path, monkeypatch):
+    _resend_is_dropped(spark, tmp_path, monkeypatch, uri=False)
+
+
+def test_resent_block_applies_once_at_file_uri(spark, tmp_path, monkeypatch):
+    """The hash window lives beside the data under a URI too, never in a
+    stray "file:" directory under the working directory."""
+    _resend_is_dropped(spark, tmp_path, monkeypatch, uri=True)
+
+
+def _resend_is_dropped(spark, tmp_path, monkeypatch, uri):
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = tmp_path / "t"
+    sink = InsertDedupSink(spark, out.as_uri() if uri else str(out))
     block = [(1, "a"), (2, "b"), (3, "c")]
     sink.process_batch(_df(spark, block), 0)
     sink.process_batch(_df(spark, block), 1)          # resend, NEW batch id
@@ -23,6 +45,9 @@ def test_resent_block_applies_once_even_under_new_batch_id(spark, tmp_path):
     assert sink.current().count() == 3
     sink.process_batch(_df(spark, [(4, "d")]), 3)     # genuinely new block
     assert sink.current().count() == 4
+    assert os.listdir(cwd) == []
+    # Only the newest window version is kept.
+    assert sorted(os.listdir(out / "_block_hashes")) == [".1.json.crc", "1.json"]
 
 
 def test_block_hash_is_order_insensitive_and_content_sensitive(spark):
@@ -59,13 +84,12 @@ def test_empty_batch_is_a_noop(spark, tmp_path):
 
 
 def test_corrupt_hash_record_does_not_wedge_the_sink(spark, tmp_path):
-    """A crash mid-record-write may leave torn JSON; the sink must treat
-    it as an empty window (at-least-once residual), never raise."""
-    import os
-
+    """A torn newest hash record (written outside the sink's write-once
+    commit) must be read as an empty window (at-least-once residual),
+    never raise."""
     sink = InsertDedupSink(spark, str(tmp_path / "c"))
     sink.process_batch(_df(spark, [(1, "a")]), 0)
-    with open(sink._hash_file, "w") as f:
+    with open(_window_file(sink), "w") as f:
         f.write('["abc", "de')  # torn mid-write
     sink.process_batch(_df(spark, [(2, "b")]), 1)  # must not raise
     assert sink.current().count() == 2
@@ -75,13 +99,10 @@ def test_corrupt_hash_record_does_not_wedge_the_sink(spark, tmp_path):
 
 
 def test_hash_record_write_is_atomic(spark, tmp_path):
-    """The record lands via temp-file + os.replace — no .tmp residue and
-    valid JSON after every batch."""
-    import json
-    import os
-
+    """The record lands via temp file + rename onto a new version — no temp
+    residue and valid JSON after every batch."""
     sink = InsertDedupSink(spark, str(tmp_path / "a"))
     sink.process_batch(_df(spark, [(1, "a")]), 0)
-    assert not os.path.exists(sink._hash_file + ".tmp")
-    with open(sink._hash_file) as f:
+    assert not [n for n in os.listdir(tmp_path / "a" / "_block_hashes") if "tmp" in n]
+    with open(_window_file(sink)) as f:
         assert isinstance(json.load(f), list)

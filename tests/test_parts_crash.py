@@ -3,7 +3,10 @@
 Each case makes one step of ``parts.PartStore`` raise, then performs the
 recovery a restarted stream or compaction job would (replay the batch, or
 re-run ``compact``), and asserts the served result equals a clean run over
-the same tiny inputs. Crash points:
+the same tiny inputs. The matrix runs with the store at a plain path and
+again at a ``file://`` URI (the Hadoop FS code path a remote directory
+takes).
+Crash points:
 
 - ``staged``: the part is written to staging, the rename never happens;
 - ``published``: the part is published, the stream never commits the batch
@@ -21,6 +24,7 @@ import os
 import numpy as np
 import pytest
 
+from python_cdc_postgres_to_clickhouse_spark.ddl import translate_ddl
 from python_cdc_postgres_to_clickhouse_spark.operators.pq import ivfpq_fit
 from python_cdc_postgres_to_clickhouse_spark.sources.cdc import (
     ChangeLogFixture,
@@ -31,11 +35,14 @@ from python_cdc_postgres_to_clickhouse_spark.sources.cdc import (
 from python_cdc_postgres_to_clickhouse_spark.streaming.ann_index_sink import IvfPqIndexSink
 from python_cdc_postgres_to_clickhouse_spark.streaming.parts import PartStore
 from python_cdc_postgres_to_clickhouse_spark.streaming.parts_rollup import PartedRollupSink
+from python_cdc_postgres_to_clickhouse_spark.streaming.projection_sink import (
+    ProjectionSink,
+)
 from python_cdc_postgres_to_clickhouse_spark.streaming.retract_rollup import (
     RetractRollupSink,
 )
 
-SINKS = ("rollup", "ann", "retract")
+SINKS = ("rollup", "ann", "retract", "projection")
 CRASH_POINTS = ("staged", "published", "base_write", "before_gc")
 
 
@@ -149,7 +156,53 @@ def _retract_case(spark):
     return make, batches, served
 
 
-_CASES = {"rollup": _rollup_case, "ann": _ann_case, "retract": _retract_case}
+_PROJECTION_DDL = """
+CREATE TABLE metrics (
+    user_id UInt64, event_type String, ts DateTime, value Float64,
+    PROJECTION p (
+        SELECT event_type, toStartOfDay(ts), count(),
+               sum(toInt64(round(value * 100))), uniq(user_id), max(value)
+        GROUP BY event_type, toStartOfDay(ts)
+    )
+) ENGINE = MergeTree ORDER BY (event_type, ts)
+"""
+
+
+def _projection_case(spark):
+    t0 = dt.datetime(2024, 1, 1)
+    batches = [
+        spark.createDataFrame(
+            [
+                (i % 4, f"t{i % 2}", t0 + dt.timedelta(hours=7 * (b * 5 + i)), 0.5 * (b * 5 + i))
+                for i in range(5)
+            ],
+            "user_id bigint, event_type string, ts timestamp, value double",
+        )
+        for b in range(3)
+    ]
+    spec = translate_ddl(_PROJECTION_DDL).projections[0]
+    asked = {
+        "n": ("count", "n"),
+        "cents": ("sum", "sum_toint64_round_value_100"),
+        "users": ("uniq", "uniq_user_id"),
+        "top": ("max", "max_value"),
+    }
+
+    def make(root):
+        return ProjectionSink.from_spec(spark, root, spec, partition_key="event_type")
+
+    def served(sink):
+        return {tuple(r) for r in sink.serve(["event_type"], asked).collect()}
+
+    return make, batches, served
+
+
+_CASES = {
+    "rollup": _rollup_case,
+    "ann": _ann_case,
+    "retract": _retract_case,
+    "projection": _projection_case,
+}
 
 
 @pytest.fixture(scope="module")
@@ -170,9 +223,21 @@ def clean_served(spark, tmp_path_factory):
 def test_crash_then_recovery_serves_clean_result(
     spark, tmp_path, monkeypatch, clean_served, kind, point
 ):
+    _crash_then_recover(spark, tmp_path, monkeypatch, clean_served, kind, point, uri=False)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+@pytest.mark.parametrize("kind", SINKS)
+def test_crash_then_recovery_serves_clean_result_at_file_uri(
+    spark, tmp_path, monkeypatch, clean_served, kind, point
+):
+    _crash_then_recover(spark, tmp_path, monkeypatch, clean_served, kind, point, uri=True)
+
+
+def _crash_then_recover(spark, tmp_path, monkeypatch, clean_served, kind, point, uri):
     make, batches, served = _CASES[kind](spark)
     expected = clean_served[kind]
-    sink = make(str(tmp_path))
+    sink = make(tmp_path.as_uri() if uri else str(tmp_path))
     if point in ("staged", "published"):
         sink.process_batch(batches[0], 0)
         with monkeypatch.context() as m:
@@ -201,19 +266,33 @@ def test_crash_then_recovery_serves_clean_result(
         sink.compact()
     assert served(sink) == expected
     store = sink.store
-    assert store.part_ids() == [] and store.manifest()[1] == 2
-    left = {"MANIFEST", "parts", f"base_v{store.manifest()[0]}"}
-    assert set(os.listdir(store.root)) - {"models"} == left
-    assert os.listdir(store.parts_dir) == []
+    version, watermark = store.manifest()
+    assert store.part_ids() == [] and watermark == 2
+    # Only the live manifest and base are left (plus the checksum file
+    # Hadoop's local filesystem writes beside the manifest).
+    root = tmp_path / "rollup" if kind == "retract" else tmp_path
+    left = {f"MANIFEST.{version}", "parts", f"base_v{version}", f".MANIFEST.{version}.crc"}
+    assert set(os.listdir(root)) - {"models"} == left
+    assert os.listdir(root / "parts") == []
 
 
-def test_gc_sweeps_staging_of_folded_batches_only(tmp_path):
-    store = PartStore(str(tmp_path))
+def test_gc_sweeps_staging_of_folded_batches_only(spark, tmp_path):
+    store = PartStore(spark, str(tmp_path))
     for name in ("_staging_1.123", "_staging_4.123"):
         os.makedirs(os.path.join(store.parts_dir, name))
-    store.commit_manifest(0, 2)
-    os.makedirs(store.base_dir(0))
-    store.gc(0, 2)
+    for version in (0, 1):
+        store.commit_manifest(version, 2)
+        os.makedirs(store.base_dir(version))
+    # A manifest version is written once: the first commit wins.
+    with pytest.raises(RuntimeError, match="already committed"):
+        store.commit_manifest(1, 3)
+    assert store.manifest() == (1, 2)
+    store.gc(1, 2)
     # Batch 1 is folded, so its staging is stale; batch 4 may be in flight.
     assert os.listdir(store.parts_dir) == ["_staging_4.123"]
+    # The superseded manifest and base go; the live ones stay.
+    assert sorted(n for n in os.listdir(tmp_path) if not n.startswith(".")) == [
+        "MANIFEST.1", "base_v1", "parts"
+    ]
+    assert store.manifest() == (1, 2)
     assert store.applied(2) and not store.applied(4)

@@ -1,5 +1,6 @@
-"""Streaming projection maintenance: chunked ≡ monolithic states, marker
-replay no-op, DDL-spec wiring, and served answers vs direct aggregates."""
+"""Streaming projection maintenance: chunked ≡ monolithic states, replay
+no-op through publish-once parts, DDL-spec wiring, and served answers vs
+direct aggregates."""
 
 from __future__ import annotations
 
@@ -110,7 +111,7 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     sink.process_batch(first, 0)
     sink.process_batch(second, 1)
     before = _check(sink, events)
-    sink.process_batch(second, 1)  # replay: marker makes it a no-op
+    sink.process_batch(second, 1)  # replay: part 1 is published, a no-op
     after = {r["event_type"]: r
              for r in sink.serve(["event_type"], ASKED).collect()}
     assert {k: tuple(v) for k, v in before.items()} == {
@@ -119,8 +120,8 @@ def test_replayed_batch_is_noop(spark, tmp_path):
 
 
 def test_unpartitioned_state_full_overwrite(spark, tmp_path):
-    """partition_key=None: whole-state rewrite per batch (small-key mode) —
-    the localCheckpoint must protect the read-side from the overwrite."""
+    """partition_key=None: each batch's part is one unpartitioned file (small-key
+    mode), and the served answer re-merges states across the parts."""
     events = _events(spark)
     spec = translate_ddl(DDL).projections[0]
     sink = ProjectionSink.from_spec(spark, str(tmp_path / "s"), spec)
@@ -142,7 +143,7 @@ def test_rejects_partition_key_outside_keys(spark, tmp_path):
 def test_restart_on_same_checkpoint_adds_nothing(spark, tmp_path):
     """Re-attaching over the same files + checkpoint must leave the state
     byte-identical: the stream replays no batches, and even a crash-replay
-    of the last batch is marker-guarded."""
+    of the last batch finds its part published."""
     events = _events(spark)
     src = str(tmp_path / "src")
     events.repartition(4).write.parquet(src)
