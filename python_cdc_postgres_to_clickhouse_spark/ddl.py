@@ -33,12 +33,20 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .dialect import DialectError, translate
+from .dialect import Ddl, DialectError, DictionarySpec, translate
 
 __all__ = ["DdlPlan", "MvPlan", "MaintenancePlan", "ProjectionSpec", "KafkaEngineSpec",
            "DictionaryPlan", "translate_dictionary",
            "map_type", "translate_ddl", "translate_mv",
            "translate_maintenance"]
+
+
+def _expr(ch: str, where: bool = False) -> str:
+    """One ClickHouse expression (a WHERE predicate if ``where``) in Spark SQL."""
+    if where:
+        out = translate(f"SELECT 1 FROM t WHERE {ch}")
+        return out[out.upper().index("WHERE") + 6:]
+    return translate(f"SELECT {ch} FROM t")[7:-7]
 
 
 # ---------------------------------------------------------------------------
@@ -222,17 +230,14 @@ def _parse_projection(raw: str) -> ProjectionSpec:
 
     if group_raw is None:
         # reorder projection: alternate physical order, no aggregation
-        order = [
-            translate(f"SELECT {k} FROM t")[7:-7]
-            for k in _split_top_list(order_raw or "")
-        ] if order_raw else []
+        order = [_expr(k) for k in _split_top_list(order_raw or "")]
         return ProjectionSpec(name=name, kind="reorder", order_by=order)
 
     keys: list[tuple[str, str]] = []
     key_raws: list[str] = []
     for k in _split_top_list(group_raw):
         kname = k if k.isidentifier() else _state_name("k", k)
-        keys.append((kname, translate(f"SELECT {k} FROM t")[7:-7]))
+        keys.append((kname, _expr(k)))
         key_raws.append(re.sub(r"\s+", "", k).lower())
 
     measures: dict[str, tuple[str, str | None]] = {}
@@ -248,9 +253,7 @@ def _parse_projection(raw: str) -> ProjectionSpec:
                 "quantile-family states need queries/sketches.py"
             )
         fn, arg = am.group(1), am.group(2).strip()
-        arg_sql = (
-            translate(f"SELECT {arg} FROM t")[7:-7] if arg else None
-        )
+        arg_sql = _expr(arg) if arg else None
         if fn.lower() == "count":
             measures[_state_name("n", arg)] = ("count", arg_sql)
         elif fn.lower() in ("uniq", "uniqexact"):
@@ -491,11 +494,8 @@ def translate_ddl(sql: str) -> DdlPlan:
         )
     kafka_spec = _parse_kafka_engine(tail) if base_engine == "Kafka" else None
 
-    order_by = [
-        translate(f"SELECT {k} FROM t")[7:-7]
-        for k in _strip_tuple(_extract_clause(tail, "ORDER\\s+BY") or "")
-        if k.lower() != "tuple()"
-    ]
+    order_raw = _extract_clause(tail, "ORDER\\s+BY") or ""
+    order_by = [_expr(k) for k in _strip_tuple(order_raw) if k.lower() != "tuple()"]
 
     part_raw = _extract_clause(tail, "PARTITION\\s+BY")
     partition_expr = partition_col = None
@@ -508,7 +508,7 @@ def translate_ddl(sql: str) -> DdlPlan:
             partition_type = col_types[part_raw]
             columns = [(n, t) for n, t in columns if n != part_raw]
         else:
-            partition_expr = translate(f"SELECT {part_raw} FROM t")[7:-7]
+            partition_expr = _expr(part_raw)
             partition_col = (
                 "p_" + re.sub(r"\W+", "_", part_raw).strip("_").lower()
             )
@@ -518,12 +518,10 @@ def translate_ddl(sql: str) -> DdlPlan:
                 partition_type = "STRING"
 
     ttl_raw = _extract_clause(tail, "TTL")
-    ttl = translate(f"SELECT {ttl_raw} FROM t")[7:-7] if ttl_raw else None
+    ttl = _expr(ttl_raw) if ttl_raw else None
 
     sample_raw = _extract_clause(tail, "SAMPLE\\s+BY")
-    sample_by = (
-        translate(f"SELECT {sample_raw} FROM t")[7:-7] if sample_raw else None
-    )
+    sample_by = _expr(sample_raw) if sample_raw else None
 
     # SETTINGS → insert-block dedup contract. CH semantics: Replicated*
     # engines deduplicate inserts by default (window =
@@ -625,10 +623,10 @@ class MvPlan:
     engine: str | None = None
 
 
-def translate_mv(sql: str) -> MvPlan:
+def translate_mv(sql: str, ddl: Ddl | None = None) -> MvPlan:
     """Parse ``CREATE MATERIALIZED VIEW [IF NOT EXISTS] name [TO target]
     [ENGINE = ...] [POPULATE] AS SELECT ...`` and return the streaming
-    equivalent: the translated SELECT plus the sink strategy.
+    equivalent: the SELECT translated under ``ddl`` plus the sink strategy.
 
     ``POPULATE`` (backfill at creation) maps to running the same SELECT
     once in batch mode before attaching the stream — noted in the
@@ -652,7 +650,7 @@ def translate_mv(sql: str) -> MvPlan:
     target = m.group("target")
     target = target.strip("`\"").split(".")[-1] if target else None
     engine = m.group("engine")
-    select_sql = translate(m.group("select"))
+    select_sql = translate(m.group("select"), ddl)
 
     base_engine = re.sub(r"^(Replicated|Shared)", "", engine) if engine else None
     grouped = re.search(r"\bGROUP\s+BY\b", select_sql, re.I) is not None
@@ -757,7 +755,7 @@ def translate_maintenance(sql: str) -> MaintenancePlan:
         r"MODIFY\s+TTL\s+(.+)$", s)
     if m:
         table = m.group(1).strip("`\"").split(".")[-1]
-        ttl = translate(f"SELECT {m.group(2)} FROM t")[7:-7]
+        ttl = _expr(m.group(2))
         return MaintenancePlan(
             op="modify_ttl", table=table, ttl=ttl,
             strategy="replace the table's compaction horizon: pass the new "
@@ -772,8 +770,7 @@ def translate_maintenance(sql: str) -> MaintenancePlan:
         r"DELETE\s+WHERE\s+(.+)$", s)
     if m:
         table = m.group(1).strip("`\"").split(".")[-1]
-        pred = translate(f"SELECT 1 FROM t WHERE {m.group(2)}")
-        pred = pred[pred.upper().index("WHERE") + 6:]
+        pred = _expr(m.group(2), where=True)
         return MaintenancePlan(
             op="delete", table=table, predicate=pred,
             strategy="filtered rewrite of the affected partitions: keep "
@@ -785,14 +782,13 @@ def translate_maintenance(sql: str) -> MaintenancePlan:
         r"UPDATE\s+(.+?)\s+WHERE\s+(.+)$", s)
     if m:
         table = m.group(1).strip("`\"").split(".")[-1]
-        pred = translate(f"SELECT 1 FROM t WHERE {m.group(3)}")
-        pred = pred[pred.upper().index("WHERE") + 6:]
+        pred = _expr(m.group(3), where=True)
         assignments: list[tuple[str, str]] = []
         for item in _split_top_list(m.group(2)):
             am = re.match(r"^([\w`\"]+)\s*=\s*(.+)$", item, re.S)
             if not am:
                 raise DialectError(f"cannot parse UPDATE assignment {item!r}")
-            expr = translate(f"SELECT {am.group(2)} FROM t")[7:-7]
+            expr = _expr(am.group(2))
             assignments.append((am.group(1).strip("`\""), expr))
         return MaintenancePlan(
             op="update", table=table, predicate=pred,
@@ -818,9 +814,9 @@ class DictionaryPlan:
     """A parsed ``CREATE DICTIONARY`` statement.
 
     CH dictionaries are host-side lookup maps refreshed from a source table;
-    the engine analog is the source table/view itself, registered with
-    ``dialect.register_dictionary`` so every ``dictGet('<name>', …)`` call
-    translates to a correlated scalar subquery (Catalyst plans it as a
+    the engine analog is the source table/view itself. Declared in a
+    ``dialect.Ddl`` (``spec()``; ``Deployment.ddl``), every ``dictGet('<name>',
+    …)`` call translates to a correlated scalar subquery (Catalyst plans it as a
     broadcast left join — the same build-side-hash-map execution CH's
     dictionary engine performs). LIFETIME refresh is meaningless here: the
     view always reads the current table state, which is *fresher* than CH's
@@ -835,18 +831,16 @@ class DictionaryPlan:
     layout: str | None = None
     lifetime_max_s: int | None = None
 
-    def register(self, view: str | None = None):
-        """Register with the dialect; ``view`` overrides the SOURCE table
-        (needed when the source is not a CLICKHOUSE table)."""
-        from .dialect import register_dictionary
-
+    def spec(self, view: str | None = None) -> DictionarySpec:
+        """The dictionary's declaration; ``view`` overrides the SOURCE
+        table (needed when the source is not a CLICKHOUSE table)."""
         target = view or self.source_table
         if target is None:
             raise DialectError(
                 f"dictionary {self.name!r}: SOURCE({self.source_kind or '?'}"
                 ") names no table — pass the Spark view explicitly"
             )
-        return register_dictionary(self.name, target, self.key)
+        return DictionarySpec(name=self.name, view=target, key=self.key)
 
 
 def translate_dictionary(sql: str) -> DictionaryPlan:

@@ -6,11 +6,12 @@ MATERIALIZED VIEW draining the queue into it, dictionaries for enrichment
 (reference docker-compose.yml:155-174 provisions exactly this shape; the
 Python consumers in main.py play the MV's role by hand).
 ``plan_deployment()`` parses the script with the per-statement translators
-(ddl.translate_ddl / translate_mv / translate_dictionary), registers the
-dictionaries, and BINDS the pieces: every MV whose FROM table is a
-Kafka-engine table becomes a ``StreamBinding`` carrying the ready Spark
-reader options, the Avro framing, the dialect-translated SELECT, and the
-destination's maintenance strategy.
+(ddl.translate_ddl / translate_mv / translate_dictionary), declares the
+dictionaries and SAMPLE BY keys in its own ``Deployment.ddl``, and BINDS
+the pieces: every MV whose FROM table is a Kafka-engine table becomes a
+``StreamBinding`` carrying the ready Spark reader options, the Avro
+framing, the dialect-translated SELECT, and the destination's maintenance
+strategy.
 
 ``apply_batch()`` is the MV trigger body as a pure function — register the
 decoded micro-batch under the queue table's name, run the translated
@@ -38,7 +39,7 @@ from .ddl import (
     translate_dictionary,
     translate_mv,
 )
-from .dialect import DialectError
+from .dialect import Ddl, DialectError, _tokenize
 
 
 def split_statements(script: str) -> list[str]:
@@ -108,6 +109,7 @@ class Deployment:
     views: list[MvPlan] = field(default_factory=list)
     dictionaries: list[DictionaryPlan] = field(default_factory=list)
     bindings: list[StreamBinding] = field(default_factory=list)
+    ddl: Ddl = Ddl()  # the script's dictionaries and SAMPLE BY keys
 
 
 def _main_from_table(sql: str) -> tuple[str | None, str | None]:
@@ -116,8 +118,6 @@ def _main_from_table(sql: str) -> tuple[str | None, str | None]:
     subquery (dictGet expands to one before the main clause), so scan at
     paren depth 0. The raw token keeps any ``db.`` qualifier/quoting so
     the caller can rewrite the reference to the registered bare name."""
-    from .dialect import _tokenize
-
     toks = _tokenize(sql)
     depth = 0
     for i, t in enumerate(toks):
@@ -156,8 +156,11 @@ _CREATE_TABLE_NAME = re.compile(
 )
 
 
-def plan_deployment(script: str, register_dicts: bool = True) -> Deployment:
-    """Parse a ClickHouse DDL script and bind its pieces.
+def plan_deployment(script: str) -> Deployment:
+    """Parse a ClickHouse DDL script and bind its pieces. Its CREATE
+    DICTIONARY / SAMPLE BY declarations go into ``Deployment.ddl`` in
+    statement order, each MV body translating under those before it;
+    nothing outside the returned plan changes.
 
     Table names are registered BARE (``db.queue`` → ``queue``) because the
     trigger body materializes micro-batches as session temp views, which
@@ -174,10 +177,10 @@ def plan_deployment(script: str, register_dicts: bool = True) -> Deployment:
         ):
             plan = translate_dictionary(stmt)
             dep.dictionaries.append(plan)
-            if register_dicts and plan.source_table:
-                plan.register()
+            if plan.source_table:
+                dep.ddl = dep.ddl.with_dictionary(plan.spec())
         elif re.match(r"CREATE\s+MATERIALIZED\s+VIEW", head):
-            dep.views.append(translate_mv(stmt))
+            dep.views.append(translate_mv(stmt, dep.ddl))
         elif head.startswith("CREATE TABLE"):
             plan = translate_ddl(stmt)
             m = _CREATE_TABLE_NAME.match(stmt)
@@ -190,11 +193,9 @@ def plan_deployment(script: str, register_dicts: bool = True) -> Deployment:
                     "hold same-named tables from different databases"
                 )
             dep.tables[plan.table] = plan
-            if register_dicts and plan.sample_by:
+            if plan.sample_by:
                 # SAMPLE BY key → deterministic SAMPLE … OFFSET subranges
-                from .dialect import register_sample_key
-
-                register_sample_key(plan.table, plan.sample_by)
+                dep.ddl = dep.ddl.with_sample_key(plan.table, plan.sample_by)
         else:
             raise DialectError(
                 f"unsupported statement in deployment script: {stmt[:60]!r}"

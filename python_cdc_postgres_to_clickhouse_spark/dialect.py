@@ -29,8 +29,8 @@ vocabulary and a handful of CH-only clauses, which are local token patterns:
   (streaming/upsert_sink.py is the ReplacingMergeTree+FINAL equivalent);
 - ``SETTINGS``/``FORMAT`` drop (engine/wire concerns, not semantics).
 
-External dictionaries: register one (``register_dictionary(name, view,
-key)`` or ``ddl.translate_dictionary``) and the ``dictGet`` family —
+External dictionaries: once declared in a ``Ddl`` (per session or per
+deployment; see ``translate`` and ``register_dictionary``) the family —
 ``dictGet``/``dictGetOrDefault``/``dictGet<T>``/``dictHas`` — translates to
 correlated scalar subqueries that Catalyst rewrites into broadcast left
 joins, the same build-side hash map CH's dictionary engine keeps host-side.
@@ -77,11 +77,13 @@ Documented semantic divergences (value-level, not shape-level):
 from __future__ import annotations
 
 import re
+import threading
 from collections.abc import Callable, Sequence
-from dataclasses import dataclass
+from contextvars import ContextVar
+from dataclasses import dataclass, replace
 
-__all__ = ["DialectError", "translate", "clickhouse_sql",
-           "register_dictionary", "unregister_dictionary"]
+__all__ = ["DialectError", "Ddl", "translate", "clickhouse_sql",
+           "register_dictionary", "register_sample_key"]
 
 
 class DialectError(ValueError):
@@ -748,20 +750,7 @@ def _rewrite_brackets(toks: list[str]) -> list[str]:
     return out
 
 
-_SAMPLE_KEYS: dict[str, str] = {}
 _SAMPLE_L = 1_000_000  # hash-space granularity for OFFSET subranges
-
-
-def register_sample_key(table: str, key_expr: str) -> None:
-    """Declare a table's translated ``SAMPLE BY`` expression so
-    ``SAMPLE … OFFSET`` queries against it rewrite to deterministic
-    hash-subrange filters (plan_deployment does this for every CREATE
-    TABLE carrying a SAMPLE BY clause)."""
-    _SAMPLE_KEYS[table.split(".")[-1].strip("`\"")] = key_expr
-
-
-def unregister_sample_key(table: str) -> None:
-    _SAMPLE_KEYS.pop(table.split(".")[-1].strip("`\""), None)
 
 
 def _rewrite_sample(toks: list[str]) -> list[str]:
@@ -772,8 +761,8 @@ def _rewrite_sample(toks: list[str]) -> list[str]:
     row-identical — CH samples deterministically by the table's declared
     sample key, Spark TABLESAMPLE is seeded-random per scan (documented
     divergence). ``SAMPLE a/b OFFSET c/d`` (round 8) IS deterministic —
-    like CH it needs the table's SAMPLE BY key, taken from the registry
-    ``register_sample_key`` fills (plan_deployment auto-registers): the
+    like CH it needs the table's SAMPLE BY key, taken from the ``Ddl`` the
+    translation runs under (a deployment's or a session's): the
     table rewrites to a subquery keeping rows whose key hash lands in
     [c/d, c/d + a/b) of a 10^6-slot space, compared in exact integer
     arithmetic — disjoint OFFSET ranges partition the table exactly as
@@ -864,12 +853,12 @@ def _rewrite_sample(toks: list[str]) -> list[str]:
                 ):
                     tstart -= 2
                 bare = out[at - 1].strip("`\"")
-                key_expr = _SAMPLE_KEYS.get(bare)
+                key_expr = dict(_DDL.get().sample_keys).get(bare)
                 if key_expr is None:
                     raise DialectError(
                         f"SAMPLE … OFFSET on {bare!r}: no SAMPLE BY key "
-                        "registered — run the table's CREATE TABLE through "
-                        "plan_deployment / register_sample_key first "
+                        "registered — declare it in the translation's Ddl "
+                        "(Deployment.ddl / register_sample_key(spark, …)) "
                         "(x_hash_split / x_det_sample are the query-level "
                         "alternatives)"
                     )
@@ -2696,9 +2685,9 @@ def _to_start_of_week(a: list[str]) -> str:
 # ClickHouse dictionaries are host-side hash maps loaded from a source table;
 # ``dictGet('d', 'attr', k)`` is a point lookup usable in any expression.
 # The Spark-faithful analog is a correlated scalar subquery against the
-# registered view — Catalyst rewrites it into a left outer join (broadcast
+# declared view — Catalyst rewrites it into a left outer join (broadcast
 # when the dictionary is small), which is EXACTLY the CH execution shape: the
-# fact side streams, the dictionary is the build side. Registration carries
+# fact side streams, the dictionary is the build side. The declaration holds
 # the key column (CH's PRIMARY KEY), so the call sites stay verbatim.
 #
 # Documented divergences: a miss yields NULL (CH plain dictGet yields the
@@ -2715,24 +2704,51 @@ class DictionarySpec:
     key: str    # key column (CH PRIMARY KEY); single-column only
 
 
-_DICTIONARIES: dict[str, DictionarySpec] = {}
+@dataclass(frozen=True)
+class Ddl:
+    """Declared dictionaries and SAMPLE BY keys: immutable, hashable and in
+    name order, so declaring the same objects again gives an equal value."""
+
+    dictionaries: tuple[DictionarySpec, ...] = ()
+    sample_keys: tuple[tuple[str, str], ...] = ()  # (bare table, key expr)
+
+    def with_dictionary(self, spec: DictionarySpec) -> Ddl:
+        specs = {d.name: d for d in self.dictionaries} | {spec.name: spec}
+        return replace(self, dictionaries=tuple(specs[k] for k in sorted(specs)))
+
+    def with_sample_key(self, table: str, key: str) -> Ddl:
+        keys = dict(self.sample_keys) | {table.split(".")[-1].strip("`\""): key}
+        return replace(self, sample_keys=tuple(sorted(keys.items())))
 
 
-def register_dictionary(name: str, view: str, key: str) -> DictionarySpec:
-    """Register a dictionary so ``dictGet('<name>', …)`` translates.
+# The running translate() call's Ddl, also seen by the calls nested in it.
+_DDL: ContextVar[Ddl] = ContextVar("dialect_ddl", default=Ddl())
+_DDL_WRITE_LOCK = threading.Lock()  # register_*'s read-modify-write
 
-    ``view`` must resolve in the SparkSession that runs the translated SQL
-    (a table or temp view); ``key`` is the single key column. Composite
-    (tuple) keys have no scalar-subquery equality form here — pre-concat
-    them into one column on both sides.
+
+def register_dictionary(spark, name: str, view: str, key: str) -> DictionarySpec:
+    """Declare a dictionary for ``spark``'s ``clickhouse_sql`` calls.
+
+    ``view`` must resolve in that session (a table or temp view); ``key``
+    is the single key column. Composite (tuple) keys have no scalar-subquery
+    equality form here — pre-concat them into one column on both sides.
     """
-    spec = DictionarySpec(name=name, view=view, key=key)
-    _DICTIONARIES[name] = spec
+    from .session import state
+
+    spec, st = DictionarySpec(name=name, view=view, key=key), state(spark)
+    with _DDL_WRITE_LOCK:
+        st["ddl"] = st.get("ddl", Ddl()).with_dictionary(spec)
     return spec
 
 
-def unregister_dictionary(name: str) -> None:
-    _DICTIONARIES.pop(name, None)
+def register_sample_key(spark, table: str, key_expr: str) -> None:
+    """Declare a table's translated ``SAMPLE BY`` expression for
+    ``spark``'s ``SAMPLE … OFFSET`` queries (deterministic subranges)."""
+    from .session import state
+
+    st = state(spark)
+    with _DDL_WRITE_LOCK:
+        st["ddl"] = st.get("ddl", Ddl()).with_sample_key(table, key_expr)
 
 
 _STRLIT_RE = re.compile(r"\s*'((?:[^'\\]|\\.|'')*)'\s*$")
@@ -2745,15 +2761,15 @@ def _dict_spec(arg: str) -> DictionarySpec:
             "dictGet family: the dictionary name must be a string literal"
         )
     name = m.group(1)
-    spec = _DICTIONARIES.get(name)
-    if spec is None:
+    known = {d.name: d for d in _DDL.get().dictionaries}
+    if name not in known:
         raise DialectError(
             f"dictionary {name!r} is not registered — call "
-            "dialect.register_dictionary(name, view, key) or feed the "
-            "CREATE DICTIONARY DDL through ddl.translate_dictionary(); "
-            f"registered: {sorted(_DICTIONARIES) or '(none)'}"
+            "dialect.register_dictionary(spark, name, view, key) or "
+            "translate with the Ddl of a deployment that declares it "
+            f"(ddl.translate_dictionary); registered: {sorted(known) or '(none)'}"
         )
-    return spec
+    return known[name]
 
 
 def _dict_attr(arg: str) -> str:
@@ -7183,8 +7199,9 @@ def _rewrite_calls(toks: list[str]) -> list[str]:
 # Public API
 # ---------------------------------------------------------------------------
 
-def translate(sql: str) -> str:
-    """Translate a ClickHouse SQL string into Spark SQL.
+def translate(sql: str, ddl: Ddl | None = None) -> str:
+    """Translate a ClickHouse SQL string into Spark SQL under ``ddl``'s
+    dictionaries and SAMPLE BY keys (default: an enclosing call's, or none).
 
     SETTINGS are stripped (client/server knobs), except the two whose
     values CHANGE QUERY SEMANTICS in ways this shim pins the other way:
@@ -7200,6 +7217,14 @@ def translate(sql: str) -> str:
       WHERE/HAVING, which this shim reproduces in its default ``= 0``
       form (see _rewrite_where_aliases) — raises loud.
     """
+    token = _DDL.set(_DDL.get() if ddl is None else ddl)
+    try:
+        return _translate(sql)
+    finally:
+        _DDL.reset(token)
+
+
+def _translate(sql: str) -> str:
     if re.search(r"(?i)\bjoin_use_nulls\s*=\s*0", sql):
         raise DialectError(
             "SETTINGS join_use_nulls = 0: CH fills outer-join misses "
@@ -7266,36 +7291,31 @@ def translate(sql: str) -> str:
     return _render(toks)
 
 
-# Analyzed-plan reuse (optimization round 14, guide §1.2 step 2 /
-# §7.3 "driver is doing something single-threaded"): ``spark.sql()`` of a
-# translated dialect query re-parses and re-analyzes the generated ANSI
-# SQL on EVERY invocation — measured 0.24–0.45 s of driver-side analysis
-# per call for the codec/wave trees (the generated SQL is 8–15 KB of
-# deeply nested fold expressions), paid by every execution of a declared
-# dialect query in a resident engine. A DataFrame is an immutable lazy
-# plan — results are still computed from the parquet inputs at every
-# action, so reuse is NOT result caching; it is the same contract as the
-# catalog in ``tables.load_tables`` ("immutable plans, reuse is safe"),
-# and it lives in the same per-session state. The key pins the sf_dir
-# (analysis binds concrete file relations; repointing a temp view later
-# never rebinds an existing plan) and the dialect text, which names the
-# layout it reads (``documents`` or ``documents_wide``). Bounded by the
-# number of distinct declared dialect strings per session.
+# Analyzed-plan reuse: ``spark.sql()`` re-parses and re-analyzes the
+# generated SQL on every call (0.24–0.45 s of driver time for the 8–15 KB
+# codec/wave trees). A DataFrame is an immutable lazy plan, computed from
+# the parquet inputs at every action, so reusing one is not result caching;
+# like the ``tables.load_tables`` catalog it lives in the session's state.
+# The key pins the sf_dir (analysis binds concrete file relations), the
+# dialect text (it names the layout it reads, e.g. ``documents_wide``) and
+# the session's Ddl (a re-pointed dictionary is another plan).
 def clickhouse_sql(spark, sql: str, sf_dir: str | None = None):
-    """Translate ``sql`` from ClickHouse dialect and run it on Spark.
+    """Translate ``sql`` under the session's Ddl and run it on Spark.
 
     When ``sf_dir`` is given, the engine's tables are (re)registered as temp
     views first, so table names resolve exactly as they would against the
     reference's warehouse — and the analyzed plan is memoized per
-    (session, sf_dir, sql), see the note above.
+    (session, sf_dir, sql, Ddl), see the note above.
     """
-    if sf_dir is not None:
-        from .session import state
-        from .tables import load_tables
+    from .session import state
+    from .tables import load_tables
 
-        load_tables(spark, sf_dir)
-        st, key = state(spark), ("plan", sf_dir, sql)
-        if key not in st:
-            st[key] = spark.sql(translate(sql))
-        return st[key]
-    return spark.sql(translate(sql))
+    st = state(spark)
+    ddl = st.get("ddl", Ddl())
+    if sf_dir is None:
+        return spark.sql(translate(sql, ddl))
+    load_tables(spark, sf_dir)
+    key = ("plan", sf_dir, sql, ddl)
+    if key not in st:
+        st[key] = spark.sql(translate(sql, ddl))
+    return st[key]

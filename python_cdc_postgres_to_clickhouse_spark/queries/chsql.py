@@ -447,7 +447,7 @@ ORDER BY 1
 @query("sql_ch_dict_lookup", oracle=DICT_LOOKUP_ORACLE, tags=("dialect", "join"))
 def sql_ch_dict_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``dictGet`` family end to end: a CH external dictionary
-    (positive-balance customer -> nation name) is registered once, then
+    (positive-balance customer -> nation name) is registered in the session, then
     ``dictGetOrDefault`` / ``dictHas`` calls in verbatim CH SQL translate to
     correlated scalar subqueries against the registered view. Catalyst
     rewrites each subquery into a left outer join with the dictionary as the
@@ -467,7 +467,7 @@ def sql_ch_dict_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("c_custkey", "n_name AS nation")
         .createOrReplaceTempView("dim_cust_nation")
     )
-    register_dictionary("cust_nation", "dim_cust_nation", "c_custkey")
+    register_dictionary(spark, "cust_nation", "dim_cust_nation", "c_custkey")
     return clickhouse_sql(spark, CH_DICT_LOOKUP, sf_dir)
 
 
@@ -802,7 +802,7 @@ def sql_ch_sample_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dialect import register_sample_key
 
     register_sample_key(
-        "orders",
+        spark, "orders",
         "conv(substring(md5(cast(o_custkey as string)), 1, 8), 16, 10)",
     )
     return clickhouse_sql(spark, CH_SAMPLE_OFFSET, sf_dir)

@@ -49,8 +49,8 @@ def get_spark(app_name: str = "python_cdc_postgres_to_clickhouse_spark",
 
 
 def state(spark: SparkSession) -> dict:
-    """The engine's per-session build-once state: catalogs, analyzed
-    plans, trained index models, capability probes.
+    """The engine's per-session state: catalogs, declared dictionaries and
+    SAMPLE BY keys, analyzed plans, trained index models, capability probes.
 
     It lives in the session object itself, so it goes when the session
     goes: the cached DataFrames reference their session, so a module dict

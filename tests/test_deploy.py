@@ -9,10 +9,7 @@ from python_cdc_postgres_to_clickhouse_spark.deploy import (
     plan_deployment,
     split_statements,
 )
-from python_cdc_postgres_to_clickhouse_spark.dialect import (
-    DialectError,
-    unregister_dictionary,
-)
+from python_cdc_postgres_to_clickhouse_spark.dialect import DialectError
 
 SCRIPT = """
 -- the queue: Debezium topic, registry-framed Avro
@@ -51,30 +48,27 @@ def test_split_statements_respects_quotes_and_comments():
 
 def test_deployment_binds_mv_to_kafka_queue():
     dep = plan_deployment(SCRIPT)
-    try:
-        assert set(dep.tables) == {"users_queue", "users_current"}
-        assert [d.name for d in dep.dictionaries] == ["user_labels"]
-        assert len(dep.bindings) == 1
-        b = dep.bindings[0]
-        assert b.source.table == "users_queue"
-        assert b.dest is not None and b.dest.table == "users_current"
-        assert b.framing == "confluent"
-        opts = b.reader_options
-        assert opts["subscribe"] == "pg.public.users"
-        assert opts["kafka.bootstrap.servers"] == "broker:9092"
-        assert "ParquetUpsertSink" in b.sink_strategy
-        # the dictionary is registered and usable by dictGet
-        from python_cdc_postgres_to_clickhouse_spark.dialect import translate
+    assert set(dep.tables) == {"users_queue", "users_current"}
+    assert [d.name for d in dep.dictionaries] == ["user_labels"]
+    assert len(dep.bindings) == 1
+    b = dep.bindings[0]
+    assert b.source.table == "users_queue"
+    assert b.dest is not None and b.dest.table == "users_current"
+    assert b.framing == "confluent"
+    opts = b.reader_options
+    assert opts["subscribe"] == "pg.public.users"
+    assert opts["kafka.bootstrap.servers"] == "broker:9092"
+    assert "ParquetUpsertSink" in b.sink_strategy
+    # the dictionary is declared in the plan's Ddl and usable by dictGet
+    from python_cdc_postgres_to_clickhouse_spark.dialect import translate
 
-        assert "dim_labels" in translate(
-            "SELECT dictGet('user_labels', 'label', id) FROM t"
-        )
-    finally:
-        unregister_dictionary("user_labels")
+    assert "dim_labels" in translate(
+        "SELECT dictGet('user_labels', 'label', id) FROM t", dep.ddl
+    )
 
 
 def test_apply_batch_runs_translated_mv_body(spark):
-    dep = plan_deployment(SCRIPT, register_dicts=False)
+    dep = plan_deployment(SCRIPT)
     b = dep.bindings[0]
     queue = spark.createDataFrame(
         [(1, "ann", 1.25), (2, "bob", -5.0), (3, "cid", 2.0)],
@@ -95,7 +89,7 @@ def test_unknown_statement_is_loud():
 def test_start_binding_drains_a_stream_through_the_mv(spark, tmp_path):
     """End-to-end MV maintenance over a (stand-in) stream: the translated
     SELECT runs per micro-batch and lands in the target path."""
-    dep = plan_deployment(SCRIPT, register_dicts=False)
+    dep = plan_deployment(SCRIPT)
     b = dep.bindings[0]
     src = tmp_path / "queue_stream"
     src.mkdir()
@@ -151,7 +145,6 @@ FROM users_queue
                 for r in apply_batch(spark, labeled, queue).collect()}
         assert rows == {1: "vip", 2: "none"}
     finally:
-        unregister_dictionary("user_labels")
         spark.catalog.dropTempView("dim_labels")
         spark.catalog.dropTempView("users_queue")
 
@@ -236,7 +229,6 @@ FROM users_queue
         ).createOrReplaceTempView("dim_labels")
         assert apply_batch(spark, b, queue).collect()[0]["label"] == "banned"
     finally:
-        unregister_dictionary("user_labels")
         spark.catalog.dropTempView("dim_labels")
         spark.catalog.dropTempView("users_queue")
 
@@ -283,22 +275,16 @@ FROM j_queue WHERE balance >= 0;
 
 
 def test_deployment_registers_sample_by_key(spark):
-    from python_cdc_postgres_to_clickhouse_spark.dialect import (
-        translate,
-        unregister_sample_key,
-    )
+    from python_cdc_postgres_to_clickhouse_spark.dialect import translate
 
     script = """
 CREATE TABLE hits2 (
     user_id UInt64, v Float64
 ) ENGINE = MergeTree ORDER BY user_id SAMPLE BY cityHash64(user_id);
 """
-    plan_deployment(script)
-    try:
-        out = translate("SELECT count() FROM hits2 SAMPLE 1/10 OFFSET 5/10")
-        assert "pmod" in out and "xxhash64(user_id)" in out
-    finally:
-        unregister_sample_key("hits2")
+    dep = plan_deployment(script)
+    out = translate("SELECT count() FROM hits2 SAMPLE 1/10 OFFSET 5/10", dep.ddl)
+    assert "pmod" in out and "xxhash64(user_id)" in out
 
 
 def test_json_each_row_streaming_leg(spark, tmp_path):
@@ -354,7 +340,7 @@ FROM js_queue WHERE balance >= 0;
 
 
 def test_decode_frames_avro_is_loud():
-    dep = plan_deployment(SCRIPT, register_dicts=False)
+    dep = plan_deployment(SCRIPT)
     with pytest.raises(DialectError, match="sources/avro"):
         from python_cdc_postgres_to_clickhouse_spark.deploy import (
             decode_frames,

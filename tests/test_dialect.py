@@ -1151,33 +1151,36 @@ def test_to_start_of_week_non_literal_mode_raises():
 @pytest.fixture
 def user_dict(spark):
     from python_cdc_postgres_to_clickhouse_spark.dialect import (
+        Ddl,
         register_dictionary,
-        unregister_dictionary,
     )
 
     spark.createDataFrame(
         [(1, "alpha", 10), (2, "beta", 20), (3, "gamma", 30)],
         "user_id bigint, label string, score bigint",
     ).createOrReplaceTempView("dim_user_labels")
-    register_dictionary("users", "dim_user_labels", "user_id")
-    yield
-    unregister_dictionary("users")
+    yield Ddl().with_dictionary(
+        register_dictionary(spark, "users", "dim_user_labels", "user_id")
+    )
     spark.catalog.dropTempView("dim_user_labels")
 
 
 def test_dict_get_translates_to_scalar_subquery(user_dict):
-    out = translate("SELECT dictGet('users', 'label', uid) FROM t")
+    out = translate("SELECT dictGet('users', 'label', uid) FROM t", user_dict)
     assert "SELECT max(__dict_val) FROM" in out and "dim_user_labels" in out
     out = translate(
-        "SELECT dictGetOrDefault('users', 'label', uid, 'none') FROM t"
+        "SELECT dictGetOrDefault('users', 'label', uid, 'none') FROM t",
+        user_dict,
     )
     assert out.startswith("SELECT coalesce((SELECT")
-    out = translate("SELECT dictGetInt64('users', 'score', uid) FROM t")
+    out = translate(
+        "SELECT dictGetInt64('users', 'score', uid) FROM t", user_dict
+    )
     assert "cast(max(__dict_val) as bigint)" in out
     with pytest.raises(DialectError, match="string literal"):
-        translate("SELECT dictGet(d, 'label', uid) FROM t")
+        translate("SELECT dictGet(d, 'label', uid) FROM t", user_dict)
     with pytest.raises(DialectError, match="column name"):
-        translate("SELECT dictGet('users', 'a || b', uid) FROM t")
+        translate("SELECT dictGet('users', 'a || b', uid) FROM t", user_dict)
 
 
 def test_dict_get_runs_and_shields_key_name_collision(spark, user_dict):
@@ -1203,10 +1206,6 @@ def test_dict_get_runs_and_shields_key_name_collision(spark, user_dict):
 
 def test_create_dictionary_ddl_parses_and_registers():
     from python_cdc_postgres_to_clickhouse_spark.ddl import translate_dictionary
-    from python_cdc_postgres_to_clickhouse_spark.dialect import (
-        _DICTIONARIES,
-        unregister_dictionary,
-    )
 
     plan = translate_dictionary(
         "CREATE DICTIONARY IF NOT EXISTS db.user_dict ("
@@ -1220,9 +1219,8 @@ def test_create_dictionary_ddl_parses_and_registers():
         ("user_id", "BIGINT"), ("nation", "STRING"), ("bal", "DOUBLE")
     ]
     assert plan.source_table == "dim_users" and plan.lifetime_max_s == 300
-    spec = plan.register()
-    assert _DICTIONARIES["user_dict"].view == "dim_users"
-    unregister_dictionary("user_dict")
+    spec = plan.spec()
+    assert spec.view == "dim_users"
 
     with pytest.raises(DialectError, match="pre-concat"):
         translate_dictionary(
@@ -1711,18 +1709,15 @@ def test_uniq_exact_state_merge_equals_one_level(spark):
 # ---------------------------------------------------------------------------
 
 def test_sample_offset_partitions_the_table_exactly(spark):
-    from python_cdc_postgres_to_clickhouse_spark.dialect import (
-        register_sample_key,
-        unregister_sample_key,
-    )
+    from python_cdc_postgres_to_clickhouse_spark.dialect import Ddl
 
     spark.range(0, 400).selectExpr("id AS user_id", "id % 7 AS v") \
         .createOrReplaceTempView("samp_t")
-    register_sample_key("samp_t", "xxhash64(user_id)")
+    ddl = Ddl().with_sample_key("samp_t", "xxhash64(user_id)")
     try:
         parts = [
             {r["user_id"] for r in spark.sql(translate(
-                f"SELECT user_id FROM samp_t SAMPLE 1/4 OFFSET {k}/4"
+                f"SELECT user_id FROM samp_t SAMPLE 1/4 OFFSET {k}/4", ddl
             )).collect()}
             for k in range(4)
         ]
@@ -1731,35 +1726,28 @@ def test_sample_offset_partitions_the_table_exactly(spark):
         assert sum(len(p) for p in parts) == 400            # disjoint
         # deterministic: the same query returns the same rows
         again = {r["user_id"] for r in spark.sql(translate(
-            "SELECT user_id FROM samp_t SAMPLE 1/4 OFFSET 0/4"
+            "SELECT user_id FROM samp_t SAMPLE 1/4 OFFSET 0/4", ddl
         )).collect()}
         assert again == parts[0]
         # decimal spelling agrees with the fraction spelling
         dec = {r["user_id"] for r in spark.sql(translate(
-            "SELECT user_id FROM samp_t SAMPLE 0.25 OFFSET 0.25"
+            "SELECT user_id FROM samp_t SAMPLE 0.25 OFFSET 0.25", ddl
         )).collect()}
         assert dec == parts[1]
     finally:
-        unregister_sample_key("samp_t")
         spark.catalog.dropTempView("samp_t")
 
 
 def test_sample_offset_loud_cases():
-    from python_cdc_postgres_to_clickhouse_spark.dialect import (
-        register_sample_key,
-        unregister_sample_key,
-    )
+    from python_cdc_postgres_to_clickhouse_spark.dialect import Ddl
 
     with pytest.raises(DialectError, match="no SAMPLE BY key registered"):
         translate("SELECT 1 FROM unk SAMPLE 1/10 OFFSET 5/10")
-    register_sample_key("st", "user_id")
-    try:
-        with pytest.raises(DialectError, match="row\\s?count|FRACTIONAL"):
-            translate("SELECT 1 FROM st SAMPLE 1000 OFFSET 1/2")
-        with pytest.raises(DialectError, match="inside \\[0, 1\\]"):
-            translate("SELECT 1 FROM st SAMPLE 3/4 OFFSET 1/2")
-    finally:
-        unregister_sample_key("st")
+    ddl = Ddl().with_sample_key("st", "user_id")
+    with pytest.raises(DialectError, match="row\\s?count|FRACTIONAL"):
+        translate("SELECT 1 FROM st SAMPLE 1000 OFFSET 1/2", ddl)
+    with pytest.raises(DialectError, match="inside \\[0, 1\\]"):
+        translate("SELECT 1 FROM st SAMPLE 3/4 OFFSET 1/2", ddl)
 
 
 def test_quantile_exact_and_group_array_states(spark):
