@@ -33,7 +33,15 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .dialect import Ddl, DialectError, DictionarySpec, translate
+from .dialect import (
+    Ddl,
+    DialectError,
+    DictionarySpec,
+    _group_end,
+    _token_matches,
+    _top_level,
+    translate,
+)
 
 __all__ = ["DdlPlan", "MvPlan", "MaintenancePlan", "ProjectionSpec", "KafkaEngineSpec",
            "DictionaryPlan", "translate_dictionary",
@@ -41,12 +49,13 @@ __all__ = ["DdlPlan", "MvPlan", "MaintenancePlan", "ProjectionSpec", "KafkaEngin
            "translate_maintenance"]
 
 
-def _expr(ch: str, where: bool = False) -> str:
-    """One ClickHouse expression (a WHERE predicate if ``where``) in Spark SQL."""
+def _expr(ch: str, where: bool = False, ddl: Ddl | None = None) -> str:
+    """One ClickHouse expression (a WHERE predicate if ``where``) in Spark
+    SQL, translated under ``ddl``."""
     if where:
-        out = translate(f"SELECT 1 FROM t WHERE {ch}")
+        out = translate(f"SELECT 1 FROM t WHERE {ch}", ddl)
         return out[out.upper().index("WHERE") + 6:]
-    return translate(f"SELECT {ch} FROM t")[7:-7]
+    return translate(f"SELECT {ch} FROM t", ddl)[7:-7]
 
 
 # ---------------------------------------------------------------------------
@@ -91,8 +100,10 @@ def map_type(ch_type: str) -> str:
     if name == "Array":
         return f"ARRAY<{map_type(inner)}>"
     if name == "Map":
-        k, v = _split_top(inner)
-        return f"MAP<{map_type(k)}, {map_type(v)}>"
+        parts = _split_top_list(inner)
+        if len(parts) != 2:
+            raise DialectError(f"expected two type params in {inner!r}")
+        return f"MAP<{map_type(parts[0])}, {map_type(parts[1])}>"
     if name == "Tuple":
         parts = _split_top_list(inner)
         fields = []
@@ -114,28 +125,26 @@ def map_type(ch_type: str) -> str:
     raise DialectError(f"unmapped ClickHouse type {ch_type!r}")
 
 
-def _split_top(s: str) -> tuple[str, str]:
-    parts = _split_top_list(s)
-    if len(parts) != 2:
-        raise DialectError(f"expected two type params in {s!r}")
-    return parts[0], parts[1]
-
-
 def _split_top_list(s: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
+    """``s`` split at its depth-0 commas (string literals and comments are
+    single tokens), each part stripped; a trailing empty part is dropped."""
+    ms = _token_matches(s)
+    parts, at = [], 0
+    for j, t in _top_level([m.group() for m in ms]):
+        if t == ",":
+            parts.append(s[at:ms[j].start()])
+            at = ms[j].end()
+    if s[at:]:
+        parts.append(s[at:])
     return [p.strip() for p in parts]
+
+
+def _group_text(sql: str, open_at: int) -> tuple[str, str]:
+    """(text inside the parenthesized group opening at ``sql[open_at]``,
+    text after it)."""
+    ms = _token_matches(sql[open_at:])
+    close = ms[_group_end([m.group() for m in ms], 0) - 1]
+    return sql[open_at + 1:open_at + close.start()], sql[open_at + close.end():]
 
 
 # ---------------------------------------------------------------------------
@@ -399,21 +408,13 @@ def _extract_clause(sql: str, name: str) -> str | None:
     if not m:
         return None
     rest = sql[m.end():]
-    depth = 0
-    out = []
-    i = 0
-    while i < len(rest):
-        nxt = _CLAUSE_RE.match(rest, i)
-        if depth == 0 and nxt:
-            break
-        ch = rest[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        out.append(ch)
-        i += 1
-    return "".join(out).strip() or None
+    ms = _token_matches(rest)
+    end = next(
+        (ms[j].start() for j, _ in _top_level([m.group() for m in ms])
+         if _CLAUSE_RE.match(rest, ms[j].start())),
+        len(rest),
+    )
+    return rest[:end].strip() or None
 
 
 def _strip_tuple(expr: str) -> list[str]:
@@ -436,16 +437,7 @@ def translate_ddl(sql: str) -> DdlPlan:
     if not head:
         raise DialectError("not a CREATE TABLE statement")
     table = head.group("name").strip("`\"").split(".")[-1]
-    # column list: balanced parens from the opening one
-    depth, i = 1, head.end()
-    start = i
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    col_block, tail = sql[start:i - 1], sql[i:]
+    col_block, tail = _group_text(sql, head.end() - 1)
 
     columns: list[tuple[str, str]] = []
     dropped: list[str] = []
@@ -700,8 +692,9 @@ class MaintenancePlan:
     ttl: str | None = None          # translated TTL expression (modify_ttl)
 
 
-def translate_maintenance(sql: str) -> MaintenancePlan:
-    """Map ClickHouse maintenance statements to engine routines.
+def translate_maintenance(sql: str, ddl: Ddl | None = None) -> MaintenancePlan:
+    """Map ClickHouse maintenance statements to engine routines; their
+    expressions translate under ``ddl`` (e.g. a deployment's dictionaries).
 
     - ``OPTIMIZE TABLE t [FINAL]`` → the sink's compaction/materialization
       (`ParquetUpsertSink.compact()`; FINAL read = `current_state()`).
@@ -755,7 +748,7 @@ def translate_maintenance(sql: str) -> MaintenancePlan:
         r"MODIFY\s+TTL\s+(.+)$", s)
     if m:
         table = m.group(1).strip("`\"").split(".")[-1]
-        ttl = _expr(m.group(2))
+        ttl = _expr(m.group(2), ddl=ddl)
         return MaintenancePlan(
             op="modify_ttl", table=table, ttl=ttl,
             strategy="replace the table's compaction horizon: pass the new "
@@ -770,7 +763,7 @@ def translate_maintenance(sql: str) -> MaintenancePlan:
         r"DELETE\s+WHERE\s+(.+)$", s)
     if m:
         table = m.group(1).strip("`\"").split(".")[-1]
-        pred = _expr(m.group(2), where=True)
+        pred = _expr(m.group(2), where=True, ddl=ddl)
         return MaintenancePlan(
             op="delete", table=table, predicate=pred,
             strategy="filtered rewrite of the affected partitions: keep "
@@ -782,13 +775,13 @@ def translate_maintenance(sql: str) -> MaintenancePlan:
         r"UPDATE\s+(.+?)\s+WHERE\s+(.+)$", s)
     if m:
         table = m.group(1).strip("`\"").split(".")[-1]
-        pred = _expr(m.group(3), where=True)
+        pred = _expr(m.group(3), where=True, ddl=ddl)
         assignments: list[tuple[str, str]] = []
         for item in _split_top_list(m.group(2)):
             am = re.match(r"^([\w`\"]+)\s*=\s*(.+)$", item, re.S)
             if not am:
                 raise DialectError(f"cannot parse UPDATE assignment {item!r}")
-            expr = _expr(am.group(2))
+            expr = _expr(am.group(2), ddl=ddl)
             assignments.append((am.group(1).strip("`\""), expr))
         return MaintenancePlan(
             op="update", table=table, predicate=pred,
@@ -854,15 +847,7 @@ def translate_dictionary(sql: str) -> DictionaryPlan:
     if not head:
         raise DialectError("not a CREATE DICTIONARY statement")
     name = head.group("name").strip("`\"").split(".")[-1]
-    depth, i = 1, head.end()
-    start = i
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    col_block, tail = sql[start:i - 1], sql[i:]
+    col_block, tail = _group_text(sql, head.end() - 1)
 
     columns: list[tuple[str, str]] = []
     for raw in _split_top_list(col_block):

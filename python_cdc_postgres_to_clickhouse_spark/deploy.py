@@ -39,7 +39,7 @@ from .ddl import (
     translate_dictionary,
     translate_mv,
 )
-from .dialect import Ddl, DialectError, _tokenize
+from .dialect import Ddl, DialectError, _clause_end, _tokenize
 
 
 def split_statements(script: str) -> list[str]:
@@ -119,24 +119,17 @@ def _main_from_table(sql: str) -> tuple[str | None, str | None]:
     paren depth 0. The raw token keeps any ``db.`` qualifier/quoting so
     the caller can rewrite the reference to the registered bare name."""
     toks = _tokenize(sql)
-    depth = 0
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.upper() == "FROM" and i + 1 < len(toks):
-            if toks[i + 1] == "(":
-                return None, None  # derived-table FROM: no queue binding
-            # The tokenizer splits `db.table` into ident '.' ident —
-            # reassemble the dotted reference.
-            parts = [toks[i + 1]]
-            j = i + 2
-            while j + 1 < len(toks) and toks[j] == ".":
-                parts.append(toks[j + 1])
-                j += 2
-            return ".".join(parts), parts[-1].strip("`\"")
-    return None, None
+    i = _clause_end(toks, 0, {"FROM"})
+    if i + 1 >= len(toks) or toks[i].upper() != "FROM" or toks[i + 1] == "(":
+        return None, None  # no FROM, or a derived-table FROM: no binding
+    # The tokenizer splits `db.table` into ident '.' ident — reassemble
+    # the dotted reference.
+    parts = [toks[i + 1]]
+    j = i + 2
+    while j + 1 < len(toks) and toks[j] == ".":
+        parts.append(toks[j + 1])
+        j += 2
+    return ".".join(parts), parts[-1].strip("`\"")
 
 
 def _rebase_table_ref(sql: str, raw: str, bare: str) -> str:

@@ -29,6 +29,14 @@ vocabulary and a handful of CH-only clauses, which are local token patterns:
   (streaming/upsert_sink.py is the ReplacingMergeTree+FINAL equivalent);
 - ``SETTINGS``/``FORMAT`` drop (engine/wire concerns, not semantics).
 
+The clause passes scan with the helpers: ``_group_end`` (past the matching
+closer), ``_clause_end`` (the next depth-0 stop word or the end of the
+enclosing group), ``_top_level`` (the depth-0 tokens) and ``_split_top``
+(cut at depth-0 separators). ( ) and [ ] nest alike and a string literal
+is one token, so every pass agrees on where a group ends; do not hand-roll
+a depth loop (tests/test_depth_scan_guard.py fails on one). ``ddl.py``
+slices statement text through the same tokens (``_token_matches`` spans).
+
 External dictionaries: once declared in a ``Ddl`` (per session or per
 deployment; see ``translate`` and ``register_dictionary``) the family —
 ``dictGet``/``dictGetOrDefault``/``dictGet<T>``/``dictHas`` — translates to
@@ -108,16 +116,79 @@ _TOKEN_RE = re.compile(
 )
 
 
-def _tokenize(sql: str) -> list[str]:
-    out: list[str] = []
+def _token_matches(sql: str) -> list[re.Match]:
+    """The tokens of ``sql`` as regex matches: ``.group()`` is the token,
+    ``.start()``/``.end()`` its span, so callers can slice the source text."""
+    out: list[re.Match] = []
     pos = 0
     for m in _TOKEN_RE.finditer(sql):
         if m.start() != pos:  # pragma: no cover - regex is total
             raise DialectError(f"cannot tokenize at {sql[pos:pos + 20]!r}")
         pos = m.end()
         if m.lastgroup != "ws":
-            out.append(m.group())
+            out.append(m)
     return out
+
+
+def _tokenize(sql: str) -> list[str]:
+    return [m.group() for m in _token_matches(sql)]
+
+
+# Bracket-depth scanning. Every clause pass finds a group's end, a clause's
+# end or the depth-0 separators through these four helpers; ( ) and [ ]
+# nest alike, and string literals are single tokens.
+_CLOSERS = (")", "]")
+
+
+def _top_level(toks: Sequence[str], start: int = 0):
+    """Yield ``(i, tok)`` for the tokens of ``toks[start:]`` outside every
+    ( ) / [ ] group opened at or after ``start``. An unmatched closer (the
+    end of the group ``start`` lies in) is yielded last."""
+    depth = 0
+    for i in range(start, len(toks)):
+        t = toks[i]
+        if t == "(" or t == "[":
+            depth += 1
+        elif t in _CLOSERS:
+            if not depth:
+                yield i, t
+                return
+            depth -= 1
+        elif not depth:
+            yield i, t
+
+
+def _clause_end(toks: Sequence[str], i: int, stops) -> int:
+    """Index of the first token from ``i`` that is at depth 0 and whose
+    upper-case form is in ``stops``, or of an unmatched closer, else
+    ``len(toks)``."""
+    return next(
+        (j for j, t in _top_level(toks, i) if t in _CLOSERS or _u(t) in stops),
+        len(toks),
+    )
+
+
+def _group_end(toks: Sequence[str], i: int) -> int:
+    """Index just past the closer that matches the opener ``toks[i]``."""
+    j = _clause_end(toks, i + 1, ())
+    if j == len(toks):
+        raise DialectError(
+            "unbalanced parentheses" if toks[i] == "(" else
+            "unbalanced [ ] brackets"
+        )
+    return j + 1
+
+
+def _split_top(toks: Sequence[str], sep: str) -> list[list[str]]:
+    """``toks`` cut at its depth-0 ``sep`` tokens (compared upper-case):
+    n separators give n + 1 parts."""
+    parts: list[list[str]] = []
+    at = 0
+    for j, t in _top_level(toks):
+        if _u(t) == sep:
+            parts.append(list(toks[at:j]))
+            at = j + 1
+    return parts + [list(toks[at:])]
 
 
 def _is_ident(tok: str) -> bool:
@@ -149,29 +220,11 @@ _JOIN_KINDS = {"INNER", "LEFT", "RIGHT", "FULL", "OUTER", "SEMI", "ANTI", "CROSS
 
 def _strip_format_settings(toks: list[str]) -> list[str]:
     out: list[str] = []
-    depth = 0
     i = 0
     while i < len(toks):
         t = toks[i]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if _u(t) == "SETTINGS":
-            d = depth
-            i += 1
-            while i < len(toks):
-                if toks[i] == "(":
-                    depth += 1
-                elif toks[i] == ")":
-                    depth -= 1
-                    if depth < d:
-                        out.append(")")
-                        i += 1
-                        break
-                elif _u(toks[i]) == "FORMAT" and depth == d:
-                    break
-                i += 1
+        if _u(t) == "SETTINGS":  # up to FORMAT or the end of its scope
+            i = _clause_end(toks, i + 1, {"FORMAT"})
             continue
         if _u(t) == "FORMAT" and i + 1 < len(toks) and _is_ident(toks[i + 1]):
             i += 2
@@ -217,7 +270,9 @@ def _rewrite_any_join(toks: list[str]) -> list[str]:
     (round 8) extracts the right side's key columns from its qualified
     equality conjuncts, dedups on those, and keeps the condition verbatim;
     non-equi conjuncts and RIGHT/FULL variants (they dedup the OTHER
-    side) stay loud."""
+    side) stay loud. The right side is read by ``_capture_join_ref`` (a
+    trailing ``FINAL`` is the no-op modifier, not an alias), and an
+    unaliased table keeps its bare name as the dedup subquery's alias."""
     out: list[str] = []
     i = 0
     while i < len(toks):
@@ -233,43 +288,9 @@ def _rewrite_any_join(toks: list[str]) -> list[str]:
                         "apply a latest-by-key / LIMIT 1 BY pick to that "
                         "side explicitly"
                     )
-                k = j + 1
-                ref: list[str] = []
-                if k < len(toks) and toks[k] == "(":
-                    depth = 0
-                    while k < len(toks):
-                        ref.append(toks[k])
-                        if toks[k] == "(":
-                            depth += 1
-                        elif toks[k] == ")":
-                            depth -= 1
-                            if depth == 0:
-                                k += 1
-                                break
-                        k += 1
-                else:
-                    # one dotted table name: ident(.ident)* — a SECOND bare
-                    # ident after it is an alias, not part of the name
-                    if k < len(toks) and _is_ident(toks[k]) and _u(
-                        toks[k]
-                    ) not in ("AS", "USING", "ON"):
-                        ref.append(toks[k])
-                        k += 1
-                        while (
-                            k + 1 < len(toks) and toks[k] == "."
-                            and _is_ident(toks[k + 1])
-                        ):
-                            ref.extend([toks[k], toks[k + 1]])
-                            k += 2
-                alias: str | None = None
-                if k < len(toks) and _u(toks[k]) == "AS":
-                    alias = toks[k + 1]
-                    k += 2
-                elif k < len(toks) and _is_ident(toks[k]) and _u(
-                    toks[k]
-                ) not in ("USING", "ON"):
-                    alias = toks[k]
-                    k += 1
+                ref, alias, k = _capture_join_ref(toks, j + 1)
+                if alias is None and ref and ref[0] != "(":
+                    alias = ref[-1].strip("`\"")  # the table's bare name
                 if k < len(toks) and _u(toks[k]) == "ON":
                     # ON form (round 8): extract the right side's key
                     # columns from the equality conjuncts, dedup the right
@@ -277,34 +298,15 @@ def _rewrite_any_join(toks: list[str]) -> list[str]:
                     # conjunct must be a qualified equality with exactly
                     # one side on the right alias — the same contract the
                     # ASOF rewrite uses.
-                    m = k + 1
-                    depth_on = 0
-                    cond: list[str] = []
-                    while m < len(toks):
-                        t2 = toks[m]
-                        if t2 == "(":
-                            depth_on += 1
-                        elif t2 == ")":
-                            if depth_on == 0:
-                                break
-                            depth_on -= 1
-                        elif depth_on == 0 and _u(t2) in _ASOF_CLAUSE_END:
-                            break
-                        cond.append(t2)
-                        m += 1
-                    right_name = alias
-                    if right_name is None:
-                        if ref and ref[0] != "(":
-                            right_name = ref[-1].strip("`\"")
-                            alias = right_name
-                        else:
-                            raise DialectError(
-                                "ANY JOIN ON with a subquery right side "
-                                "needs an alias"
-                            )
-                    rn = right_name.strip("`\"")
+                    end = _clause_end(toks, k + 1, _ASOF_CLAUSE_END)
+                    if alias is None:
+                        raise DialectError(
+                            "ANY JOIN ON with a subquery right side "
+                            "needs an alias"
+                        )
+                    rn = alias.strip("`\"")
                     rkeys: list[str] = []
-                    for conj in _split_top_and(cond):
+                    for conj in _split_top_and(toks[k + 1:end]):
                         ok = False
                         if (
                             len(conj) == 7 and conj[3] == "="
@@ -327,59 +329,32 @@ def _rewrite_any_join(toks: list[str]) -> list[str]:
                                 "(latest-by-key upsert / LIMIT 1 BY)"
                             )
                     keylist = ", ".join(dict.fromkeys(rkeys))
-                    if ref and ref[0] == "(" and ref[-1] == ")":
-                        ref_sql = "(" + translate(_render(ref[1:-1])) + ")"
-                    else:
-                        ref_sql = _render(_rewrite_calls(ref))
-                    dedup = (
-                        f"(SELECT * EXCEPT (__rn) FROM (SELECT *, "
-                        f"row_number() OVER (PARTITION BY {keylist} ORDER "
-                        f"BY {keylist}) AS __rn FROM {ref_sql}) "
-                        f"WHERE __rn = 1)"
+                elif k < len(toks) and _u(toks[k]) == "USING":
+                    if toks[k + 1] != "(":
+                        raise DialectError(
+                            "USING needs a parenthesized column list"
+                        )
+                    end = _group_end(toks, k + 1)
+                    keylist = ", ".join(
+                        t for t in toks[k + 2:end - 1] if t != ","
                     )
-                    out.extend(toks[i + 1:j + 1])  # join kind(s) + JOIN
-                    out.append(dedup)
-                    out.extend(["AS", alias, "ON", *cond])
-                    i = m
-                    continue
-                if not (k < len(toks) and _u(toks[k]) == "USING"):
+                else:
                     raise DialectError(
                         "ANY JOIN needs USING (…) or an equi ON condition "
                         "— deduplicate that side first (latest-by-key "
                         "upsert / LIMIT 1 BY) for other shapes"
                     )
-                if toks[k + 1] != "(":
-                    raise DialectError("USING needs a parenthesized column list")
-                cols: list[str] = []
-                m = k + 2
-                while m < len(toks) and toks[m] != ")":
-                    if toks[m] != ",":
-                        cols.append(toks[m])
-                    m += 1
-                keylist = ", ".join(cols)
-                if ref and ref[0] == "(" and ref[-1] == ")":
-                    # A subquery right side may itself use any CH construct
-                    # (PREWHERE, subscripts, FINAL, LIMIT BY, …) — run the
-                    # FULL translation pipeline on it, not just the call
-                    # rewriter; the result re-enters this stream as one
-                    # opaque token that later passes leave alone.
-                    ref_sql = "(" + translate(_render(ref[1:-1])) + ")"
-                else:
-                    ref_sql = _render(_rewrite_calls(ref))
                 dedup = (
                     f"(SELECT * EXCEPT (__rn) FROM (SELECT *, row_number() "
                     f"OVER (PARTITION BY {keylist} ORDER BY {keylist}) AS "
-                    f"__rn FROM {ref_sql}) WHERE __rn = 1)"
+                    f"__rn FROM {_join_ref_sql(ref)}) WHERE __rn = 1)"
                 )
                 out.extend(toks[i + 1:j + 1])  # join kind(s) + JOIN, ANY gone
                 out.append(dedup)
                 if alias is not None:
                     out.extend(["AS", alias])
-                using_toks: list[str] = []
-                for c in cols:
-                    using_toks.extend([c, ","])
-                out.extend(["USING", "(", *using_toks[:-1], ")"])
-                i = m + 1
+                out.extend(toks[k:end])  # ON condition / USING (cols)
+                i = end
                 continue
         out.append(toks[i])
         i += 1
@@ -389,36 +364,10 @@ def _rewrite_any_join(toks: list[str]) -> list[str]:
 def _split_top_and(toks: list[str]) -> list[list[str]]:
     """Split a condition token list on top-level ANDs (outer parens
     stripped first when they wrap the whole condition)."""
-    while toks and toks[0] == "(" and toks[-1] == ")":
-        depth = 0
-        wraps = True
-        for x, t in enumerate(toks):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-                if depth == 0 and x != len(toks) - 1:
-                    wraps = False
-                    break
-        if not wraps:
-            break
+    while toks and toks[0] == "(" and _group_end(toks, 0) == len(toks):
         toks = toks[1:-1]
-    parts: list[list[str]] = []
-    cur: list[str] = []
-    depth = 0
-    for t in toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if depth == 0 and _u(t) == "AND":
-            parts.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        parts.append(cur)
-    return parts
+    parts = _split_top(toks, "AND")
+    return parts if parts[-1] else parts[:-1]
 
 
 def _capture_join_ref(
@@ -430,17 +379,8 @@ def _capture_join_ref(
     modifier, not an alias). Returns (ref_tokens, alias, next_index)."""
     ref: list[str] = []
     if k < len(toks) and toks[k] == "(":
-        depth = 0
-        while k < len(toks):
-            ref.append(toks[k])
-            if toks[k] == "(":
-                depth += 1
-            elif toks[k] == ")":
-                depth -= 1
-                if depth == 0:
-                    k += 1
-                    break
-            k += 1
+        end = _group_end(toks, k)
+        ref, k = toks[k:end], end
     elif (
         k < len(toks)
         and _is_ident(toks[k])
@@ -467,6 +407,16 @@ def _capture_join_ref(
     if k < len(toks) and _u(toks[k]) == "FINAL":
         k += 1
     return ref, alias, k
+
+
+def _join_ref_sql(ref: list[str]) -> str:
+    """A captured join side as SQL. A subquery may itself use any CH
+    construct (PREWHERE, subscripts, FINAL, LIMIT BY, …), so it runs the
+    FULL translation; the result re-enters the token stream as one opaque
+    token that later passes leave alone."""
+    if ref[:1] == ["("]:
+        return "(" + translate(_render(ref[1:-1])) + ")"
+    return _render(ref)
 
 
 # Tokens that end a JOIN's ON clause at depth 0.
@@ -536,21 +486,8 @@ def _rewrite_asof_join(toks: list[str]) -> list[str]:
                             "ASOF JOIN: alias the subquery right side"
                         )
                     alias = ref[-1]
-                cond: list[str] = []
-                m = k + 1
-                depth = 0
-                while m < len(toks):
-                    t = toks[m]
-                    if t == "(":
-                        depth += 1
-                    elif t == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif depth == 0 and _u(t) in _ASOF_CLAUSE_END:
-                        break
-                    cond.append(t)
-                    m += 1
+                m = _clause_end(toks, k + 1, _ASOF_CLAUSE_END)
+                cond = toks[k + 1:m]
 
                 def b_col(side: list[str]) -> str | None:
                     if (
@@ -608,16 +545,12 @@ def _rewrite_asof_join(toks: list[str]) -> list[str]:
                             f"plain {alias}.<column> — qualify the columns"
                         )
                     keys.append(col)
-                if ref and ref[0] == "(" and ref[-1] == ")":
-                    ref_sql = "(" + translate(_render(ref[1:-1])) + ")"
-                else:
-                    ref_sql = _render(ref)
                 order = tcol + (" DESC" if op in ("<=", "<") else "")
                 w = f"OVER (PARTITION BY {', '.join(keys)} ORDER BY {order})"
                 derived = (
                     f"(SELECT * EXCEPT (__prev), lead({tcol}) {w} "
                     f"AS __asof_end FROM (SELECT *, lag({tcol}) {w} "
-                    f"AS __prev FROM {ref_sql}) "
+                    f"AS __prev FROM {_join_ref_sql(ref)}) "
                     f"WHERE NOT (__prev <=> {tcol}))"
                 )
                 out.extend(toks[i + 1:j + 1])  # join kind(s) + JOIN
@@ -677,30 +610,25 @@ _NUM_RE = re.compile(r"^(\d+\.\d*|\.\d+|\d+)$")
 def _pop_primary(out: list[str]) -> list[str]:
     """Pop the trailing primary expression (a balanced call/paren group with
     its function name, or a dotted identifier chain) off ``out``."""
-    toks: list[str] = []
+    def name_at(k: int) -> bool:
+        return k >= 0 and _is_ident(out[k]) and _u(out[k]) not in _KEYWORDS_NOT_CALLS
+
+    start = len(out)
     if out and out[-1] == ")":
-        depth = 0
-        while out:
-            tk = out.pop()
-            toks.append(tk)
-            if tk == ")":
-                depth += 1
-            elif tk == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-        if out and _is_ident(out[-1]) and _u(out[-1]) not in _KEYWORDS_NOT_CALLS:
-            toks.append(out.pop())
+        start = next((s for s in reversed(range(start)) if out[s] == "("
+                      and _group_end(out, s) == len(out)), 0)
+        start -= name_at(start - 1)
     else:
-        while out and _is_ident(out[-1]) and _u(out[-1]) not in _KEYWORDS_NOT_CALLS:
-            toks.append(out.pop())
-            if out and out[-1] == ".":
-                toks.append(out.pop())
-            else:
+        while name_at(start - 1):
+            start -= 1
+            if not start or out[start - 1] != ".":
                 break
-    if not toks:
+            start -= 1
+    if start == len(out):
         raise DialectError("subscript [..] with no preceding expression")
-    return list(reversed(toks))
+    toks = out[start:]
+    del out[start:]
+    return toks
 
 
 def _rewrite_brackets(toks: list[str]) -> list[str]:
@@ -716,21 +644,8 @@ def _rewrite_brackets(toks: list[str]) -> list[str]:
     while i < len(toks):
         t = toks[i]
         if t == "[":
-            depth = 1
-            j = i + 1
-            inner: list[str] = []
-            while j < len(toks) and depth:
-                if toks[j] == "[":
-                    depth += 1
-                elif toks[j] == "]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                inner.append(toks[j])
-                j += 1
-            if depth:
-                raise DialectError("unbalanced [ ] brackets")
-            inner = _rewrite_brackets(inner)
+            j = _group_end(toks, i)
+            inner = _rewrite_brackets(toks[i + 1:j - 1])
             is_subscript = bool(out) and (
                 out[-1] == ")"
                 or (_is_ident(out[-1]) and _u(out[-1]) not in _KEYWORDS_NOT_CALLS)
@@ -743,7 +658,7 @@ def _rewrite_brackets(toks: list[str]) -> list[str]:
                 out.extend(["(", *inner, ")"])
             else:
                 out.extend(["array", "(", *inner, ")"])
-            i = j + 1
+            i = j
             continue
         out.append(t)
         i += 1
@@ -915,63 +830,29 @@ def _rewrite_qualify(toks: list[str]) -> list[str]:
     FROM …) WHERE __qual [ORDER BY …]``. ORDER BY after QUALIFY stays
     outside (subquery columns remain in scope). SELECT DISTINCT with
     QUALIFY raises — the hidden column would change the distinct set."""
-    depth = 0
-    q_at = None
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and _u(t) == "QUALIFY":
-            q_at = i
-            break
+    q_at = next((i for i, t in _top_level(toks) if _u(t) == "QUALIFY"), None)
     if q_at is None:
         return toks
     # Only a depth-0 DISTINCT immediately after a depth-0 SELECT is a
     # SELECT DISTINCT; count(DISTINCT x) in the select list or a DISTINCT
     # inside a FROM-subquery must not trip the guard.
-    d0 = 0
-    for i, t in enumerate(toks[:q_at]):
-        if t == "(":
-            d0 += 1
-        elif t == ")":
-            d0 -= 1
-        elif (
-            d0 == 0 and _u(t) == "DISTINCT"
-            and i >= 1 and _u(toks[i - 1]) == "SELECT"
-        ):
-            raise DialectError(
-                "QUALIFY with SELECT DISTINCT isn't rewritten — filter in "
-                "a subquery, then apply DISTINCT outside"
-            )
+    if any(
+        _u(t) == "DISTINCT" and i >= 1 and _u(toks[i - 1]) == "SELECT"
+        for i, t in _top_level(toks[:q_at])
+    ):
+        raise DialectError(
+            "QUALIFY with SELECT DISTINCT isn't rewritten — filter in "
+            "a subquery, then apply DISTINCT outside"
+        )
     # predicate runs to the next top-level clause
-    pred_end = len(toks)
-    d = 0
-    for i in range(q_at + 1, len(toks)):
-        t = toks[i]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and _u(t) in _CLAUSE_ENDERS:
-            pred_end = i
-            break
+    pred_end = _clause_end(toks, q_at + 1, _CLAUSE_ENDERS)
     pred = toks[q_at + 1:pred_end]
     if not pred:
         raise DialectError("QUALIFY needs a predicate")
     tail = toks[pred_end:]
     body = toks[:q_at]
     # splice the hidden column before the main select's depth-0 FROM
-    d = 0
-    from_at = None
-    for i, t in enumerate(body):
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and _u(t) == "FROM":
-            from_at = i
-            break
+    from_at = next((i for i, t in _top_level(body) if _u(t) == "FROM"), None)
     if from_at is None:
         raise DialectError("QUALIFY without a FROM clause")
     inner = (
@@ -985,34 +866,7 @@ def _rewrite_qualify(toks: list[str]) -> list[str]:
     ]
 
 
-def _find_limit_by(toks: list[str]) -> tuple[int, int, int] | None:
-    """Locate a ``LIMIT <n> BY`` clause; returns (limit_at, by_at, depth)."""
-    depth = 0
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif _u(t) == "LIMIT":
-            d = depth
-            j = i + 1
-            dd = depth
-            while j < len(toks):
-                tj = toks[j]
-                if tj == "(":
-                    dd += 1
-                elif tj == ")":
-                    dd -= 1
-                    if dd < d:
-                        break
-                elif dd == d:
-                    uj = _u(tj)
-                    if uj == "BY":
-                        return i, j, d
-                    if uj in _CLAUSE_ENDERS or uj == "SELECT":
-                        break
-                j += 1
-    return None
+_LIMIT_BY_STOP = _CLAUSE_ENDERS | {"SELECT", "BY"}
 
 
 def _rewrite_limit_by(toks: list[str]) -> list[str]:
@@ -1024,26 +878,24 @@ def _rewrite_limit_by(toks: list[str]) -> list[str]:
     per-group heap pushes into the shuffle), so the translated query keeps
     ClickHouse's own execution shape. Nested (subquery) LIMIT BY raises —
     wrapping an inner scope is ambiguous token surgery."""
-    found = _find_limit_by(toks)
-    if found is None:
+    for limit_at, t in enumerate(toks):
+        if _u(t) == "LIMIT":
+            by_at = _clause_end(toks, limit_at + 1, _LIMIT_BY_STOP)
+            if by_at < len(toks) and _u(toks[by_at]) == "BY":
+                break
+    else:
         return toks
-    limit_at, by_at, depth = found
-    if depth != 0:
+    top = dict(_top_level(toks))
+    if limit_at not in top:
         raise DialectError(
             "LIMIT n BY inside a subquery isn't rewritten — hoist it or use "
             "the row_number()<=n window pattern (see w_topk_per_group)"
         )
-    d0 = 0
-    for i, t in enumerate(toks):
-        if t == "(":
-            d0 += 1
-        elif t == ")":
-            d0 -= 1
-        elif d0 == 0 and _u(t) in ("UNION", "INTERSECT", "EXCEPT"):
-            raise DialectError(
-                "LIMIT n BY over a set operation isn't rewritten — wrap the "
-                "compound in a subquery and apply row_number()<=n outside"
-            )
+    if any(_u(t) in ("UNION", "INTERSECT", "EXCEPT") for t in top.values()):
+        raise DialectError(
+            "LIMIT n BY over a set operation isn't rewritten — wrap the "
+            "compound in a subquery and apply row_number()<=n outside"
+        )
     n_toks = toks[limit_at + 1:by_at]
     off_toks: list[str] | None = None
     if "," in n_toks:
@@ -1054,28 +906,13 @@ def _rewrite_limit_by(toks: list[str]) -> list[str]:
         if not off_toks or not n_toks or "," in n_toks:
             raise DialectError("LIMIT o, n BY takes exactly two counts")
     # ORDER BY clause immediately preceding the LIMIT (CH clause order)
-    order_at = None
-    d0 = 0
-    for i in range(limit_at):
-        t = toks[i]
-        if t == "(":
-            d0 += 1
-        elif t == ")":
-            d0 -= 1
-        elif d0 == 0 and _u(t) == "ORDER" and i + 1 < len(toks) and _u(toks[i + 1]) == "BY":
-            order_at = i
+    order_at = max(
+        (i for i, t in top.items()
+         if i < limit_at and _u(t) == "ORDER" and _u(toks[i + 1]) == "BY"),
+        default=None,
+    )
     # keys run to the next top-level clause (e.g. a trailing global LIMIT)
-    key_end = len(toks)
-    d0 = 0
-    for i in range(by_at + 1, len(toks)):
-        t = toks[i]
-        if t == "(":
-            d0 += 1
-        elif t == ")":
-            d0 -= 1
-        elif d0 == 0 and _u(t) in _CLAUSE_ENDERS:
-            key_end = i
-            break
+    key_end = _clause_end(toks, by_at + 1, _CLAUSE_ENDERS)
     keys = toks[by_at + 1:key_end]
     trailing = toks[key_end:]
     if order_at is not None:
@@ -1131,56 +968,18 @@ def _merge_prewhere(toks: list[str]) -> list[str]:
         if _u(toks[i]) != "PREWHERE":
             i += 1
             continue
-        depth = 0
-        j = i + 1
-        where_at = end_at = None
-        while j < len(toks):
-            t = toks[j]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                if depth == 0:
-                    end_at = j
-                    break
-                depth -= 1
-            elif depth == 0:
-                u = _u(t)
-                if u == "WHERE":
-                    where_at = j
-                    break
-                if u in _CLAUSE_ENDERS:
-                    end_at = j
-                    break
-            j += 1
-        if where_at is not None:
-            # find end of the WHERE clause
-            depth = 0
-            k = where_at + 1
-            wend = len(toks)
-            while k < len(toks):
-                t = toks[k]
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    if depth == 0:
-                        wend = k
-                        break
-                    depth -= 1
-                elif depth == 0 and _u(t) in _CLAUSE_ENDERS:
-                    wend = k
-                    break
-                k += 1
-            pre = toks[i + 1:where_at]
-            cond = toks[where_at + 1:wend]
+        j = _clause_end(toks, i + 1, _CLAUSE_ENDERS | {"WHERE"})
+        pre = toks[i + 1:j]
+        if j < len(toks) and _u(toks[j]) == "WHERE":
+            wend = _clause_end(toks, j + 1, _CLAUSE_ENDERS)
+            cond = toks[j + 1:wend]
             toks = (
                 toks[:i]
                 + ["WHERE", "(", *pre, ")", "AND", "(", *cond, ")"]
                 + toks[wend:]
             )
         else:
-            wend = end_at if end_at is not None else len(toks)
-            pre = toks[i + 1:wend]
-            toks = toks[:i] + ["WHERE", "(", *pre, ")"] + toks[wend:]
+            toks = toks[:i] + ["WHERE", "(", *pre, ")"] + toks[j:]
         i += 1
     return toks
 
@@ -1208,46 +1007,23 @@ def _rewrite_where_aliases(toks: list[str]) -> list[str]:
         if _u(out[i]) != "SELECT":
             i += 1
             continue
-        d = 0
-        # parse the select list: items split on depth-0 commas up to the
-        # matching FROM (relative depth 0 for this SELECT)
+        # the select list runs to this SELECT's depth-0 FROM; a closer
+        # first means this SELECT was a subquery without one
         j = i + 1
         if j < len(out) and _u(out[j]) == "DISTINCT":
             j += 1
-        items: list[list[str]] = [[]]
-        from_at = None
-        while j < len(out):
-            t = out[j]
-            if t == "(":
-                d += 1
-            elif t == ")":
-                if d == 0:
-                    break  # this SELECT was a subquery; its ) ends it
-                d -= 1
-            elif d == 0 and t == ",":
-                items.append([])
-                j += 1
-                continue
-            elif d == 0 and _u(t) == "FROM":
-                from_at = j
-                break
-            items[-1].append(t)
-            j += 1
-        if from_at is None:
-            i = j + 1
+        from_at = _clause_end(out, j, {"FROM"})
+        if from_at == len(out) or _u(out[from_at]) != "FROM":
+            i = from_at + 1
             continue
         # alias -> expr tokens (AS-form only), chained aliases resolved
         aliases: dict[str, list[str]] = {}
-        for item in items:
-            dd = 0
-            as_at = None
-            for k, t in enumerate(item):
-                if t == "(":
-                    dd += 1
-                elif t == ")":
-                    dd -= 1
-                elif dd == 0 and _u(t) == "AS" and k + 1 < len(item):
-                    as_at = k
+        for item in _split_top(out[j:from_at], ","):
+            as_at = max(
+                (k for k, t in _top_level(item)
+                 if _u(t) == "AS" and k + 1 < len(item)),
+                default=None,
+            )
             if as_at is None or as_at + 1 != len(item) - 1:
                 continue
             name = item[as_at + 1]
@@ -1267,23 +1043,20 @@ def _rewrite_where_aliases(toks: list[str]) -> list[str]:
             i = from_at + 1
             continue
         # walk this SELECT's tail; substitute inside WHERE/PREWHERE/HAVING
-        # segments at relative depth 0
-        j = from_at + 1
+        # segments. Clause keywords count at relative depth 0 only; plain
+        # grouping parens stay substitutable, a SUBQUERY group (first token
+        # SELECT) resolves its own names (its SELECT gets its own pass).
+        top = {k for k, _ in _top_level(out, from_at + 1)}
+        end = _clause_end(out, from_at + 1, ())
         in_filter = False
-        # paren stack: True when the group is a SUBQUERY (first token
-        # SELECT) — names inside resolve in the inner scope, not here;
-        # plain grouping parens stay substitutable.
-        stack: list[bool] = []
-        while j < len(out):
+        hits: list[int] = []
+        j = from_at + 1
+        while j < end:
             t = out[j]
-            if t == "(":
-                nxt = out[j + 1] if j + 1 < len(out) else ""
-                stack.append(_u(nxt) == "SELECT")
-            elif t == ")":
-                if not stack:
-                    break
-                stack.pop()
-            elif not stack:
+            if t == "(" and j + 1 < len(out) and _u(out[j + 1]) == "SELECT":
+                j = _group_end(out, j)
+                continue
+            if j in top:
                 u = _u(t)
                 if u in ("WHERE", "PREWHERE", "HAVING"):
                     in_filter = True
@@ -1291,20 +1064,15 @@ def _rewrite_where_aliases(toks: list[str]) -> list[str]:
                     continue
                 if u in _ALIAS_CLAUSE_END or u == "SELECT":
                     in_filter = False
-                    if u == "SELECT":
-                        j += 1
-                        continue
-            # Substitute unless inside a subquery group — a subquery in
-            # WHERE resolves its own names (its SELECT gets its own pass).
-            if in_filter and not any(stack) and t in aliases:
-                prev = out[j - 1] if j > 0 else ""
-                nxt = out[j + 1] if j + 1 < len(out) else ""
-                if prev != "." and nxt != "(" and _u(prev) != "AS":
-                    repl = ["(", *aliases[t], ")"]
-                    out[j:j + 1] = repl
-                    j += len(repl)
-                    continue
+            nxt = out[j + 1] if j + 1 < len(out) else ""
+            if (
+                in_filter and t in aliases and out[j - 1] != "."
+                and nxt != "(" and _u(out[j - 1]) != "AS"
+            ):
+                hits.append(j)
             j += 1
+        for j in reversed(hits):
+            out[j:j + 1] = ["(", *aliases[out[j]], ")"]
         i = from_at + 1
     return out
 
@@ -1321,51 +1089,17 @@ def _rewrite_scalar_with(toks: list[str]) -> list[str]:
         if _u(toks[i]) != "WITH":
             i += 1
             continue
-        # parse comma-separated `expr AS name` entries; bail to CTE handling
-        # if any entry has `name AS (`
-        j = i + 1
-        depth = 0
+        # parse comma-separated `expr AS name` entries up to the depth-0
+        # SELECT; bail to CTE handling if any entry has `name AS (`
+        end = _clause_end(toks, i + 1, {"SELECT"})
         entries: list[tuple[list[str], str]] = []
-        cur: list[str] = []
-        name: str | None = None
-        ok = True
-        end = None
-        while j < len(toks):
-            t = toks[j]
-            if t == "(":
-                depth += 1
-                cur.append(t)
-            elif t == ")":
-                depth -= 1
-                cur.append(t)
-            elif depth == 0 and _u(t) == "AS":
-                if (
-                    j + 1 >= len(toks)
-                    or not _is_ident(toks[j + 1])
-                    or (j + 2 < len(toks) and toks[j + 2] == "(")
-                    or not cur
-                ):
-                    ok = False
-                    break
-                name = toks[j + 1]
-                j += 1
-            elif depth == 0 and t == "," and name is not None:
-                entries.append((cur, name))
-                cur, name = [], None
-            elif depth == 0 and _u(t) == "SELECT":
-                if name is None:
-                    ok = False
-                    break
-                entries.append((cur, name))
-                end = j
+        for e in _split_top(toks[i + 1:end], ","):
+            as_at = [k for k, t in _top_level(e) if _u(t) == "AS"]
+            if as_at != [len(e) - 2] or len(e) < 3 or not _is_ident(e[-1]):
+                entries = []
                 break
-            elif name is None:
-                cur.append(t)
-            else:
-                ok = False  # tokens after the alias name
-                break
-            j += 1
-        if not ok or end is None or not entries:
+            entries.append((e[:-2], e[-1]))
+        if end == len(toks) or _u(toks[end]) != "SELECT" or not entries:
             i += 1
             continue
         # substitute: every later bare reference to a name -> ( expr )
@@ -1429,42 +1163,17 @@ def _parse_order_fill_list(
     the index just past the list (at INTERPOLATE / LIMIT / end). FROM/TO/
     STEP belong to the preceding WITH FILL, so only LIMIT / INTERPOLATE /
     a closing paren end the list."""
-    items: list[list[str]] = [[]]
-    d = 0
-    i = order_at + 2
-    while i < len(toks):
-        t = toks[i]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-            if d < 0:
-                break
-        elif d == 0 and _u(t) in ("LIMIT", "INTERPOLATE", "UNION",
-                                  "INTERSECT", "EXCEPT"):
-            break
-        if t == "," and d == 0:
-            items.append([])
-        else:
-            items[-1].append(t)
-        i += 1
+    i = _clause_end(toks, order_at + 2, {"LIMIT", "INTERPOLATE", "UNION",
+                                         "INTERSECT", "EXCEPT"})
     entries = []
-    for item in items:
+    for item in _split_top(toks[order_at + 2:i], ","):
         if not item:
             raise DialectError("empty ORDER BY entry")
-        fill_pos = None
-        d = 0
-        for j, t in enumerate(item):
-            if t == "(":
-                d += 1
-            elif t == ")":
-                d -= 1
-            elif (
-                d == 0 and _u(t) == "WITH" and j + 1 < len(item)
-                and _u(item[j + 1]) == "FILL"
-            ):
-                fill_pos = j
-                break
+        fill_pos = next(
+            (j for j, t in _top_level(item) if _u(t) == "WITH"
+             and j + 1 < len(item) and _u(item[j + 1]) == "FILL"),
+            None,
+        )
         head = item[:fill_pos] if fill_pos is not None else list(item)
         dirn = None
         if head and _u(head[-1]) in ("ASC", "DESC"):
@@ -1478,19 +1187,8 @@ def _parse_order_fill_list(
             j = fill_pos + 2
             while j < len(item) and _u(item[j]) in ("FROM", "TO", "STEP"):
                 kw = _u(item[j])
-                j += 1
-                run: list[str] = []
-                d = 0
-                while j < len(item):
-                    t = item[j]
-                    if t == "(":
-                        d += 1
-                    elif t == ")":
-                        d -= 1
-                    elif d == 0 and _u(t) in ("FROM", "TO", "STEP"):
-                        break
-                    run.append(t)
-                    j += 1
+                end = _clause_end(item, j + 1, ("FROM", "TO", "STEP"))
+                run, j = item[j + 1:end], end
                 if not run:
                     raise DialectError(f"WITH FILL {kw} needs an expression")
                 fill[kw] = run
@@ -1594,31 +1292,20 @@ def _rewrite_with_fill_composed(
             )
         if len(tail) < 2 or tail[1] != "(":
             raise DialectError("INTERPOLATE needs a parenthesized column list")
-        m = 2
-        while m < len(tail) and tail[m] != ")":
-            t = tail[m]
-            if t == ",":
-                m += 1
-                continue
-            if not _is_ident(t):
+        close = _clause_end(tail, 2, ())
+        for e in _split_top(tail[2:close], ","):
+            if len(e) > 1 or (e and not _is_ident(e[0])):
                 raise DialectError(
                     "composed WITH FILL supports INTERPOLATE (col, …) "
                     "carry-forward only; the `col AS expr` recurrence "
                     "needs the single-key ungrouped form"
                 )
-            if m + 1 < len(tail) and _u(tail[m + 1]) == "AS":
-                raise DialectError(
-                    "composed WITH FILL supports INTERPOLATE (col, …) "
-                    "carry-forward only; the `col AS expr` recurrence "
-                    "needs the single-key ungrouped form"
-                )
-            interp_cols.append(t)
-            m += 1
-        if m >= len(tail):
+            interp_cols += e
+        if close == len(tail):
             raise DialectError("INTERPOLATE list is not closed")
         if not interp_cols:
             raise DialectError("INTERPOLATE needs at least one column")
-        tail = tail[m + 1:]
+        tail = tail[close + 1:]
 
     # Expression fill keys -> hidden columns on the body.
     hidden: list[tuple[str, list[str]]] = []
@@ -1767,23 +1454,12 @@ def _rewrite_with_fill(toks: list[str]) -> list[str]:
     subquery fills still fall through to the loud error in
     _rewrite_with_totals."""
     # Locate a depth-0 ORDER BY ... WITH FILL.
-    depth = 0
-    order_at = None
-    fill_at = None
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and _u(t) == "ORDER" and i + 1 < len(toks) and _u(toks[i + 1]) == "BY":
+    order_at = fill_at = None
+    for i, t in _top_level(toks):
+        nxt = _u(toks[i + 1]) if i + 1 < len(toks) else ""
+        if _u(t) == "ORDER" and nxt == "BY":
             order_at = i
-        elif (
-            depth == 0
-            and _u(t) == "WITH"
-            and i + 1 < len(toks)
-            and _u(toks[i + 1]) == "FILL"
-            and order_at is not None
-        ):
+        elif _u(t) == "WITH" and nxt == "FILL" and order_at is not None:
             fill_at = i
             break
     if fill_at is None:
@@ -1813,19 +1489,8 @@ def _rewrite_with_fill(toks: list[str]) -> list[str]:
     bounds: dict[str, list[str]] = {}
     while i < len(toks) and _u(toks[i]) in ("FROM", "TO", "STEP"):
         kw = _u(toks[i])
-        i += 1
-        run: list[str] = []
-        d = 0
-        while i < len(toks):
-            t = toks[i]
-            if t == "(":
-                d += 1
-            elif t == ")":
-                d -= 1
-            elif d == 0 and _u(t) in _FILL_STOP:
-                break
-            run.append(t)
-            i += 1
+        end = _clause_end(toks, i + 1, _FILL_STOP)
+        run, i = toks[i + 1:end], end
         if not run:
             raise DialectError(f"WITH FILL {kw} needs an expression")
         bounds[kw] = run
@@ -1835,45 +1500,29 @@ def _rewrite_with_fill(toks: list[str]) -> list[str]:
     if i < len(toks) and _u(toks[i]) == "INTERPOLATE":
         if i + 1 >= len(toks) or toks[i + 1] != "(":
             raise DialectError("INTERPOLATE needs a parenthesized column list")
-        m2 = i + 2
-        while m2 < len(toks) and not (toks[m2] == ")"):
-            t2 = toks[m2]
-            if t2 == ",":
-                m2 += 1
+        close = _clause_end(toks, i + 2, ())
+        for e in _split_top(toks[i + 2:close], ","):
+            if not e:
                 continue
-            if not _is_ident(t2) or _u(t2) == "AS":
+            if (
+                not _is_ident(e[0]) or _u(e[0]) == "AS"
+                or (len(e) > 1 and _u(e[1]) != "AS")
+            ):
                 raise DialectError(
                     "INTERPOLATE entries are `col` or `col AS expr`"
                 )
-            col = t2
-            m2 += 1
-            expr_toks: list[str] | None = None
-            if m2 < len(toks) and _u(toks[m2]) == "AS":
-                m2 += 1
-                expr_toks = []
-                d2 = 0
-                while m2 < len(toks):
-                    t3 = toks[m2]
-                    if t3 == "(":
-                        d2 += 1
-                    elif t3 == ")":
-                        if d2 == 0:
-                            break
-                        d2 -= 1
-                    elif d2 == 0 and t3 == ",":
-                        break
-                    expr_toks.append(t3)
-                    m2 += 1
+            expr_toks = e[2:] if len(e) > 1 else None
+            if expr_toks is not None:
                 if not expr_toks:
                     raise DialectError("INTERPOLATE (col AS expr) needs "
                                        "an expression")
-                _check_recurrence_refs(col, expr_toks)
-            interp.append((col, expr_toks))
-        if m2 >= len(toks):
+                _check_recurrence_refs(e[0], expr_toks)
+            interp.append((e[0], expr_toks))
+        if close == len(toks):
             raise DialectError("INTERPOLATE list is not closed")
         if not interp:
             raise DialectError("INTERPOLATE needs at least one column")
-        i = m2 + 1
+        i = close + 1
     if ("FROM" in bounds) != ("TO" in bounds):
         raise DialectError(
             "WITH FILL needs both FROM and TO (or neither, to span the "
@@ -1985,20 +1634,13 @@ def _rewrite_with_totals(toks: list[str]) -> list[str]:
                     "sql_recursive_date_spine)"
                 )
             if nxt == "TOTALS":
-                # find the GROUP BY keys that precede this WITH TOTALS
-                depth = 0
-                j = i - 1
-                by_at = None
-                while j >= 0:
-                    t = toks[j]
-                    if t == ")":
-                        depth += 1
-                    elif t == "(":
-                        depth -= 1
-                    elif depth == 0 and _u(t) == "BY" and j > 0 and _u(toks[j - 1]) == "GROUP":
-                        by_at = j
-                        break
-                    j -= 1
+                # the nearest GROUP BY before this WITH TOTALS in its scope
+                by_at = next(
+                    (j for j in range(i - 1, 0, -1)
+                     if _u(toks[j]) == "BY" and _u(toks[j - 1]) == "GROUP"
+                     and any(x == i for x, _ in _top_level(toks, j))),
+                    None,
+                )
                 if by_at is None:
                     raise DialectError("WITH TOTALS without a GROUP BY")
                 keys = toks[by_at + 1:i]
@@ -2022,26 +1664,11 @@ def _rewrite_array_join(toks: list[str]) -> list[str]:
         if _u(toks[i]) == "ARRAY" and i + 1 < len(toks) and _u(toks[i + 1]) == "JOIN":
             left = i > 0 and _u(toks[i - 1]) == "LEFT"
             start = i - 1 if left else i
-            depth = 0
-            j = i + 2
-            as_at = None
-            while j < len(toks):
-                t = toks[j]
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif depth == 0:
-                    u = _u(t)
-                    if u == "AS":
-                        as_at = j
-                        break
-                    if u in _CLAUSE_ENDERS or u == "WHERE":
-                        break
-                j += 1
-            if as_at is None or as_at + 1 >= len(toks) or not _is_ident(toks[as_at + 1]):
+            as_at = _clause_end(toks, i + 2, _CLAUSE_ENDERS | {"AS", "WHERE"})
+            if (
+                as_at + 1 >= len(toks) or _u(toks[as_at]) != "AS"
+                or not _is_ident(toks[as_at + 1])
+            ):
                 raise DialectError(
                     "ARRAY JOIN requires the `ARRAY JOIN <expr> AS <alias>` "
                     "form here (multi-array and implicit-alias variants: "
@@ -2105,12 +1732,8 @@ def _rewrite_time_decayed(toks: list[str]) -> list[str]:
         if j2 + 1 >= len(toks) or _u(toks[j2]) != "OVER" or toks[j2 + 1] != "(":
             i += 1  # no OVER — loud pointer explains the window contract
             continue
-        spec_parts, j3 = _parse_args(toks, j2 + 1)
-        spec_toks: list[str] = []
-        for k, p in enumerate(spec_parts):
-            if k:
-                spec_toks.append(",")
-            spec_toks.extend(p)
+        j3 = _group_end(toks, j2 + 1)
+        spec_toks = toks[j2 + 2:j3 - 1]
         lam = _render(params[0])
         if kind == "count":
             if len(args) != 1:
@@ -2127,17 +1750,7 @@ def _rewrite_time_decayed(toks: list[str]) -> list[str]:
         part = ""
         if "PARTITION" in u:
             p0 = u.index("PARTITION")
-            p1 = p0 + 2
-            depth = 0
-            while p1 < len(spec_toks):
-                x = spec_toks[p1]
-                if x == "(":
-                    depth += 1
-                elif x == ")":
-                    depth -= 1
-                elif depth == 0 and _u(x) in ("ORDER", "ROWS", "RANGE"):
-                    break
-                p1 += 1
+            p1 = _clause_end(spec_toks, p0 + 2, ("ORDER", "ROWS", "RANGE"))
             part = "PARTITION BY " + _render(spec_toks[p0 + 2:p1])
         spec = _render(spec_toks)
         # cast(t as double): epoch seconds for timestamps, identity for
@@ -2210,49 +1823,31 @@ def _rewrite_entropy_cells(toks: list[str]) -> list[str]:
     if not toks or _u(toks[0]) != "SELECT":
         return toks
 
-    # depth map + top-level clause positions
-    depth = 0
-    from_at = group_at = None
-    ent_depths = set()
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif _is_ident(t) and t.lower() in ("entropy", "theilsu"):
-            ent_depths.add(depth)
-        elif depth == 0:
-            u = _u(t)
-            if u in ("UNION", "INTERSECT", "EXCEPT", "HAVING", "DISTINCT",
-                     "ROLLUP", "CUBE", "GROUPING"):
-                # ROLLUP/CUBE/GROUPING SETS super-aggregate rows would see
-                # per-base-group marginal windows — the cells rewrite is
-                # silently wrong there (ADVICE r11, high). Keep the fold.
-                return toks
-            if u == "FROM" and from_at is None:
-                from_at = i
-            elif (
-                u == "GROUP" and i + 1 < len(toks)
-                and _u(toks[i + 1]) == "BY"
-            ):
-                group_at = i
-    if ent_depths != {0} or from_at is None:
+    # top-level clause positions
+    top = dict(_top_level(toks))
+    if any(
+        _u(t) in ("UNION", "INTERSECT", "EXCEPT", "HAVING", "DISTINCT",
+                  "ROLLUP", "CUBE", "GROUPING")
+        for t in top.values()
+    ):
+        # ROLLUP/CUBE/GROUPING SETS super-aggregate rows would see
+        # per-base-group marginal windows — the cells rewrite is
+        # silently wrong there (ADVICE r11, high). Keep the fold.
+        return toks
+    from_at = next((i for i, t in top.items() if _u(t) == "FROM"), None)
+    group_at = max(
+        (i for i, t in top.items()
+         if _u(t) == "GROUP" and i + 1 < len(toks) and _u(toks[i + 1]) == "BY"),
+        default=None,
+    )
+    if from_at is None or any(
+        i not in top for i, t in enumerate(low) if t in ("entropy", "theilsu")
+    ):
         return toks  # entropy only inside subqueries (or no FROM): fold
 
     # --- select items ---------------------------------------------------
-    items: list[list[str]] = [[]]
-    depth = 0
-    for t in toks[1:from_at]:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if t == "," and depth == 0:
-            items.append([])
-        else:
-            items[-1].append(t)
     parsed: list[tuple] = []  # ('key', name) | (fn, args, alias)
-    for it in items:
+    for it in _split_top(toks[1:from_at], ","):
         if len(it) == 1 and _is_ident(it[0]):
             parsed.append(("key", it[0]))
             continue
@@ -2265,17 +1860,16 @@ def _rewrite_entropy_cells(toks: list[str]) -> list[str]:
             alias, body = body[-1], body[:-2]
         if alias is None:
             return toks  # unaliased: keep the fold (preserves the name)
-        want = 1 if fn == "entropy" else 2
-        shape1 = len(body) == 3 and body[0] == "(" and body[-1] == ")"
-        shape2 = len(body) == 5 and body[0] == "(" and body[2] == "," \
-            and body[-1] == ")"
-        if want == 1 and shape1 and _is_ident(body[1]):
-            parsed.append((fn, [body[1]], alias))
-        elif want == 2 and shape2 and _is_ident(body[1]) \
-                and _is_ident(body[3]):
-            parsed.append((fn, [body[1], body[3]], alias))
-        else:
+        args = (
+            _split_top(body[1:-1], ",")
+            if body and body[0] == "(" and _group_end(body, 0) == len(body)
+            else []
+        )
+        if len(args) != (1 if fn == "entropy" else 2) or any(
+            len(a) != 1 or not _is_ident(a[0]) for a in args
+        ):
             return toks  # expression args: keep the fold
+        parsed.append((fn, [a[0] for a in args], alias))
     if not any(p[0] in ("entropy", "theilsu") for p in parsed):
         return toks
 
@@ -2303,17 +1897,7 @@ def _rewrite_entropy_cells(toks: list[str]) -> list[str]:
     else:
         # global aggregate: split any top-level ORDER BY / LIMIT off the
         # FROM tail so they re-attach to the OUTER select.
-        cut = len(toks)
-        d0 = 0
-        for i in range(from_at, len(toks)):
-            t = toks[i]
-            if t == "(":
-                d0 += 1
-            elif t == ")":
-                d0 -= 1
-            elif d0 == 0 and _u(t) in ("ORDER", "LIMIT", "SORT"):
-                cut = i
-                break
+        cut = _clause_end(toks, from_at, ("ORDER", "LIMIT", "SORT"))
         tail = toks[from_at:cut]
         trailing = toks[cut:]
     key_set = {k.lower() for k in keys}
@@ -7085,37 +6669,9 @@ def _apply_function(name: str, rendered_args: list[str],
 
 def _parse_args(toks: list[str], open_at: int) -> tuple[list[list[str]], int]:
     """toks[open_at] == '('; return (arg token lists, index after ')')."""
-    assert toks[open_at] == "("
-    args: list[list[str]] = []
-    cur: list[str] = []
-    depth = 1
-    brackets = 0  # [...] array literals must not split at their commas
-    i = open_at + 1
-    while i < len(toks):
-        t = toks[i]
-        if t == "(":
-            depth += 1
-            cur.append(t)
-        elif t == ")":
-            depth -= 1
-            if depth == 0:
-                if cur or args:
-                    args.append(cur)
-                return args, i + 1
-            cur.append(t)
-        elif t == "[":
-            brackets += 1
-            cur.append(t)
-        elif t == "]":
-            brackets -= 1
-            cur.append(t)
-        elif t == "," and depth == 1 and brackets == 0:
-            args.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-        i += 1
-    raise DialectError("unbalanced parentheses")
+    end = _group_end(toks, open_at)
+    inner = toks[open_at + 1:end - 1]
+    return (_split_top(inner, ",") if inner else []), end
 
 
 _NO_SPACE_BEFORE = {",", ")", ".", "]"}
@@ -7296,26 +6852,33 @@ def _translate(sql: str) -> str:
 # codec/wave trees). A DataFrame is an immutable lazy plan, computed from
 # the parquet inputs at every action, so reusing one is not result caching;
 # like the ``tables.load_tables`` catalog it lives in the session's state.
-# The key pins the sf_dir (analysis binds concrete file relations), the
-# dialect text (it names the layout it reads, e.g. ``documents_wide``) and
-# the session's Ddl (a re-pointed dictionary is another plan).
+# The translation is memoized on (sql, the session's Ddl); the plan on
+# (sf_dir, translated text): analysis binds concrete file relations, and
+# the text names everything else it reads — the layout (e.g.
+# ``documents_wide``) and each dictionary view or SAMPLE BY key the query
+# uses. A declaration the query does not read leaves its plan alone; a
+# re-pointed dictionary changes the text and so the plan.
 def clickhouse_sql(spark, sql: str, sf_dir: str | None = None):
     """Translate ``sql`` under the session's Ddl and run it on Spark.
 
     When ``sf_dir`` is given, the engine's tables are (re)registered as temp
     views first, so table names resolve exactly as they would against the
     reference's warehouse — and the analyzed plan is memoized per
-    (session, sf_dir, sql, Ddl), see the note above.
+    (session, sf_dir, translated text), see the note above.
     """
     from .session import state
     from .tables import load_tables
 
     st = state(spark)
     ddl = st.get("ddl", Ddl())
-    if sf_dir is None:
-        return spark.sql(translate(sql, ddl))
-    load_tables(spark, sf_dir)
-    key = ("plan", sf_dir, sql, ddl)
+    key = ("translation", sql, ddl)
     if key not in st:
-        st[key] = spark.sql(translate(sql, ddl))
+        st[key] = translate(sql, ddl)
+    text = st[key]
+    if sf_dir is None:
+        return spark.sql(text)
+    load_tables(spark, sf_dir)
+    key = ("plan", sf_dir, text)
+    if key not in st:
+        st[key] = spark.sql(text)
     return st[key]

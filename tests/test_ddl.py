@@ -327,6 +327,34 @@ def test_maintenance_commands_translate():
         translate_maintenance("ALTER TABLE t ADD COLUMN x Int64")
 
 
+def test_maintenance_expressions_read_the_given_dictionaries():
+    from python_cdc_postgres_to_clickhouse_spark.dialect import (
+        Ddl,
+        DictionarySpec,
+    )
+
+    sql = (
+        "ALTER TABLE users UPDATE nation = dictGet('cust_nation', 'n_name', "
+        "id) WHERE id > 3"
+    )
+    with pytest.raises(DialectError, match="'cust_nation' is not registered"):
+        translate_maintenance(sql)
+    ddl = Ddl().with_dictionary(
+        DictionarySpec("cust_nation", "dim_cust_nation", "c_custkey")
+    )
+    p = translate_maintenance(sql, ddl)
+    assert p.predicate == "id > 3"
+    assert p.assignments == [(
+        "nation",
+        "(SELECT max(__dict_val) FROM (SELECT c_custkey AS __dict_key, "
+        "n_name AS __dict_val FROM dim_cust_nation) WHERE __dict_key = (id))",
+    )]
+    p = translate_maintenance(
+        "ALTER TABLE users DELETE WHERE dictHas('cust_nation', id)", ddl
+    )
+    assert "FROM dim_cust_nation" in p.predicate
+
+
 def test_skip_indexes_bloom_vs_dropped():
     plan = translate_ddl(
         "CREATE TABLE t (a UInt64, b String, c String, "
@@ -486,3 +514,42 @@ def test_modify_ttl_translates_to_compaction_horizon():
     )
     assert plan.op == "modify_ttl" and plan.table == "metrics"
     assert "INTERVAL" in plan.ttl.upper() and "compact" in plan.strategy
+
+
+# ---------------------------------------------------------------------------
+# Quoted text: parentheses and commas inside string literals are text
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "CREATE TABLE t (a String COMMENT 'see (note', b Int32) "
+        "ENGINE = MergeTree ORDER BY a",
+        "CREATE TABLE t (a String DEFAULT ')', b Int32) "
+        "ENGINE = MergeTree ORDER BY a",
+        "CREATE TABLE t (a String DEFAULT 'x,y', b Int32) "
+        "ENGINE = MergeTree ORDER BY a",
+    ],
+)
+def test_quoted_parens_and_commas_stay_inside_their_column(sql):
+    plan = translate_ddl(sql)
+    assert plan.columns == [("a", "STRING"), ("b", "INT")]
+    assert plan.order_by == ["a"]
+
+
+def test_dictionary_attribute_default_with_a_quoted_paren():
+    from python_cdc_postgres_to_clickhouse_spark.ddl import translate_dictionary
+
+    plan = translate_dictionary(
+        "CREATE DICTIONARY d (k UInt64, v String DEFAULT ')', w Int32) "
+        "PRIMARY KEY k SOURCE(CLICKHOUSE(TABLE 'src')) LAYOUT(HASHED()) "
+        "LIFETIME(300)"
+    )
+    assert plan.columns == [("k", "BIGINT"), ("v", "STRING"), ("w", "INT")]
+    assert (plan.key, plan.source_table) == ("k", "src")
+
+
+def test_update_assignment_with_a_quoted_comma():
+    p = translate_maintenance("ALTER TABLE t UPDATE note = 'a,b' WHERE id = 1")
+    assert p.assignments == [("note", "'a,b'")]

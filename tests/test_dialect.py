@@ -132,7 +132,7 @@ def test_join_modifiers_stripped_but_union_all_kept():
     assert translate("SELECT * FROM a ANY LEFT JOIN b USING (k)") == (
         "SELECT * FROM a LEFT JOIN (SELECT * EXCEPT (__rn) FROM "
         "(SELECT *, row_number() OVER (PARTITION BY k ORDER BY k) AS __rn "
-        "FROM b) WHERE __rn = 1) USING (k)"
+        "FROM b) WHERE __rn = 1) AS b USING (k)"
     )
     assert "__rn = 1" in translate("SELECT * FROM a ANY LEFT JOIN b ON a.k = b.k")
     with pytest.raises(DialectError, match="LEFT side"):
@@ -1632,6 +1632,22 @@ def test_any_join_on_form_semantics(spark):
     ]
     spark.catalog.dropTempView("any_l")
     spark.catalog.dropTempView("any_r")
+
+
+@pytest.mark.parametrize("final", ["", " FINAL"])
+def test_any_join_using_keeps_the_right_tables_name(spark, final):
+    """The dedup subquery of an unaliased right table is aliased with the
+    table's bare name, and a trailing FINAL is the no-op modifier, not an
+    alias — so ``b.v`` resolves in the select list."""
+    s = spark.newSession()
+    s.createDataFrame([(1,), (2,)], "k bigint").createOrReplaceTempView("a")
+    s.createDataFrame(
+        [(1, "x"), (1, "x"), (2, "y")], "k bigint, v string"
+    ).createOrReplaceTempView("b")
+    rows = s.sql(translate(
+        f"SELECT a.k, b.v FROM a ANY LEFT JOIN b{final} USING (k)"
+    )).collect()
+    assert sorted(tuple(r) for r in rows) == [(1, "x"), (2, "y")]
 
 
 # ---------------------------------------------------------------------------

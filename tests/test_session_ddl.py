@@ -2,8 +2,9 @@
 
 A session declares into its own ``dialect.Ddl`` (``register_dictionary`` /
 ``register_sample_key``); its ``clickhouse_sql`` calls translate under it,
-and the analyzed-plan cache is keyed on it. Everything here runs in this
-process on sessions of the shared context, at the smoke scale.
+and the analyzed-plan cache is keyed on the text that translation gives.
+Everything here runs in this process on sessions of the shared context, at
+the smoke scale.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from python_cdc_postgres_to_clickhouse_spark.dialect import (
 from python_cdc_postgres_to_clickhouse_spark.queries.chsql import (
     CH_DICT_LOOKUP,
     sql_ch_dict_lookup,
+    sql_ch_events_rollup,
 )
 from python_cdc_postgres_to_clickhouse_spark.registry import all_queries
 from python_cdc_postgres_to_clickhouse_spark.session import state
@@ -69,6 +71,16 @@ def test_plan_cache_follows_the_sessions_dictionaries(spark):
 
     # declaring the first view again serves the first plan again
     assert sql_ch_dict_lookup(s, SF_SMOKE) is first
+
+
+def test_a_declaration_the_query_does_not_read_keeps_its_plan(spark):
+    s = spark.newSession()
+    rollup = sql_ch_events_rollup(s, SF_SMOKE)
+    assert sql_ch_events_rollup(s, SF_SMOKE) is rollup
+    sql_ch_dict_lookup(s, SF_SMOKE)  # declares cust_nation in the session
+    assert sql_ch_events_rollup(s, SF_SMOKE) is rollup
+    plans = [k for k in state(s) if isinstance(k, tuple) and k[0] == "plan"]
+    assert len(plans) == 2, plans
 
 
 def test_dictget_inside_an_any_join_subquery_reads_the_session_dictionary(spark):
