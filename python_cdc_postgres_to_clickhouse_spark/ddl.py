@@ -396,25 +396,29 @@ _CLAUSE_RE = re.compile(
     r"|\bPRIMARY\s+KEY\s+"
     r"|\bSAMPLE\s+BY\s+"
     r"|\bTTL\s+"
-    r"|\bSETTINGS\s+",
+    r"|\bSETTINGS\s+"
+    r"|\bCOMMENT\s+",
     re.I,
 )
 
 
 def _extract_clause(sql: str, name: str) -> str | None:
-    """Extract the expression following clause ``name`` up to the next
-    top-level clause keyword."""
-    m = re.search(rf"\b{name}\s+", sql, re.I)
-    if not m:
+    """Extract the expression following the top-level clause keyword
+    ``name`` up to the next top-level clause keyword or table ``COMMENT``.
+    Keywords inside string literals or brackets neither start nor end a
+    clause."""
+    ms = _token_matches(sql)
+    top = [ms[j] for j, _ in _top_level([m.group() for m in ms])]
+    start = re.compile(rf"{name}\s+", re.I)
+    head = next((h for t in top if (h := start.match(sql, t.start()))), None)
+    if head is None:
         return None
-    rest = sql[m.end():]
-    ms = _token_matches(rest)
     end = next(
-        (ms[j].start() for j, _ in _top_level([m.group() for m in ms])
-         if _CLAUSE_RE.match(rest, ms[j].start())),
-        len(rest),
+        (t.start() for t in top
+         if t.start() >= head.end() and _CLAUSE_RE.match(sql, t.start())),
+        len(sql),
     )
-    return rest[:end].strip() or None
+    return sql[head.end():end].strip() or None
 
 
 def _strip_tuple(expr: str) -> list[str]:

@@ -43,16 +43,17 @@ from .dialect import Ddl, DialectError, _clause_end, _tokenize
 
 
 def split_statements(script: str) -> list[str]:
-    """Split a SQL script on semicolons outside quotes/comments."""
+    """Split a SQL script on semicolons outside string literals, quoted
+    identifiers and comments; comments are dropped."""
     out: list[str] = []
     cur: list[str] = []
     i, n = 0, len(script)
     while i < n:
         ch = script[i]
-        if ch == "'":
+        if ch in "'\"`":
             j = i + 1
             while j < n:
-                if script[j] == "'" and script[j - 1] != "\\":
+                if script[j] == ch and script[j - 1] != "\\":
                     break
                 j += 1
             cur.append(script[i:j + 1])
@@ -61,6 +62,11 @@ def split_statements(script: str) -> list[str]:
         if script.startswith("--", i):
             j = script.find("\n", i)
             i = n if j < 0 else j
+            continue
+        if script.startswith("/*", i):
+            j = script.find("*/", i + 2)
+            cur.append(" ")
+            i = n if j < 0 else j + 2
             continue
         if ch == ";":
             stmt = "".join(cur).strip()

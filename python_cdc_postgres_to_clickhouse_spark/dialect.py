@@ -1042,12 +1042,14 @@ def _rewrite_where_aliases(toks: list[str]) -> list[str]:
         if not aliases:
             i = from_at + 1
             continue
-        # walk this SELECT's tail; substitute inside WHERE/PREWHERE/HAVING
-        # segments. Clause keywords count at relative depth 0 only; plain
-        # grouping parens stay substitutable, a SUBQUERY group (first token
-        # SELECT) resolves its own names (its SELECT gets its own pass).
+        # walk this SELECT's tail, which ends at the scope's closer or a
+        # depth-0 set operator (the next branch resolves its own names);
+        # substitute inside WHERE/PREWHERE/HAVING segments. Clause keywords
+        # count at relative depth 0 only; plain grouping parens stay
+        # substitutable, a SUBQUERY group (first token SELECT) resolves its
+        # own names (its SELECT gets its own pass).
         top = {k for k, _ in _top_level(out, from_at + 1)}
-        end = _clause_end(out, from_at + 1, ())
+        end = _clause_end(out, from_at + 1, {"UNION", "INTERSECT", "EXCEPT"})
         in_filter = False
         hits: list[int] = []
         j = from_at + 1

@@ -560,8 +560,8 @@ def decode_from_registry(
     Evolution contract (SURVEY.md §4): when the registry publishes a new
     version (e.g. a new nullable column), restart the stream — this call
     then compiles the new decoder and the output gains the column; the
-    upsert sink null-extends old state via mergeSchema
-    (streaming/upsert_sink.py). The reference instead resolves writer
+    upsert sink null-extends old state through the schema its state
+    records (streaming/buckets.py). The reference instead resolves writer
     schemas per message (main.py:22) — per-plan resolution is the Spark
     idiom because the decode expression is fixed at plan time.
     """

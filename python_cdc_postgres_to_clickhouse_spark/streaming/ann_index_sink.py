@@ -60,7 +60,8 @@ from pyspark.sql import functions as F
 
 from ..operators.pq import ivfpq_encode, ivfpq_fit, ivfpq_topk
 from ..operators.similarity import sample_order_expr
-from .parts import ForeachBatchSink, PartStore, WriteOnce
+from .buckets import WriteOnce
+from .parts import ForeachBatchSink, PartStore
 
 
 class IvfPqIndexSink(ForeachBatchSink):

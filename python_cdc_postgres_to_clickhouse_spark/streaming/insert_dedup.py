@@ -19,7 +19,7 @@ dropping the second IS the correct dedup.
 Scale: the hash is one map-side pass + a 3-number aggregate (no shuffle of
 the data, no sort); the hash window is a driver-side JSON file of ≤N
 16-byte digests, committed per batch as the next version of
-``_block_hashes/K.json`` through ``parts.WriteOnce`` (Hadoop FS API, so a
+``_block_hashes/K.json`` through ``buckets.WriteOnce`` (Hadoop FS API, so a
 ``file://`` or remote ``out_dir`` keeps its window beside its data). Appends are plain parquet appends — no read-modify-write
 of existing state, so block size, not table size, bounds each commit.
 """
@@ -33,7 +33,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .parts import WriteOnce
+from .buckets import WriteOnce
 
 
 def block_hash(df: DataFrame) -> str | None:

@@ -1,6 +1,5 @@
-"""The parts-and-manifest commit protocol shared by the additive sinks, the
-write-once commit for their small metadata files, and the one way every
-foreachBatch sink starts its stream.
+"""The parts-and-manifest commit protocol shared by the additive sinks, and
+the one way every foreachBatch sink starts its stream.
 
 ClickHouse keeps aggregated state as MergeTree parts: each insert writes a
 new immutable part, SELECT merges the parts at read time, and a background
@@ -30,10 +29,10 @@ it there. ``PartStore`` is that model over one directory:
 Every filesystem call goes through the Hadoop ``FileSystem`` API
 (``buckets.hadoop_fs``), so the store works on a plain path, a ``file://``
 URI or a remote directory. Two Hadoop behaviours shape the code: renaming
-a file onto an existing file returns False, which ``WriteOnce`` uses as its
-first-writer-wins commit; renaming a directory onto an existing directory
-succeeds and nests the source inside it, so ``publish`` never renames onto
-a published part.
+a file onto an existing file returns False, which ``buckets.WriteOnce``
+(the manifest's commit) uses as its first-writer-wins commit; renaming a
+directory onto an existing directory succeeds and nests the source inside
+it, so ``publish`` never renames onto a published part.
 """
 
 from __future__ import annotations
@@ -41,13 +40,12 @@ from __future__ import annotations
 import os
 import uuid
 from collections.abc import Callable
-from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from .buckets import delete, hadoop_fs, listing
+from .buckets import WriteOnce, delete, hadoop_fs, listing
 
 _PART = "batch="
 _STAGING = "_staging_"
@@ -58,9 +56,25 @@ def start_foreach_batch(
 ) -> StreamingQuery:
     """Run ``fn(batch_df, batch_id)`` over every micro-batch of ``df``,
     with offsets checkpointed at ``checkpoint_dir``. The default trigger
-    drains what is available and stops."""
+    drains what is available and stops.
+
+    ``batch_df`` is persisted while ``fn`` runs. A sink runs several actions
+    on it (the touched-bucket collect, then the merge write), and each action
+    would otherwise re-run the source scan and any stateful operator above it
+    (the CDC pipeline's watermark dedup). D-Streams treats a micro-batch as
+    one deterministic dataset, computed once and shared by the operators that
+    read it; the Spark foreachBatch guide persists the batch for the same
+    reason."""
+
+    def once(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            fn(batch_df, batch_id)
+        finally:
+            batch_df.unpersist(blocking=False)
+
     return (
-        df.writeStream.foreachBatch(fn)
+        df.writeStream.foreachBatch(once)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
         .trigger(**(trigger_kwargs or {"availableNow": True}))
@@ -74,61 +88,6 @@ class ForeachBatchSink:
 
     def attach(self, stream: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
         return start_foreach_batch(stream, self.process_batch, checkpoint_dir, **trigger_kwargs)
-
-
-@dataclass
-class WriteOnce:
-    """Small text files committed once each as ``<directory>/<prefix>K<suffix>``:
-    a temp file renamed onto the versioned name, so the first writer of
-    version K wins and a reader, taking the highest version, never sees a
-    partly written file."""
-
-    spark: SparkSession
-    directory: str
-    prefix: str
-    suffix: str = ""
-
-    def path(self, version: int) -> str:
-        return os.path.join(self.directory, f"{self.prefix}{version}{self.suffix}")
-
-    def versions(self) -> list[int]:
-        stop = len(self.suffix)
-        bodies = [
-            name[len(self.prefix): len(name) - stop]
-            for name in listing(self.spark, self.directory)
-            if name.startswith(self.prefix) and name.endswith(self.suffix)
-        ]
-        return sorted(int(b) for b in bodies if b.isdigit())
-
-    def read(self, version: int) -> str:
-        fs, path = hadoop_fs(self.spark, self.path(version))
-        stream = fs.open(path)
-        try:
-            data = self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        finally:
-            stream.close()
-        return bytes(data).decode()
-
-    def commit(self, version: int, text: str) -> bool:
-        """Write ``text`` as version ``version``; False if it already exists."""
-        fs, path = hadoop_fs(self.spark, self.path(version))
-        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
-            path.getParent(), f"_tmp_{uuid.uuid4().hex}_{path.getName()}"
-        )
-        out = fs.create(tmp, False)
-        try:
-            out.write(bytearray(text.encode()))
-        finally:
-            out.close()
-        if fs.rename(tmp, path):
-            return True
-        fs.delete(tmp, False)
-        return False
-
-    def drop_below(self, version: int) -> None:
-        for v in self.versions():
-            if v < version:
-                delete(self.spark, self.path(v))
 
 
 def _batch_of(name: str) -> int | None:

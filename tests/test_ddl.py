@@ -288,6 +288,21 @@ def test_sample_by_recorded():
     ).sample_by is None
 
 
+def test_table_comment_ends_the_clause_before_it():
+    """A table ``COMMENT '…'`` ends the clause before it, and clause
+    keywords inside the comment's string literal start no clause."""
+    head = "CREATE TABLE t (a Int32, x Int32) ENGINE = MergeTree ORDER BY a"
+    plan = translate_ddl(f"{head} COMMENT 'TTL x'")
+    assert plan.order_by == ["a"] and plan.ttl is None
+    plan = translate_ddl(f"{head} COMMENT 'see PARTITION BY x'")
+    assert plan.partition_col is None and [c for c, _ in plan.columns] == ["a", "x"]
+    plan = translate_ddl(
+        "CREATE TABLE t (a Int32, d Date) ENGINE = MergeTree PARTITION BY d "
+        "ORDER BY a COMMENT 'daily' SETTINGS index_granularity = 8192"
+    )
+    assert plan.partition_col == "d" and plan.order_by == ["a"]
+
+
 # ---------------------------------------------------------------------------
 # Maintenance commands (round 6)
 # ---------------------------------------------------------------------------

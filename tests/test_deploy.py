@@ -46,6 +46,15 @@ def test_split_statements_respects_quotes_and_comments():
     assert "x;y" in stmts[0] and stmts[1].startswith("CREATE TABLE b")
 
 
+def test_split_statements_skips_block_comments_and_quoted_identifiers():
+    assert split_statements(
+        "CREATE TABLE t (a String) ENGINE = MergeTree /* a; b */ ORDER BY a; SELECT 1"
+    ) == ["CREATE TABLE t (a String) ENGINE = MergeTree   ORDER BY a", "SELECT 1"]
+    assert split_statements('SELECT "a;b" FROM t; SELECT `c;d` FROM u') == [
+        'SELECT "a;b" FROM t', "SELECT `c;d` FROM u"
+    ]
+
+
 def test_deployment_binds_mv_to_kafka_queue():
     dep = plan_deployment(SCRIPT)
     assert set(dep.tables) == {"users_queue", "users_current"}

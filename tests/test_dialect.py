@@ -2394,6 +2394,21 @@ def test_where_resolves_select_aliases_like_clickhouse(spark):
     assert [r["value"] for r in rows] == [2.0]
 
 
+def test_where_aliases_stay_in_their_set_operation_branch():
+    """A SELECT's aliases resolve in its own filters only: the WHERE of a
+    later UNION / INTERSECT / EXCEPT branch reads that branch's columns."""
+    assert translate(
+        "SELECT a + 1 AS x FROM t UNION ALL SELECT y FROM u WHERE x > 0"
+    ) == "SELECT a + 1 AS x FROM t UNION ALL SELECT y FROM u WHERE x > 0"
+    for op in ("UNION ALL", "INTERSECT", "EXCEPT"):
+        assert translate(
+            f"SELECT a + 1 AS x FROM t WHERE x > 0 {op} SELECT x FROM u WHERE x > 0"
+        ) == (
+            f"SELECT a + 1 AS x FROM t WHERE (a + 1) > 0 {op} "
+            "SELECT x FROM u WHERE x > 0"
+        )
+
+
 def test_semantic_settings_raise_loud():
     """SETTINGS are stripped EXCEPT the two that change query semantics
     against the shim's pinned conventions."""

@@ -14,6 +14,9 @@ Crash points:
 - ``base_write``: the new compacted base is on disk, the manifest never
   commits;
 - ``before_gc``: the manifest commits, garbage collection never runs.
+
+The upsert sink keeps no parts; its one crash point of its own is between
+the state's schema record commit and the bucket write that follows it.
 """
 
 from __future__ import annotations
@@ -23,9 +26,11 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from python_cdc_postgres_to_clickhouse_spark.ddl import translate_ddl
 from python_cdc_postgres_to_clickhouse_spark.operators.pq import ivfpq_fit
+from python_cdc_postgres_to_clickhouse_spark.operators.upsert import replay_oracle
 from python_cdc_postgres_to_clickhouse_spark.sources.cdc import (
     ChangeLogFixture,
     changelog_df,
@@ -33,6 +38,7 @@ from python_cdc_postgres_to_clickhouse_spark.sources.cdc import (
     unwrap,
 )
 from python_cdc_postgres_to_clickhouse_spark.streaming.ann_index_sink import IvfPqIndexSink
+from python_cdc_postgres_to_clickhouse_spark.streaming.buckets import WriteOnce
 from python_cdc_postgres_to_clickhouse_spark.streaming.parts import PartStore
 from python_cdc_postgres_to_clickhouse_spark.streaming.parts_rollup import PartedRollupSink
 from python_cdc_postgres_to_clickhouse_spark.streaming.projection_sink import (
@@ -41,6 +47,7 @@ from python_cdc_postgres_to_clickhouse_spark.streaming.projection_sink import (
 from python_cdc_postgres_to_clickhouse_spark.streaming.retract_rollup import (
     RetractRollupSink,
 )
+from python_cdc_postgres_to_clickhouse_spark.streaming.upsert_sink import ParquetUpsertSink
 
 SINKS = ("rollup", "ann", "retract", "projection")
 CRASH_POINTS = ("staged", "published", "base_write", "before_gc")
@@ -129,16 +136,21 @@ def _ann_case(spark):
     return make, batches, served
 
 
-def _retract_case(spark):
+def _changelog_batches(spark):
+    """A tiny change log and its flat rows in three batches."""
     events = generate_changelog(n_keys=6, n_ops=36, seed=5).events
     step = (len(events) + 2) // 3
-    batches = [
+    return events, [
         unwrap(
             changelog_df(spark, ChangeLogFixture(events=events[i : i + step])),
             keep_deletes=True,
         )
         for i in range(0, len(events), step)
     ]
+
+
+def _retract_case(spark):
+    _, batches = _changelog_batches(spark)
 
     def make(root):
         return RetractRollupSink(
@@ -274,6 +286,41 @@ def _crash_then_recover(spark, tmp_path, monkeypatch, clean_served, kind, point,
     left = {f"MANIFEST.{version}", "parts", f"base_v{version}", f".MANIFEST.{version}.crc"}
     assert set(os.listdir(root)) - {"models"} == left
     assert os.listdir(root / "parts") == []
+
+
+@pytest.mark.parametrize("evolve, uri", [(False, True), (True, False)])
+def test_upsert_crash_between_schema_commit_and_data_write(
+    spark, tmp_path, monkeypatch, evolve, uri
+):
+    """The schema record commits, the bucket write never happens, and the
+    replayed stream reaches the replay oracle's state. Without ``evolve``
+    the crash hits batch 0, whose write creates the record; with it,
+    batch 1 adds a column, whose record is then ahead of every file."""
+    events, batches = _changelog_batches(spark)
+    crash_at = 0
+    if evolve:
+        crash_at = 1
+        batches = batches[:1] + [
+            b.withColumn("note", F.lit(f"b{i}")) for i, b in enumerate(batches[1:], 1)
+        ]
+    root = tmp_path.as_uri() if uri else str(tmp_path)
+    sink = ParquetUpsertSink(spark, os.path.join(root, "state"), n_buckets=2)
+    for i in range(crash_at):
+        sink.process_batch(batches[i], i)
+    with monkeypatch.context() as m:
+        m.setattr(WriteOnce, "commit", _then_crash(WriteOnce.commit))
+        with pytest.raises(Crash):
+            sink.process_batch(batches[crash_at], crash_at)
+    if evolve:
+        # A column the record has and no file holds reads as null.
+        assert {r["note"] for r in sink.current_state().collect()} == {None}
+    else:
+        assert sink.current_state() is None
+    # Restart: the stream re-delivers the uncommitted batch.
+    for i in range(crash_at, len(batches)):
+        sink.process_batch(batches[i], i)
+    got = {r["id"]: (r["username"], r["email"]) for r in sink.current_state().collect()}
+    assert got == {k: (v["username"], v["email"]) for k, v in replay_oracle(events).items()}
 
 
 def test_gc_sweeps_staging_of_folded_batches_only(spark, tmp_path):

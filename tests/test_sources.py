@@ -147,7 +147,7 @@ def test_registry_driven_decode_end_to_end(spark, registry_url):
         assert "email" in out2.columns
         assert out2.first()["email"] == "c@x"
         # Old-state null-extension: the v1 output unioned into the evolved
-        # shape (what the upsert sink's mergeSchema does to old files).
+        # shape (what the upsert sink's recorded schema does to old files).
         merged = out1.withColumn("email", F.lit(None).cast("string")).unionByName(out2)
         rows = {r["id"]: r["email"] for r in merged.collect()}
         assert rows == {1: None, 2: None, 3: "c@x"}

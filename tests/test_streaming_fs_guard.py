@@ -7,6 +7,11 @@ directory. This scans ``streaming/*.py`` for ``shutil`` imports, ``os``
 filesystem calls and the builtin ``open``. ``filestream.py`` is exempt: it
 is the broker-less stand-in that writes source files to a local directory.
 ``os.path.join`` is plain string work and stays allowed.
+
+It also keeps the Parquet ``mergeSchema`` option out of ``streaming/``: that
+option launches a Spark job over every file footer before each read. The
+bucketed state records its own schema, and only ``BucketedState.read``'s
+fallback for a state dir without a record may still infer it.
 """
 
 from __future__ import annotations
@@ -77,3 +82,52 @@ def test_guard_flags_each_forbidden_form():
         "os.path.isdir() at line 4",
         "open() at line 5",
     ]
+
+
+def _merge_schema_uses(source: str) -> list[str]:
+    """The enclosing ``Class.function`` of each ``mergeSchema`` option: a
+    string literal naming it (option key, conf key, dict key) or a
+    keyword argument."""
+    found = []
+
+    def named(node: ast.AST) -> bool:
+        if isinstance(node, ast.keyword):
+            return (node.arg or "").lower() == "mergeschema"
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            v = node.value.lower()
+            return v == "mergeschema" or v.endswith(".mergeschema")
+        return False
+
+    def visit(node: ast.AST, scope: list[str]) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = [*scope, child.name]
+            elif named(child):
+                found.append(".".join(scope) or "<module>")
+            visit(child, inner)
+
+    visit(ast.parse(source), [])
+    return found
+
+
+def test_merge_schema_only_in_the_no_record_fallback():
+    uses = {
+        p.name: u for p in sorted(STREAMING.glob("*.py"))
+        if (u := _merge_schema_uses(p.read_text()))
+    }
+    assert uses == {"buckets.py": ["BucketedState.read"]}
+
+
+def test_merge_schema_guard_flags_each_form():
+    src = (
+        '"""Prose about ``mergeSchema`` is fine."""\n'
+        "def f(spark, p):\n"
+        "    spark.read.option('mergeSchema', 'true').parquet(p)\n"
+        "class C:\n"
+        "    def g(self, p):\n"
+        "        self.spark.read.parquet(p, mergeSchema=True)\n"
+        "        self.spark.conf.set('spark.sql.parquet.mergeSchema', 'true')\n"
+        "        self.spark.read.options(**{'MERGESCHEMA': 'true'}).parquet(p)\n"
+    )
+    assert _merge_schema_uses(src) == ["f", "C.g", "C.g", "C.g"]
