@@ -120,7 +120,8 @@ def map_type(ch_type: str) -> str:
         raise DialectError(
             f"{name}: -State storage columns have no Spark column type — "
             "partial aggregation IS the mergeable state here "
-            "(queries/sketches.py, streaming/sketch_sink.py)"
+            "(queries/sketches.py; streamed, a streaming/projection_sink.py "
+            "ProjectionSink spec such as streaming/sketch_sink.py)"
         )
     raise DialectError(f"unmapped ClickHouse type {ch_type!r}")
 
@@ -159,12 +160,15 @@ _ENGINE_STRATEGY = {
                           "current_state() is the FINAL read; the version "
                           "argument maps to the sink's ordering column",
     "SummingMergeTree": "streaming/retract_rollup.py RetractRollupSink "
-                        "(incremental GROUP BY maintenance) or "
-                        "streaming/parts_rollup.py PartedRollupSink for "
-                        "append-only streams",
-    "AggregatingMergeTree": "streaming/parts_rollup.py PartedRollupSink / "
-                            "streaming/sketch_sink.py — partial aggregation "
-                            "is the -State/-Merge equivalent",
+                        "(incremental GROUP BY maintenance) or, for "
+                        "append-only streams, a streaming/projection_sink.py "
+                        "ProjectionSink spec with sum/count states "
+                        "(streaming/parts_rollup.py PartedRollupSink)",
+    "AggregatingMergeTree": "streaming/projection_sink.py ProjectionSink — "
+                            "each batch publishes one part of -State "
+                            "columns, re-merged at read and compaction; "
+                            "streaming/parts_rollup.py (count/sum) and "
+                            "streaming/sketch_sink.py (uniq) are its specs",
     "CollapsingMergeTree": "cdc_collapsing_state query shape: SUM(sign)-"
                            "weighted aggregates, net <= 0 groups dropped",
     "VersionedCollapsingMergeTree": "cdc_versioned_collapse query shape: "
@@ -654,8 +658,9 @@ def translate_mv(sql: str, ddl: Ddl | None = None) -> MvPlan:
         strategy = (
             "streaming GROUP BY maintenance: foreachBatch into "
             "streaming/retract_rollup.py RetractRollupSink (changelog "
-            "sources) or streaming/parts_rollup.py PartedRollupSink "
-            "(append-only); sketch columns -> streaming/sketch_sink.py"
+            "sources) or a streaming/projection_sink.py ProjectionSink "
+            "spec (append-only; e.g. streaming/parts_rollup.py, "
+            "streaming/sketch_sink.py for uniq columns)"
         )
     elif base_engine == "ReplacingMergeTree":
         strategy = (

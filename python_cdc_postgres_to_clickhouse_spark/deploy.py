@@ -40,6 +40,7 @@ from .ddl import (
     translate_mv,
 )
 from .dialect import Ddl, DialectError, _clause_end, _tokenize
+from .streaming.parts import start_foreach_batch
 
 
 def split_statements(script: str) -> list[str]:
@@ -366,10 +367,5 @@ def start_binding(
                 "append"
             ).parquet(out_dir)
 
-    writer = (
-        decoded_stream.writeStream.foreachBatch(_proc)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    trigger = {} if available_now else {"processingTime": "0 seconds"}
+    return start_foreach_batch(decoded_stream, _proc, checkpoint_dir, **trigger)

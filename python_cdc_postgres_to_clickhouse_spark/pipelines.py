@@ -16,6 +16,7 @@ from .sources.avro import decode_users
 from .sources.cdc import unwrap, with_event_time
 from .sources.kafka import stream_options, stream_reader
 from .streaming.dedup import dedup_changes
+from .streaming.parts import start_foreach_batch
 from .streaming.upsert_sink import ParquetUpsertSink
 
 
@@ -163,13 +164,10 @@ def clickhouse_jdbc_sink(
     semantics, at-least-once at the insert level). ``available_now=True``
     drains what exists and stops — backfill/catch-up mode."""
     opts = options or clickhouse_jdbc_options()
-    writer = (
-        changes.writeStream.foreachBatch(clickhouse_append_batch(opts))
-        .option("checkpointLocation", checkpoint_dir)
+    trigger = {} if available_now else {"processingTime": "0 seconds"}
+    return start_foreach_batch(
+        changes, clickhouse_append_batch(opts), checkpoint_dir, **trigger
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def console_debug_sink(df: DataFrame, n_rows: int = 20) -> StreamingQuery:

@@ -390,15 +390,6 @@ USERS_AVRO_SCHEMA_JSON = _json.dumps(
     }
 )
 
-USERS_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.IntegerType()),
-        T.StructField("username", T.StringType()),
-        T.StructField("email", T.StringType()),
-        T.StructField("created_at_us", T.LongType()),
-    ]
-)
-
 
 def jvm_avro_available(spark=None) -> bool:
     """True when the spark-avro module is loaded in the active session.

@@ -158,7 +158,15 @@ class StreamingNearDupFilter(ForeachBatchSink):
             new, self.n_hashes, self.shingle, "doc", self.text_col
         ).persist()  # feeds bands, the state join, and the self join
         bands = D.minhash_bands(sig, self.n_hashes, self.n_bands).persist()
+        try:
+            self._admit(sig, bands)
+        finally:
+            sig.unpersist()
+            bands.unpersist()
 
+    def _admit(self, sig: DataFrame, bands: DataFrame) -> None:
+        """Suppress the batch's near-duplicates of the accepted state and of
+        each other, then append the accepted rest and the audit log."""
         # 1) against accepted state: suppressed by any similar-enough doc.
         state_bands, state_sigs = self._read("bands"), self._read("sigs")
         from_state: DataFrame | None = None
@@ -262,5 +270,3 @@ class StreamingNearDupFilter(ForeachBatchSink):
                 ),
                 "log",
             )
-        sig.unpersist()
-        bands.unpersist()

@@ -1,16 +1,19 @@
-"""Streaming PROJECTION maintenance: keep a MergeTree-projection state
-table current under a micro-batched stream.
+"""Streaming aggregate state: keep a table of re-mergeable aggregate states
+current under a micro-batched stream, one part per batch.
 
-ClickHouse maintains table PROJECTIONs at insert/merge time; ``ddl.
-translate_ddl`` parses ``PROJECTION`` entries into ``ProjectionSpec``s and
-``operators/projection.py`` gives them batch build/answer/route semantics —
-this sink is the third leg: DDL → operator → continuous maintenance. Each
-micro-batch contributes one partial-aggregated chunk of states, stored as
-one part of a ``parts.PartStore``; ``projection()`` reads base ⊎ live
-parts and ``Projection.answer`` re-merges the states per group (count→sum,
-sum→sum, min/max→themselves, uniq→HLL register-max union) — the same ⊕ the
-MergeTree background merge applies to projection parts, which
-``compact()`` runs to fold parts into a new base.
+ClickHouse stores every kind of aggregate state one way: an insert writes
+a part of ``-State`` columns, and reads and background merges re-merge the
+parts. This sink is that mechanism, once, for every aggregate-state sink of
+the engine: ``ddl.translate_ddl``'s ``PROJECTION`` entries (``from_spec``),
+the hourly rollup (``parts_rollup.PartedRollupSink``: count and sum) and
+the distinct-user sketches (``sketch_sink.DistinctSketchSink``: HLL
+``uniq``) are each a key/measure spec of it. Each micro-batch contributes
+one partial-aggregated chunk of states (``operators/projection.py``
+``build_projection``), stored as one part of a ``parts.PartStore``;
+``projection()`` reads base ⊎ live parts and ``Projection.answer``
+re-merges the states per group (count→sum, sum→sum, min/max→themselves,
+uniq→HLL register-max union) — the same ⊕ the MergeTree background merge
+applies, which ``compact()`` runs to fold parts into a new base.
 
 Exactly-once: sum/count states are ADDITIVE, so a replayed batch must not
 add its chunk twice. Batch N publishes its chunk once as part N; a replay
@@ -23,9 +26,9 @@ is |distinct keys| rows. With ``partition_key`` set (one of the projection
 keys) parts and bases are written ``partitionBy(partition_key)``, so a
 key-filtered serve prunes every part to that key's directory.
 
-Decimal note: Spark widens decimal sums per aggregation level — pin sum
-measures to a fixed decimal type (or use integer cents) or re-merged
-states drift in parquet schema across batches (the parts_rollup lesson).
+Decimal note: Spark widens decimal sums per aggregation level up to
+precision 38 — feed sum measures a ``decimal(38, s)`` (or integer cents) so
+parts and bases keep one parquet schema at every merge level.
 """
 
 from __future__ import annotations
@@ -70,11 +73,11 @@ class ProjectionSink(ForeachBatchSink):
             out = out.partitionBy(self.partition_key)
         return out.parquet
 
-    def _states(self, part_ids: list[int] | None = None) -> Projection:
+    def _states(self, part_ids: list[int] | None = None) -> Projection | None:
+        """The stored states of base ⊎ ``part_ids`` (default: the live
+        parts); None while the store is empty."""
         df = self.store.read(part_ids)
-        if df is None:
-            raise ValueError(f"{self.state_dir}: no projection state yet")
-        return Projection(df, tuple(self.keys), dict(self.kinds))
+        return None if df is None else Projection(df, tuple(self.keys), dict(self.kinds))
 
     # -- the merge -----------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -95,7 +98,10 @@ class ProjectionSink(ForeachBatchSink):
     def projection(self) -> Projection:
         """The stored states, base ⊎ live parts: a key may have one row per
         part, which ``answer`` re-merges."""
-        return self._states()
+        states = self._states()
+        if states is None:
+            raise ValueError(f"{self.state_dir}: no projection state yet")
+        return states
 
     def serve(self, group_keys: list[str], asked: dict[str, tuple]) -> DataFrame:
         """Answer a covered GROUP BY from the maintained state — the routed

@@ -47,9 +47,10 @@ from python_cdc_postgres_to_clickhouse_spark.streaming.projection_sink import (
 from python_cdc_postgres_to_clickhouse_spark.streaming.retract_rollup import (
     RetractRollupSink,
 )
+from python_cdc_postgres_to_clickhouse_spark.streaming.sketch_sink import DistinctSketchSink
 from python_cdc_postgres_to_clickhouse_spark.streaming.upsert_sink import ParquetUpsertSink
 
-SINKS = ("rollup", "ann", "retract", "projection")
+SINKS = ("rollup", "ann", "retract", "projection", "sketch")
 CRASH_POINTS = ("staged", "published", "base_write", "before_gc")
 
 
@@ -209,11 +210,31 @@ def _projection_case(spark):
     return make, batches, served
 
 
+def _sketch_case(spark):
+    t0 = dt.datetime(2024, 1, 1)
+    batches = [
+        spark.createDataFrame(
+            [
+                (i % 3 + b, f"t{i % 2}", t0 + dt.timedelta(minutes=11 * (b * 5 + i)))
+                for i in range(5)
+            ],
+            "user_id bigint, event_type string, ts timestamp",
+        )
+        for b in range(3)
+    ]
+
+    def served(sink):
+        return {tuple(r) for r in sink.serve().collect()}
+
+    return (lambda root: DistinctSketchSink(spark, root)), batches, served
+
+
 _CASES = {
     "rollup": _rollup_case,
     "ann": _ann_case,
     "retract": _retract_case,
     "projection": _projection_case,
+    "sketch": _sketch_case,
 }
 
 

@@ -109,7 +109,7 @@ def test_crash_during_compaction_base_write_recovers(spark, tmp_path):
     exp = _expected(events)
     # Crash simulation: build the would-be base_v0 without the manifest.
     ids = sink.store.part_ids()
-    merged = sink._merged(sink.store.read(ids))
+    merged = sink._states(ids).remerged().df
     merged.coalesce(1).write.mode("overwrite").parquet(sink.store.base_dir(0))
     # No manifest → serve ignores the orphan base and reads the parts.
     assert sink.store.manifest() == (-1, -1)
@@ -134,7 +134,7 @@ def test_crash_after_manifest_before_gc_recovers(spark, tmp_path):
     # New batch, then a compaction whose GC "crashed": do the fold+commit
     # by hand, leaving the folded part and base_v0 behind.
     sink.process_batch(chunks[0], 3)
-    merged = sink._merged(sink.store.read([3]))
+    merged = sink._states([3]).remerged().df
     merged.coalesce(1).write.mode("overwrite").parquet(sink.store.base_dir(1))
     sink.store.commit_manifest(1, 3)
     exp2 = _served(sink)  # garbage part 3 + base_v0 must be ignored

@@ -3,9 +3,12 @@ idempotence WITHOUT markers, rollup-from-sketches, and accuracy."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from python_cdc_postgres_to_clickhouse_spark.streaming.sketch_sink import (
+    HLL_LGK,
     DistinctSketchSink,
 )
 from python_cdc_postgres_to_clickhouse_spark.tables import load_tables
@@ -42,7 +45,7 @@ def test_stream_sketches_equal_monolithic_build(spark, tmp_path):
         .groupBy("bucket", "event_type")
         .agg(
             F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(sink.lgk))
+                F.hll_sketch_agg("user_id", F.lit(HLL_LGK))
             ).alias("e")
         )
         .collect()
@@ -85,7 +88,7 @@ def test_rollup_from_sketches_matches_direct_and_bounds(spark, tmp_path):
         .groupBy("bucket", "event_type")
         .agg(
             F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(sink.lgk))
+                F.hll_sketch_agg("user_id", F.lit(HLL_LGK))
             ).alias("e")
         )
         .collect()
@@ -104,44 +107,23 @@ def test_rollup_from_sketches_matches_direct_and_bounds(spark, tmp_path):
         assert abs(daily[k] - n) / max(n, 1) < 0.1, (k, daily[k], n)
 
 
-def test_state_stays_one_file_per_day(spark, tmp_path):
-    """Each day partition must hold exactly one parquet file after any
-    number of merges — per-day state is KB-sized and the dynamic overwrite
-    would otherwise emit shuffle-partition-count near-empty files per
+def test_parts_and_bases_are_single_parquet_files(spark, tmp_path):
+    """Each published part and each compacted base holds exactly one
+    parquet file: the state is a few KB of sketches per batch, and a
+    shuffle-partitioned write would leave that many near-empty files per
     batch."""
-    import glob
-    import os
-
     events = _events(spark)
     sink = DistinctSketchSink(spark, str(tmp_path / "state"))
     sink.process_batch(events.filter(F.col("user_id") % 2 == 0), batch_id=0)
     sink.process_batch(events.filter(F.col("user_id") % 2 == 1), batch_id=1)
-    for day_dir in glob.glob(os.path.join(str(tmp_path / "state"), "day=*")):
-        files = [f for f in os.listdir(day_dir) if f.endswith(".parquet")]
-        assert len(files) == 1, (day_dir, files)
 
+    def files(d):
+        return [f for f in os.listdir(d) if f.endswith(".parquet")]
 
-def test_merge_read_prunes_to_touched_day_partitions(spark, tmp_path):
-    """The merge-time state read (read.parquet + day.isin(batch days)) must
-    touch ONLY the day= partitions the incoming batch spans — partition
-    pruning on the state dir, asserted on the files actually read, so a
-    one-day micro-batch never rescans months of state."""
-    events = _events(spark)
-    sink = DistinctSketchSink(spark, str(tmp_path / "state"))
-    sink.process_batch(events, batch_id=0)
-
-    state = spark.read.parquet(sink.state_dir)
-    all_days = sorted(r["day"] for r in state.select("day").distinct().collect())
-    assert len(all_days) >= 2, "fixture must span multiple days"
-    target = all_days[0]
-    # Mirror process_batch's merge read exactly.
-    pruned = state.filter(F.col("day").isin([target]))
-    read_files = {
-        r[0] for r in pruned.select(F.input_file_name()).distinct().collect()
-    }
-    assert read_files, "pruned read returned no files"
-    for f in read_files:
-        assert f"day={target.isoformat()}" in f, (f, target)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    after = plan.split("PartitionFilters")[1][:200] if "PartitionFilters" in plan else ""
-    assert "day" in after, f"day predicate not in PartitionFilters:\n{plan}"
+    assert sink.store.part_ids() == [0, 1]
+    for i in (0, 1):
+        assert len(files(sink.store.part_dir(i))) == 1
+    sink.compact(through_batch_id=0)
+    assert len(files(sink.store.base_dir(0))) == 1
+    sink.compact()
+    assert len(files(sink.store.base_dir(1))) == 1

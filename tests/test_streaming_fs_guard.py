@@ -12,6 +12,11 @@ It also keeps the Parquet ``mergeSchema`` option out of ``streaming/``: that
 option launches a Spark job over every file footer before each read. The
 bucketed state records its own schema, and only ``BucketedState.read``'s
 fallback for a state dir without a record may still infer it.
+
+Every foreachBatch stream of the package starts through
+``parts.start_foreach_batch``, which persists each micro-batch while the
+sink runs; a ``writeStream.foreachBatch`` built anywhere else would re-run
+the source scan once per action on the batch.
 """
 
 from __future__ import annotations
@@ -21,9 +26,8 @@ from pathlib import Path
 
 import pytest
 
-STREAMING = Path(__file__).resolve().parent.parent / (
-    "python_cdc_postgres_to_clickhouse_spark/streaming"
-)
+PACKAGE = Path(__file__).resolve().parent.parent / "python_cdc_postgres_to_clickhouse_spark"
+STREAMING = PACKAGE / "streaming"
 EXEMPT = {"filestream.py"}
 OS_CALLS = {
     "rename", "replace", "renames", "makedirs", "mkdir", "listdir", "scandir",
@@ -131,3 +135,31 @@ def test_merge_schema_guard_flags_each_form():
         "        self.spark.read.options(**{'MERGESCHEMA': 'true'}).parquet(p)\n"
     )
     assert _merge_schema_uses(src) == ["f", "C.g", "C.g", "C.g"]
+
+
+def _foreach_batch_lines(source: str) -> list[int]:
+    """The line of each ``.foreachBatch`` attribute: a stream started by
+    hand."""
+    return sorted(
+        node.lineno for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Attribute) and node.attr == "foreachBatch"
+    )
+
+
+def test_every_foreach_batch_stream_starts_in_parts():
+    uses = {
+        p.relative_to(PACKAGE).as_posix(): lines
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (lines := _foreach_batch_lines(p.read_text()))
+    }
+    assert list(uses) == ["streaming/parts.py"] and len(uses["streaming/parts.py"]) == 1, uses
+
+
+def test_foreach_batch_guard_flags_each_form():
+    src = (
+        '"""Prose about ``writeStream.foreachBatch`` is fine."""\n'
+        "q = df.writeStream.foreachBatch(f).start()\n"
+        "w = df.writeStream\n"
+        "w.foreachBatch(f)\n"
+    )
+    assert _foreach_batch_lines(src) == [2, 4]

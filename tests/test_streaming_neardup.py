@@ -154,3 +154,19 @@ def test_streaming_attach_runs_end_to_end(spark, docs, tmp_path):
     # Chunks ascend in doc_id, so first-wins == global greedy by id: the
     # streamed accepted set must EQUAL the one-shot run's exactly.
     assert _ids(f.accepted_ids()) == _ids(direct.accepted_ids())
+
+
+def test_failed_batch_releases_its_cached_signatures(spark, docs, tmp_path, monkeypatch):
+    """A batch persists its signatures and bands while it runs; a batch that
+    fails part way (here the first state append) must not leave them cached
+    for the rest of the session."""
+
+    def failing_append(self, df, sub):
+        raise OSError(f"cannot append {sub}")
+
+    monkeypatch.setattr(StreamingNearDupFilter, "_append", failing_append)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    f = StreamingNearDupFilter(spark, str(tmp_path / "state"), threshold=THRESHOLD)
+    with pytest.raises(OSError, match="cannot append bands"):
+        f.process_batch(docs.limit(40), 0)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before == set()
